@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SparkInternals
 object Bench {
   /** One query's selected measurement: wall/cpu/run/gc in seconds,
     * spill/peak/block columns in bytes (see CpuTally for the
@@ -148,7 +149,7 @@ object Bench {
     * Block-store churn (also r14 ask #1a): onBlockUpdated tracks the
     * storage-block traffic the spill columns cannot see — spill
     * metrics count EXECUTION-memory spills (sorts, aggs), while the
-    * checkpoint-block failure mode (Checkpoints.scala:50) churns
+    * checkpoint-block failure mode (Checkpoints' round cuts) churns
     * STORAGE blocks through eviction/re-serialization and reads as
     * zero spill. blkMemW/blkDiskW sum the bytes (re)stored to the
     * memory/disk stores; blkDrop counts block REMOVALS (updates
@@ -238,25 +239,6 @@ object Bench {
       stageRecs.synchronized(stageRecs.drop(mark).toVector)
   }
 
-  /** Drain the async listener bus so the tally includes every task of
-    * the action that just returned. `listenerBus` is private[spark]
-    * (public in bytecode), so reflection; a bus that cannot be
-    * drained degrades to a bounded settle wait — the counters then
-    * under-count by at most the stragglers still in flight, never
-    * block the bench. */
-  private def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .map { m => m.invoke(bus); () }
-        .getOrElse {
-          val timed = bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          timed.foreach(_.invoke(bus, java.lang.Long.valueOf(10000L)))
-        }
-    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(300) }
-
   /** Shot policy parsed from SPARK_GRAFT_BENCH_REPS. Three forms:
     *
     *  - unset: auto3 (below) — the DEFAULT since r18. Four
@@ -298,6 +280,14 @@ object Bench {
       else if (perQuery.nonEmpty) perQuery.getOrElse(name, perQueryDefault)
       else global
     def extraIfSlow: Int = if (auto) autoShots - 1 else 0
+    /** The resolved policy as the artifact's `reps` field: `auto3`,
+      * `2`, or `q1=3,default=1`. */
+    def label: String =
+      if (auto) s"auto$autoShots"
+      else if (perQuery.nonEmpty)
+        (perQuery.toSeq.sorted.map { case (q, n) => s"$q=$n" } :+
+          s"default=$perQueryDefault").mkString(",")
+      else global.toString
   }
   private val autoThresholdSec = 5.0
   private def parseShotPolicy(raw: Option[String]): ShotPolicy = raw match {
@@ -334,9 +324,9 @@ object Bench {
     // SPARK_GRAFT_CPUS overrides for smaller local iteration.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_CONF="k=v;k2=v2": extra session confs for A/B runs
-    // (cut storage levels, codegen modes, AQE toggles) without a code
-    // change — the same-binary-different-conf discipline the pressure
-    // and plan-floor experiments need. Applied before getOrCreate so
+    // (codegen modes, AQE toggles, spark.graft.checkpointDir) without a
+    // code change — the same-binary-different-conf discipline the
+    // plan-floor experiments need. Applied before getOrCreate so
     // static confs work too; never set by the driver.
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
@@ -566,7 +556,7 @@ object Bench {
         // Settle the listener bus BEFORE snapshotting, so straggler
         // task events from the previous query can't leak into this
         // query's cpu delta.
-        drainListenerBus(spark.sparkContext)
+        SparkInternals.drainListenerBus(spark.sparkContext)
         // Clear stale sub-region timings (a failed previous shot may
         // have recorded a partial fit) so this shot's drain below is
         // exactly what IT executed.
@@ -627,7 +617,7 @@ object Bench {
           val canaryChasePost = Canary.runChase()
           val canaryDiskPost = Canary.runDisk()
           val fit = Timed.drain().getOrElse("fit", 0.0)
-          drainListenerBus(spark.sparkContext)
+          SparkInternals.drainListenerBus(spark.sparkContext)
           // Per-stage attribution, kept only for shots past the
           // auto threshold — short shots' stage lists are noise the
           // artifact does not need. The latency-gap scalar below is
@@ -876,7 +866,7 @@ object Bench {
       if (ok.nonEmpty) ok.min else -1.0
     }
     val stallTotal = results.map(_.stall).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuQs,"run":$runQs,"gc":$gcQs,"spill_mem":$memSpillQs,"spill_disk":$diskSpillQs,"peakmem":$peakMemQs,"blk_mem_w":$blkMemWQs,"blk_disk_w":$blkDiskWQs,"blk_drop":$blkDropQs,"fit_s":$fitQs,"stall_s":$stallQs,"canary":$canaryQs,"canary_post":$canaryPostQs,"canary_base":$canaryBase,"canary_min":$canaryMin,"canary_par":$canaryParQs,"canary_par_post":$canaryParPostQs,"canary_par_base":$canaryParBase,"canary_par_min":$canaryParMin,"canary_chase":$canaryChaseQs,"canary_chase_post":$canaryChasePostQs,"canary_chase_base":$canaryChaseBase,"canary_chase_min":$canaryChaseMin,"canary_disk":$canaryDiskQs,"canary_disk_post":$canaryDiskPostQs,"canary_disk_base":$canaryDiskBase,"canary_disk_min":$canaryDiskMin,"canary_during":$durQs,"canary_par_during":$durParQs,"canary_chase_during":$durChaseQs,"canary_disk_during":$durDiskQs,"stage_breakdown":$stagesQs,"shots":$shotsQs,"store_warm":$storeWarmQs,"cpu_total":$cpuTotal,"run_total":$runTotal,"gc_total":$gcTotal,"stall_total":$stallTotal,"spill_mem_total":$memSpillTotal,"spill_disk_total":$diskSpillTotal,"blk_disk_w_total":$blkDiskWTotal,"errors":$errs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuQs,"run":$runQs,"gc":$gcQs,"spill_mem":$memSpillQs,"spill_disk":$diskSpillQs,"peakmem":$peakMemQs,"blk_mem_w":$blkMemWQs,"blk_disk_w":$blkDiskWQs,"blk_drop":$blkDropQs,"fit_s":$fitQs,"stall_s":$stallQs,"canary":$canaryQs,"canary_post":$canaryPostQs,"canary_base":$canaryBase,"canary_min":$canaryMin,"canary_par":$canaryParQs,"canary_par_post":$canaryParPostQs,"canary_par_base":$canaryParBase,"canary_par_min":$canaryParMin,"canary_chase":$canaryChaseQs,"canary_chase_post":$canaryChasePostQs,"canary_chase_base":$canaryChaseBase,"canary_chase_min":$canaryChaseMin,"canary_disk":$canaryDiskQs,"canary_disk_post":$canaryDiskPostQs,"canary_disk_base":$canaryDiskBase,"canary_disk_min":$canaryDiskMin,"canary_during":$durQs,"canary_par_during":$durParQs,"canary_chase_during":$durChaseQs,"canary_disk_during":$durDiskQs,"stage_breakdown":$stagesQs,"shots":$shotsQs,"store_warm":$storeWarmQs,"cpu_total":$cpuTotal,"run_total":$runTotal,"gc_total":$gcTotal,"stall_total":$stallTotal,"spill_mem_total":$memSpillTotal,"spill_disk_total":$diskSpillTotal,"blk_disk_w_total":$blkDiskWTotal,"errors":$errs,"reps":"${policy.label}","sf":"$sfDir"}"""
     // Persist the full-name, full-precision line to a file FIRST: the
     // round-4 artifact lost its `total` and 12 per-query numbers to a
     // truncated stdout capture — a file write cannot be cut mid-stream
@@ -992,7 +982,7 @@ object Bench {
         durDil(r.durChase, canaryChaseBase))
       s""","advisory":"single-shot; $branded/${results.size} rows canary-branded; set SPARK_GRAFT_BENCH_REPS=auto3""""
     }
-    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qsShort,"cpu_total":${s3(cpuTotal)},"stall_total":${s3(stallTotal)},"canary_base":${s3(canaryBase)},"canary_min":${s3(canaryMin)},"canary_max":${s3(canaryMax)},"canary_par_min":${s3(canaryParMin)},"canary_par_max":${s3(canaryParMax)},"canary_chase_min":${s3(canaryChaseMin)},"canary_chase_max":${s3(canaryChaseMax)},"canary_disk_min":${s3(canaryDiskMin)},"canary_disk_max":${s3(canaryDiskMax)},"store_cold":$storeCold$advisory,"errors":$errs,"sf":"$sfDir","full":"$outFile"}""")
+    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qsShort,"cpu_total":${s3(cpuTotal)},"stall_total":${s3(stallTotal)},"canary_base":${s3(canaryBase)},"canary_min":${s3(canaryMin)},"canary_max":${s3(canaryMax)},"canary_par_min":${s3(canaryParMin)},"canary_par_max":${s3(canaryParMax)},"canary_chase_min":${s3(canaryChaseMin)},"canary_chase_max":${s3(canaryChaseMax)},"canary_disk_min":${s3(canaryDiskMin)},"canary_disk_max":${s3(canaryDiskMax)},"store_cold":$storeCold$advisory,"errors":$errs,"reps":"${policy.label}","sf":"$sfDir","full":"$outFile"}""")
     spark.stop()
     // A bench with errored queries must not ship as a healthy "rc 0"
     // run (r6 shipped 15 fast-failing queries inside a green-looking

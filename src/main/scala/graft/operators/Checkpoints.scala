@@ -1,340 +1,159 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.SparkInternals
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage cuts for iterative and multi-consumer intermediates.
   *
   * Every iterative operator in this package (closures, connected
   * components, LSH bucket sets, pair generators) materializes
   * intermediates so the Catalyst plan does not grow with iteration
-  * count and shared subplans execute once. The MECHANISM is
-  * configurable because Spark's two checkpoint flavors fail
+  * count and shared subplans execute once. One resolver picks the
+  * mechanism per cut, because Spark's two checkpoint flavors fail
   * differently:
   *
-  *  - `localCheckpoint()` (the default here) stores blocks on
-  *    executors only. Fast — no distributed-filesystem round-trip —
-  *    but the lineage is discarded, so losing ANY executor that holds
-  *    a block (dynamic allocation scale-in, spot kill, OOM) fails the
-  *    job unrecoverably: Spark cannot recompute what it no longer has
-  *    a plan for. Right for local mode and small static clusters.
-  *  - Reliable `checkpoint()` writes the blocks to the fault-tolerant
-  *    filesystem under `spark.graft.checkpointDir`. One extra
-  *    write+read per cut, but executor loss just re-reads the files —
-  *    the only safe mode for long iterative jobs on a large cluster
-  *    with dynamic allocation.
+  *  - `localCheckpoint` (the default) stores blocks on executors only.
+  *    Fast, but the lineage is discarded, so losing ANY executor that
+  *    holds a block fails the job unrecoverably. Right for local mode
+  *    and small static clusters.
+  *  - Reliable `checkpoint()` writes the blocks under
+  *    `spark.graft.checkpointDir` on the fault-tolerant filesystem. One
+  *    extra write+read per cut, but executor loss just re-reads the
+  *    files: the only safe mode for long iterative jobs on a cluster
+  *    with dynamic allocation. It is always eager: a lazy reliable
+  *    checkpoint recomputes the frame a second time into its files at
+  *    job end, which costs more than the job it saves.
   *
-  * Set `spark.graft.checkpointDir` to an HDFS/S3 path to switch every
-  * graft operator to reliable cuts (it is read per cut, so a session
-  * can flip it between jobs); leave it unset for local work.
+  * Set `spark.graft.checkpointDir` (session conf, or
+  * `-Dspark.graft.checkpointDir` on the JVM) to an HDFS/S3 path to
+  * switch every graft operator to reliable cuts; it is read per cut, so
+  * a session can flip it between jobs.
+  *
+  * `round = true` marks a per-ROUND cut of an iterative loop (closures,
+  * label propagation) and persists its local blocks DISK_ONLY instead
+  * of localCheckpoint's MEMORY_AND_DISK. Each round supersedes the
+  * last, and round blocks held in the unified storage pool churn
+  * through eviction and re-serialization under co-tenant memory
+  * pressure, multiplying task CPU by the remaining round count;
+  * DISK_ONLY blocks never enter that pool. On a quiet host the loops
+  * are neutral to the level (each round is written once and read
+  * once or twice from the page cache), while one-shot cuts read hot
+  * by adjacent stages lose under DISK_ONLY (+25 % CPU on a25), and
+  * frames re-read by every round (the mirrored edge set) gain from
+  * memory residency; those keep the default.
   */
 private[graft] object Checkpoints {
 
   /** Session conf key selecting reliable checkpoints. */
   val confKey = "spark.graft.checkpointDir"
 
-  /** Session conf key (env fallback SPARK_GRAFT_CUT_STORAGE) selecting
-    * the storage level of LOCAL cuts — any StorageLevel.fromString
-    * name; unset keeps Spark's localCheckpoint default
-    * (MEMORY_AND_DISK, deserialized). Why it exists (r14 verdict ask
-    * #1b): MEMORY_AND_DISK cut blocks occupy the unified storage pool,
-    * and under co-tenant memory pressure the iterative family's
-    * superseded-round blocks churn through eviction/re-serialization —
-    * task CPU that multiplied d16's reading up to 85× across three
-    * graded rounds while the plan was unchanged. DISK_ONLY cuts take
-    * the storage pool out of the equation entirely: each round's
-    * blocks go straight to local disk, reads stream them back, and no
-    * eviction cascade can amplify a busy host into a 20× query. The
-    * induced-pressure A/B (tools/pressure_ab.sh) measures both modes
-    * quiet and squeezed; see SURVEY §8 r15 for the adjudicated
-    * numbers. */
-  val storageKey = "spark.graft.cutStorage"
+  private def resolve(df: DataFrame, eager: Boolean, round: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    spark.conf.getOption(confKey).filter(_.nonEmpty) match {
+      case Some(dir) =>
+        val sc = spark.sparkContext
+        // setCheckpointDir creates a fresh UUID subdirectory per call, so
+        // it runs only when the context's dir is not yet under `dir`.
+        val want = new Path(dir)
+        val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+          sc.setCheckpointDir(dir)
+        df.checkpoint()
+      case None if round => df.localCheckpoint(eager, StorageLevel.DISK_ONLY)
+      case None => df.localCheckpoint(eager)
+    }
+  }
 
-  private def cutLevel(spark: org.apache.spark.sql.SparkSession)
-      : Option[org.apache.spark.storage.StorageLevel] =
-    spark.conf.getOption(storageKey)
-      .orElse(sys.env.get("SPARK_GRAFT_CUT_STORAGE"))
-      .filter(_.nonEmpty)
-      .map(org.apache.spark.storage.StorageLevel.fromString)
+  /** EAGER cut: the frame is materialized before this returns. */
+  def cut(df: DataFrame, round: Boolean = false): DataFrame =
+    resolve(df, eager = true, round)
 
-  def cut(df: DataFrame): DataFrame = cutWith(df, None)
-
-  /** Per-ROUND cut for iterative loops (closures, label propagation):
-    * like [[cut]] but defaults the storage level to DISK_ONLY instead
-    * of localCheckpoint's MEMORY_AND_DISK. Why the split (r15, closing
-    * the r14 verdict's pressure ask): the storage-pressure
-    * amplification class lives in the per-round frames — each round
-    * supersedes the last, and MEMORY_AND_DISK blocks of rounds (live
-    * or not-yet-uncut) sit in the unified storage pool where co-tenant
-    * memory pressure churns them through eviction/re-serialization,
-    * multiplying task CPU by the remaining round count. DISK_ONLY
-    * blocks never enter that pool, so the mechanism is impossible by
-    * construction. Cost, measured (tools/pressure_ab_r15_*,
-    * tools/cutab_*): the iterative family is mode-NEUTRAL on a quiet
-    * host at sf0.1 (each round's blocks are written once and read
-    * once-or-twice — the page cache absorbs the re-read), while
-    * one-shot cuts consumed hot by adjacent stages (a25's pair set,
-    * overlapPairs' drop dim) measurably LOSE under DISK_ONLY (+25%
-    * CPU on a25) — hence two defaults, not one. Frames that live
-    * ACROSS rounds as every round's probe side (the mirrored edge
-    * set) stay [[cut]]: they are re-read per round, where memory
-    * residency pays.
+  /** LAZY cut: lineage is truncated now (the plan becomes an RDD scan),
+    * but materialization waits for the first consumer's job — the form
+    * for pipeline intermediates whose next step runs immediately, where
+    * an eager cut would add a whole sequential job only to persist
+    * blocks the next job persists as a side effect. Concurrent scans of
+    * a not-yet-materialized lazy cut are correct, but two tasks racing
+    * on one partition may both compute it (+40 % CPU measured on the
+    * jaccard family, see Dedup), so it fits frames whose first consumer
+    * scans them once.
     *
-    * Both defaults yield to the same two knobs: `spark.graft.
-    * cutStorage` overrides the level for every local cut, and a
-    * configured reliable checkpoint dir replaces local cuts
-    * entirely. */
-  def roundCut(df: DataFrame): DataFrame =
-    cutWith(df, Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    * ORDERING CONTRACT: the inputs this frame reads may not be
+    * [[uncut]] until some action has materialized it. */
+  def cutLazy(df: DataFrame): DataFrame = resolve(df, eager = false, round = false)
 
-  /** Cut + inspect in ONE job (r16 verdict ask #2): every iterative
-    * loop's per-round tail is "materialize the round's frame, then
-    * run a scalar driver action on it" (emptiness, count, label sum)
-    * — with an EAGER cut that is two sequential jobs per round, and
-    * on the deep serving chains the per-job scheduling +
-    * checkpoint-store latency tax dominates small-SF wall (the r16
-    * verdict measured b5 at 150 stages / 22-30 s cold wall over 10 s
-    * cpu). Here the cut is LAZY (`localCheckpoint(eager = false)`)
-    * and `action` is the materializing job: Spark's local-checkpoint
-    * marking persists each partition as the action's tasks compute
-    * it, and `doCheckpoint()` at job end finalizes without extra work
-    * because a whole-frame action (count / full aggregate — NEVER a
-    * `take`/`isEmpty`, which computes one partition and leaves the
-    * rest to a post-job catch-up pass) touched every partition. One
-    * job, same blocks, same scalar.
+  /** Cut + inspect in ONE job: an iterative loop's per-round tail is
+    * "materialize the round's frame, then run a scalar driver action on
+    * it" (emptiness, count, label sum), which an eager cut runs as two
+    * sequential jobs. Here the cut is lazy and `action` is the
+    * materializing job: local-checkpoint marking persists each
+    * partition as the action's tasks compute it. The action must touch
+    * every partition (a count or full aggregate, NEVER `take`/`isEmpty`,
+    * which leave the rest to a catch-up pass at job end).
     *
-    * ORDERING CONTRACT (sharper than the eager form's): the frame is
-    * materialized only WHEN `action` runs, so a caller must not
-    * [[uncut]] the inputs the frame reads until cutEval RETURNS —
-    * with an eager cut that mistake was impossible by sequencing.
-    * Every loop below follows cut-then-uncut-previous order already.
-    *
-    * Reliable-checkpoint mode keeps the eager write-then-act
-    * sequence: a lazy reliable checkpoint recomputes the frame a
-    * second time into its checkpoint files at job end (the classic
-    * `rdd.checkpoint()` double-compute), which costs more than the
-    * job it saves. */
-  def cutEval[T](df: DataFrame)(action: DataFrame => T): (DataFrame, T) =
-    cutEvalWith(df, None)(action)
-
-  def roundCutEval[T](df: DataFrame)(action: DataFrame => T): (DataFrame, T) =
-    cutEvalWith(df,
-      Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))(action)
+    * Same ORDERING CONTRACT as [[cutLazy]]: do not [[uncut]] the inputs
+    * the frame reads until this returns. */
+  def cutEval[T](df: DataFrame, round: Boolean = false)
+      (action: DataFrame => T): (DataFrame, T) = {
+    val c = resolve(df, eager = false, round)
+    (c, action(c))
+  }
 
   /** [[cutEval]] with the action specialized to a row count — the
     * emptiness/convergence form the closure loops consume. The count
     * runs over `queryExecution.toRdd` (a single-stage RDD job with a
-    * driver-side sum), not `Dataset.count()` (an Aggregate plan with
-    * a one-row exchange — a second stage per round for nothing). */
-  private def rddCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
-  def cutCount(df: DataFrame): (DataFrame, Long) =
-    cutEvalWith(df, None)(rddCount)
-  def roundCutCount(df: DataFrame): (DataFrame, Long) =
-    cutEvalWith(df,
-      Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))(rddCount)
-
-  /** LAZY cut: lineage is truncated now (the plan becomes an RDD
-    * scan), but materialization waits for the first consumer's job —
-    * the right form for pipeline intermediates whose next step runs
-    * immediately (r16 verdict ask #2: an eager cut there inserts a
-    * whole sequential job + its scheduling round-trip purely to
-    * persist blocks the next job would have persisted as a side
-    * effect). Concurrent scans of a not-yet-materialized lazy cut
-    * are safe — the block manager serializes per-partition compute
-    * under its block locks (getOrElseUpdate), so the upstream plan
-    * still runs once.
-    *
-    * ORDERING CONTRACT (same as [[cutEval]]): inputs may not be
-    * [[uncut]] until some action has materialized this frame.
-    * Reliable-checkpoint mode degrades to the eager cut (a lazy
-    * reliable checkpoint recomputes the frame into its files at job
-    * end — the double-compute [[cutEval]] documents). */
-  def cutLazy(df: DataFrame): DataFrame = cutLazyWith(df, None)
-  def roundCutLazy(df: DataFrame): DataFrame =
-    cutLazyWith(df, Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-  private def cutLazyWith(df: DataFrame,
-      defaultLevel: Option[org.apache.spark.storage.StorageLevel]): DataFrame = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption(confKey)
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-      .exists(_.nonEmpty)
-    if (reliable) cutWith(df, defaultLevel)
-    else cutLevel(spark).orElse(defaultLevel) match {
-      case Some(lvl) => df.localCheckpoint(false, lvl)
-      case None => df.localCheckpoint(false)
-    }
-  }
-
-  private def cutEvalWith[T](df: DataFrame,
-      defaultLevel: Option[org.apache.spark.storage.StorageLevel])
-      (action: DataFrame => T): (DataFrame, T) = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption(confKey)
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-      .exists(_.nonEmpty)
-    val c =
-      if (reliable) cutWith(df, defaultLevel) // eager: see scaladoc
-      else cutLevel(spark).orElse(defaultLevel) match {
-        case Some(lvl) => df.localCheckpoint(false, lvl)
-        case None => df.localCheckpoint(false)
-      }
-    (c, action(c))
-  }
-
-  private def cutWith(df: DataFrame,
-      defaultLevel: Option[org.apache.spark.storage.StorageLevel]): DataFrame = {
-    val spark = df.sparkSession
-    // Env fallback (SPARK_GRAFT_CHECKPOINT_DIR) mirrors the other cut
-    // knobs so a Bench/ScaleProbe run can A/B reliable cuts without a
-    // code change; the session conf wins when both are set.
-    spark.conf.getOption(confKey)
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-      .filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        // setCheckpointDir creates a fresh UUID subdirectory per call —
-        // set once per context; the first configured dir wins.
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => cutLevel(spark).orElse(defaultLevel) match {
-        case Some(lvl) => df.localCheckpoint(true, lvl)
-        case None => df.localCheckpoint()
-      }
-    }
-  }
+    * driver-side sum), not `Dataset.count()` (an Aggregate plan with a
+    * one-row exchange — a second stage per round for nothing). */
+  def cutCount(df: DataFrame, round: Boolean = false): (DataFrame, Long) =
+    cutEval(df, round)(_.queryExecution.toRdd.count())
 
   /** Free the executor-storage blocks behind a SUPERSEDED cut — the
     * other half of the cut contract. An iterative operator that cuts a
-    * corpus-sized frame per round (connectedComponents' labels, the
-    * doubling closure) otherwise accumulates live MEMORY_AND_DISK
-    * blocks ∝ rounds × |frame|: under storage pressure (the steady
-    * state of a busy multi-tenant cluster) every superseded round's
-    * blocks churn through spill/re-serialization — task CPU that
-    * multiplies with the remaining round count, turning a 12 s query
-    * into a 260 s one while the plan itself is unchanged.
+    * corpus-sized frame per round otherwise accumulates live blocks ∝
+    * rounds × |frame|, and under storage pressure every superseded
+    * round's blocks churn through spill and re-serialization.
     *
-    * CONTRACT — the frame must be DEAD: a localCheckpoint discarded
-    * its lineage, so once the blocks are dropped a later read fails
-    * with missing-block errors instead of recomputing. Callers may
-    * only pass (a) the direct result of [[cut]] once every consumer
-    * of it has been MATERIALIZED into its own cut (cut is eager, so
-    * sequencing the uncut after the superseding cut() returns is
-    * sufficient), or (b) a pure union/select over such dead cuts —
-    * never a frame derived from cuts some OTHER live frame still
-    * needs, because this walks the whole analyzed plan and frees
-    * every checkpoint RDD it finds. Under reliable checkpointing
-    * ([[confKey]] set) the RDD's data lives in checkpoint files, not
-    * persisted blocks, so this is a harmless no-op and the files
-    * remain readable (cleaned with the checkpoint dir).
+    * CONTRACT — the frame must be DEAD: a localCheckpoint discarded its
+    * lineage, so once the blocks are dropped a later read fails with
+    * missing-block errors instead of recomputing. Callers may only pass
+    * (a) the result of a cut once every consumer of it has been
+    * materialized into its own cut, or (b) a pure union/select over
+    * such dead cuts — never a frame derived from cuts some OTHER live
+    * frame still needs, because this walks the whole analyzed plan and
+    * frees every checkpoint RDD it finds. Under reliable checkpointing
+    * the data lives in checkpoint files, not persisted blocks, so this
+    * is a harmless no-op.
     *
-    * Non-blocking (the freed memory is reclaimed asynchronously;
-    * nothing waits on it) and non-fallible: a cleanup that cannot
-    * run must degrade to the old keep-everything behavior, never
-    * fail the query. */
-  /** RDD.unpersist warns "locally checkpointed … cannot be recomputed
-    * after unpersisting" on every uncut — for a frame the contract
-    * declares dead that is not a warning but the intended effect, and
-    * at one line per freed round it would drown real warnings in the
-    * bench logs. The mute is SCOPED to our own unpersist calls, so a
-    * user unpersisting THEIR live checkpoint outside an uncut still
-    * gets the diagnostic — a permanent JVM-wide mute would hide the
-    * one line that names the cause of a later missing-block failure
-    * (round-11 review). Two refinements from the second review pass:
-    * the save/mute/restore is DEPTH-COUNTED under a global monitor
-    * (naive per-call save/restore interleaved across threads could
-    * capture another thread's ERROR as the "prior" and stick it
-    * forever — concurrent iterative operators are the stated target
-    * environment), and when the logger had NO explicit config before
-    * the mute, restore REMOVES the explicit LoggerConfig instead of
-    * pinning the inherited effective level (a pinned level would
-    * detach the logger from later sc.setLogLevel calls). Concurrent
-    * non-graft unpersists inside the mute window may lose the line;
-    * accepted trade. */
-  private[this] val muteMonitor = new Object
-  private[this] var muteDepth = 0
-  private[this] var muteHadExplicit = false
-  private[this] var mutePrior: Option[org.apache.logging.log4j.Level] = None
-  private def withUnpersistWarnMuted(body: => Unit): Unit = {
-    val name = "org.apache.spark.rdd.MapPartitionsRDD"
-    muteMonitor.synchronized {
-      if (muteDepth == 0) {
-        try {
-          val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-            .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-          val lc = ctx.getConfiguration.getLoggerConfig(name)
-          muteHadExplicit = lc.getName == name
-          mutePrior = Option(lc.getLevel)
-          org.apache.logging.log4j.core.config.Configurator.setLevel(
-            name, org.apache.logging.log4j.Level.ERROR)
-        } catch { case scala.util.control.NonFatal(_) => mutePrior = None }
-      }
-      muteDepth += 1
-    }
-    try body
-    finally muteMonitor.synchronized {
-      muteDepth -= 1
-      if (muteDepth == 0) {
-        try {
-          if (muteHadExplicit) mutePrior.foreach(lvl =>
-            org.apache.logging.log4j.core.config.Configurator
-              .setLevel(name, lvl))
-          else {
-            val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-              .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-            ctx.getConfiguration.removeLogger(name)
-            ctx.updateLoggers()
-          }
-        } catch { case scala.util.control.NonFatal(_) =>
-          // degrade to a level restore; never fail the uncut
-          mutePrior.foreach(lvl =>
-            try org.apache.logging.log4j.core.config.Configurator
-              .setLevel(name, lvl)
-            catch { case scala.util.control.NonFatal(_) => () })
-        }
-      }
-    }
-  }
-
-  /** A/B knob for pressure adjudication: `spark.graft.uncut=false`
-    * (session conf) or SPARK_GRAFT_UNCUT=0 (env) restores the pre-fix
-    * keep-every-round behavior, so a storage-constrained run can
-    * measure exactly what the superseded blocks cost — see
-    * tools/pressure_repro.sh. Default on. Package-visible as the ONE
-    * definition of the knob (StoragePeak reports it). */
-  private[graft] def uncutEnabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.uncut")
-      .orElse(sys.env.get("SPARK_GRAFT_UNCUT"))
-      .forall(v => !(v.equalsIgnoreCase("false") || v == "0"))
-
+    * Non-blocking (the freed memory is reclaimed asynchronously) and
+    * non-fallible: a cleanup that cannot run degrades to keeping the
+    * blocks, never fails the query. */
   def uncut(df: DataFrame): Unit =
-    try {
-      if (!uncutEnabled(df.sparkSession)) return
-      withUnpersistWarnMuted {
-        df.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-      }
-    } catch {
+    try df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+      .foreach(SparkInternals.unpersist)
+    catch {
       // Only ABSORBABLE failures may degrade to keep-everything:
       // NonFatal covers unpersist/plan-walk errors; a cancellation
       // (InterruptedException is fatal to NonFatal) is absorbed but
       // the thread's interrupt flag is RE-SET so the caller's next
       // blocking point still observes it. VM-fatal errors (OOM,
-      // linkage) propagate — downgrading those to a warn would keep
-      // running a query inside a broken JVM (round-11 advice).
+      // linkage) propagate.
       case e: InterruptedException =>
         Thread.currentThread().interrupt()
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"uncut skipped (blocks stay live): ${e.getMessage}")
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"uncut skipped (blocks stay live): ${e.getMessage}")
+        skipped(e)
+      case scala.util.control.NonFatal(e) => skipped(e)
     }
 
-  /** `df.cut()` / `df.cutRound()` / `df.uncut()` — the call-site
-    * forms the operators use. */
+  private def skipped(e: Throwable): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass)
+      .warn(s"uncut skipped (blocks stay live): ${e.getMessage}")
+
+  /** `df.cut()` / `df.cut(round = true)` / `df.cutLazy()` / `df.uncut()`
+    * — the call-site forms the operators use. */
   implicit class Cuttable(private val df: DataFrame) extends AnyVal {
-    def cut(): DataFrame = Checkpoints.cut(df)
-    def cutRound(): DataFrame = Checkpoints.roundCut(df)
+    def cut(round: Boolean = false): DataFrame = Checkpoints.cut(df, round)
     def cutLazy(): DataFrame = Checkpoints.cutLazy(df)
     def uncut(): Unit = Checkpoints.uncut(df)
   }

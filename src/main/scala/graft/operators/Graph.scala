@@ -253,16 +253,16 @@ object Graph {
     // Per-round closure frames: DISK_ONLY counted cuts (see
     // connectedComponents for the level, Checkpoints.cutEval for the
     // one-job convergence scalar).
-    var (closure, size) = Checkpoints.roundCutCount(
-      edges.select(col("src"), col("dst")).distinct())
+    var (closure, size) = Checkpoints.cutCount(
+      edges.select(col("src"), col("dst")).distinct(), round = true)
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
       val left = closure.select(col("src"), col("dst").as("mid"))
       val right = closure.select(col("src").as("mid"), col("dst"))
       val doubled = left.join(right, "mid").select(col("src"), col("dst"))
-      val (grown, next) = Checkpoints.roundCutCount(
-        closure.union(doubled).distinct())
+      val (grown, next) = Checkpoints.cutCount(
+        closure.union(doubled).distinct(), round = true)
       // The superseded round's closure-sized blocks are dead once the
       // grown cut materializes (the counted cut's action already ran)
       // — without this the doubling loop holds rounds × |closure|
@@ -469,12 +469,12 @@ object Graph {
     // sequential job (r16 verdict ask #2).
     val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .filter(col("a") =!= col("b")).distinct().cutLazy()
-    // Per-round label frames take DISK_ONLY cuts (cutRound): each
+    // Per-round label frames take DISK_ONLY cuts (round = true): each
     // round supersedes the last, and MEMORY_AND_DISK blocks of those
     // frames are exactly the storage-pool churn surface the r10/r14
     // pressure anomalies named (measured mode-neutral on a quiet host
-    // — tools/cutab_*; see Checkpoints.roundCut). The mirrored edge
-    // set stays a memory cut: it is every round's probe side.
+    // — tools/cutab_*; see Checkpoints). The mirrored edge set stays a
+    // memory cut: it is every round's probe side.
     // (row count, label sum) in ONE full-frame aggregate — the
     // action each round's counted cut folds into its materializing
     // job (Checkpoints.cutEval; the eager cut + separate labelSum
@@ -487,17 +487,16 @@ object Graph {
       val s = r.getDecimal(1)
       (r.getLong(0), if (s == null) java.math.BigDecimal.ZERO else s)
     }
-    val init = Checkpoints.roundCutEval(
+    val init = Checkpoints.cutEval(
       und.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")))(labelStats)
+        .select(col("id"), col("id").as("comp")), round = true)(labelStats)
     // The init job above materialized und (labels' parent) and e0
     // (und's parent); e0's only consumer is und — free its pair-set-
     // sized blocks now instead of carrying them through every
     // propagation round (see [[Checkpoints.uncut]]: superseded blocks
     // under storage pressure cost spill CPU per remaining round).
-    // MUST follow the init action: unpersisting a never-materialized
-    // lazy cut would strip the storage level its local checkpoint
-    // needs (the cutLazy ordering contract).
+    // MUST follow the init action: und is a lazy cut that reads e0's
+    // blocks when it materializes (the cutLazy ordering contract).
     e0.uncut()
     var labels = init._1
     var prevSum = init._2._2
@@ -510,7 +509,7 @@ object Graph {
         .groupBy("id").agg(min(col("comp")).as("comp"))
       val (next, nextSum) =
         if (!shortcut) {
-          val (h, (_, s)) = Checkpoints.roundCutEval(hookedPlan)(labelStats)
+          val (h, (_, s)) = Checkpoints.cutEval(hookedPlan, round = true)(labelStats)
           (h, s)
         } else {
           // Pointer jump: comp ← labels(comp). The hooked frame is
@@ -521,12 +520,12 @@ object Graph {
           // happen for und-derived labels, but the jump must never
           // invent nulls). Chains contract geometrically: label
           // depth halves per round.
-          val hooked = hookedPlan.cutRound()
-          val (jumped, (_, s)) = Checkpoints.roundCutEval(hooked
+          val hooked = hookedPlan.cut(round = true)
+          val jump = hooked
             .join(hooked.select(col("id").as("__jid"), col("comp").as("__jc")),
                   col("comp") === col("__jid"), "left")
-            .select(col("id"), coalesce(col("__jc"), col("comp")).as("comp")))(
-            labelStats)
+            .select(col("id"), coalesce(col("__jc"), col("comp")).as("comp"))
+          val (jumped, (_, s)) = Checkpoints.cutEval(jump, round = true)(labelStats)
           hooked.uncut()
           (jumped, s)
         }
@@ -967,14 +966,14 @@ object Graph {
     // Per-round peel frames: DISK_ONLY counted cuts (see
     // connectedComponents for the level; the convergence count rides
     // the cut's materializing job, Checkpoints.cutEval).
-    var (e, prevCount) = Checkpoints.roundCutCount(
-      edges.select(col("src"), col("dst")).distinct())
+    var (e, prevCount) = Checkpoints.cutCount(
+      edges.select(col("src"), col("dst")).distinct(), round = true)
     var iter = 0
     var done = prevCount == 0L
     while (!done && iter < maxIter) {
       val alive = e.select(col("src").as("dst")).distinct()
-      val (next, n) = Checkpoints.roundCutCount(
-        e.join(alive, Seq("dst"), "left_semi"))
+      val (next, n) = Checkpoints.cutCount(
+        e.join(alive, Seq("dst"), "left_semi"), round = true)
       // Counted cut already materialized `next` — the superseded
       // round's blocks are dead now, not before.
       e.uncut()

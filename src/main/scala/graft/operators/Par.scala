@@ -18,8 +18,8 @@ package graft.operators
   * read a frame the other cuts or uncuts mid-flight (sharing an
   * already-CUT upstream frame is fine: block reads are thread-safe).
   * Spark-side state used here is thread-safe by design: the block
-  * manager serializes per-partition materialization, [[Checkpoints]]'
-  * uncut mute is depth-counted under a monitor, and
+  * manager serializes per-partition materialization, [[Checkpoints]]
+  * keeps no state of its own, and
   * [[graft.Timed]] regions accumulate via DoubleAdder (two CONCURRENT
   * `fit` regions sum both walls — a fit_s reading can then exceed the
   * shot's elapsed fit window; the bench README documents this).

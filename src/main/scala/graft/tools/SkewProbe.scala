@@ -3,6 +3,7 @@ package graft.tools
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkInternals
 
 /** Skew-robustness probe (r15 verdict ask #2): the testdata's keys
   * are uniform, so ScaleProbe's exponents prove volume-linearity but
@@ -226,25 +227,15 @@ object SkewProbe {
 
     graft.Canary.run(); graft.Canary.runParallel() // JIT, untimed
     for ((name, uni, skw, body) <- selected) {
-      // Settle the async listener bus so the straggler tally sees
-      // every task of the action that just returned (the Bench
-      // drain, degraded to a bounded sleep if the reflective call is
-      // unavailable).
-      def drainBus(): Unit = try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .map { m => m.invoke(bus); () }
-          .getOrElse(Thread.sleep(500))
-      } catch { case scala.util.control.NonFatal(_) => Thread.sleep(500) }
       def side(label: String, in: DataFrame): (Double, Double, String) = {
         noop(body(in)) // warm (JIT/codegen), untimed
         System.gc(); Thread.sleep(800)
-        drainBus()
+        // Settle the async listener bus on both sides of the timed
+        // action, so the straggler tally holds exactly its tasks.
+        SparkInternals.drainListenerBus(spark.sparkContext)
         tally.reset()
         val (w, c) = cpuTimed(noop(body(in)))
-        drainBus()
+        SparkInternals.drainListenerBus(spark.sparkContext)
         val s = tally.dominantStraggler().map { case (r, mx, md, n) =>
           f"straggler ${r}%5.1fx (max ${mx}ms med ${md}ms n=$n)"
         }.getOrElse("straggler n/a")

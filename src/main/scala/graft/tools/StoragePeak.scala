@@ -15,17 +15,16 @@ import org.apache.spark.sql.SparkSession
   * the few frames actually live.
   *
   * Usage (from sbt):
-  *   SPARK_GRAFT_UNCUT=0 runMain graft.tools.StoragePeak d16_components_incremental
-  *                       runMain graft.tools.StoragePeak d16_components_incremental
+  *   runMain graft.tools.StoragePeak d16_components_incremental
   * The argument is a registered query name, or `chain:<n>` — a
   * synthetic n-node path graph through connectedComponents, whose
   * diameter forces ≈ n/2 propagation rounds: the worst case the
-  * maxIter guard tolerates, where the superseded-block accumulation
-  * is rounds × |labels| and the before/after separation is starkest
-  * (registered dedup queries converge in 3-4 rounds at sf0.1, so
-  * their absolute accumulation is modest on a quiet host — the
-  * round-10 anomaly needed co-tenant pressure on top).
-  * Prints one JSON line: {"query":…,"uncut":…,"peak_rdds":…,
+  * maxIter guard tolerates, where a superseded-block leak would
+  * accumulate rounds × |labels| and show most clearly (registered
+  * dedup queries converge in 3-4 rounds at sf0.1, so their absolute
+  * accumulation is modest on a quiet host — the round-10 anomaly
+  * needed co-tenant pressure on top).
+  * Prints one JSON line: {"query":…,"peak_rdds":…,
   * "peak_mem_bytes":…,"peak_disk_bytes":…,"end_rdds":…,
   * "end_mem_bytes":…,"wall_sec":…}.
   */
@@ -88,14 +87,10 @@ object StoragePeak {
     // briefly so async unpersists finish counting.
     Thread.sleep(500)
     val endInfos = sc.getRDDStorageInfo
-    // The ONE knob definition (Checkpoints owns conf+env precedence) —
-    // a local reimplementation would silently drift from the mode the
-    // measurement actually ran under.
-    val uncutOn = graft.operators.Checkpoints.uncutEnabled(spark)
     // Locale.ROOT: a comma-decimal default locale would print invalid
     // JSON (the Bench.s3 rule).
     val wallStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(wall))
-    println(s"""{"query":"$name","uncut":$uncutOn,"peak_rdds":$peakRdds,""" +
+    println(s"""{"query":"$name","peak_rdds":$peakRdds,""" +
       s""""peak_mem_bytes":$peakMem,"peak_disk_bytes":$peakDisk,""" +
       s""""end_rdds":${endInfos.length},""" +
       s""""end_mem_bytes":${endInfos.map(_.memSize).sum},""" +

@@ -3,7 +3,7 @@
 # ask #4: the closure-family adjudication method, packaged).
 #
 # Usage:
-#   tools/abtest.sh <git-ref> <query-list> [rounds] [sfdir]
+#   tools/abtest.sh <git-ref> <query-list> [rounds] [sfdir] [reps]
 #     <git-ref>     the OLD code to compare against (built in a
 #                   throwaway worktree; needs a Bench that understands
 #                   SPARK_GRAFT_ONLY/_BENCH_OUT — any ref >= round 5)
@@ -11,6 +11,9 @@
 #                   on BOTH sides)
 #     [rounds]      interleave depth per side (default 2)
 #     [sfdir]       testdata dir (default /root/testdata/sf0.1)
+#     [reps]        SPARK_GRAFT_BENCH_REPS pinned on BOTH sides
+#                   (default 1: one shot per query, so neither side's
+#                   own default shot policy decides what is compared)
 #
 # Runs the restricted bench current,ref,current,ref,… — a fresh JVM
 # per run (sbt -batch exits after each), same-day interleaving so host
@@ -31,10 +34,11 @@
 # leaving a stale .crc sidecar) must stay impossible by construction.
 set -euo pipefail
 
-REF="${1:?usage: abtest.sh <git-ref> <query-list> [rounds] [sfdir]}"
-QUERIES="${2:?usage: abtest.sh <git-ref> <query-list> [rounds] [sfdir]}"
+REF="${1:?usage: abtest.sh <git-ref> <query-list> [rounds] [sfdir] [reps]}"
+QUERIES="${2:?usage: abtest.sh <git-ref> <query-list> [rounds] [sfdir] [reps]}"
 ROUNDS="${3:-2}"
 SFDIR="${4:-/root/testdata/sf0.1}"
+REPS="${5:-1}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 SAFE_REF="$(printf '%s' "$REF" | tr -c 'A-Za-z0-9._-' '_')"
 WT="/tmp/graft_abtest_wt_${SAFE_REF}"
@@ -58,7 +62,7 @@ run_side() { # $1=side $2=dir $3=round-index
   (cd "$dir" &&
     SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_SF_DIR="$SFDIR" \
     GRAFT_MODEL_DIR="$TMP/models_${side}" \
-    SPARK_GRAFT_BENCH_OUT="$out" \
+    SPARK_GRAFT_BENCH_OUT="$out" SPARK_GRAFT_BENCH_REPS="$REPS" \
     sbt -batch "runMain graft.Bench" >"$TMP/${side}_${idx}.log" 2>&1) ||
     echo "[abtest] WARNING: side ${side} run ${idx} exited nonzero" \
          "(log: $TMP/${side}_${idx}.log)"
@@ -69,9 +73,9 @@ for i in $(seq 1 "$ROUNDS"); do
   run_side ref "$WT" "$i"
 done
 
-python3 - "$OUT" "$REF" "$QUERIES" "$SFDIR" "$TMP" "$ROUNDS" <<'PY'
+python3 - "$OUT" "$REF" "$QUERIES" "$SFDIR" "$TMP" "$ROUNDS" "$REPS" <<'PY'
 import json, os, sys
-out, ref, queries, sfdir, tmp, rounds = sys.argv[1:7]
+out, ref, queries, sfdir, tmp, rounds, reps = sys.argv[1:8]
 qs = [q for q in queries.split(",") if q]
 runs, order = [], []
 for i in range(1, int(rounds) + 1):
@@ -134,6 +138,7 @@ verdicts = {q: {
 json.dump({
     "tool": "abtest.sh",
     "ref": ref, "queries": qs, "sf": sfdir, "rounds": int(rounds),
+    "reps": reps,
     "interleave_order": order,
     "method": ("fresh JVM per run (one sbt -batch runMain each), "
                "same-day interleaving cur,ref,cur,ref…; per-side "
