@@ -280,7 +280,12 @@ object Collections {
     *    metadata, reference: db1/db5 KV maps.
     *  - `collections`: (collection_id, collection_name, required_type)
     *    — reference: list/category seeds.
-    *  - `typeEdges`: (src, dst) subclass edges — reference: db2.
+    *  - `typeEdges`: (src, dst) subclass edges with integral type ids
+    *    — reference: db2. The type taxonomy is a dimension: it is
+    *    collected and broadcast once, and every required type's
+    *    ancestor cone is walked inside the tasks (the
+    *    `broadcastStep = true` path of [[Graph.reachableTo]]); it may
+    *    be a general DAG, cycles included.
     * @param relations optional (category_id, list_id) edges — the
     *   P1753/P1754 related-list relation. When present, each category
     *   with a relation is merged into its FIRST related list (smallest
@@ -293,18 +298,6 @@ object Collections {
     *   the stable id — everything keyed on the id downstream, namehash
     *   ordering and banner seeding included, follows that min).
     * @param topK members kept per collection (rank-ordered).
-    * @param closureStride hops walked per reachability round (see
-    *   [[Graph.reachableTo]]). The default 4 assumes `typeEdges` is
-    *   dimension-sized (a type taxonomy — the reference's subclass_of
-    *   graph), where precomposing 4-hop edge sets is cheap and cuts
-    *   the sequential round count 4×; pass 1 if the edge set is huge
-    *   relative to the target cone.
-    * @param closureUniquePaths pass true iff `typeEdges` is a
-    *   tree/forest (every type has at most one parent): each closure
-    *   round then skips its dedup distinct + anti-join — two shuffles
-    *   per round (see [[Graph.reachableTo]]). The reference's
-    *   subclass_of graph is a general DAG, so this defaults to false;
-    *   violating the precondition yields duplicate closure pairs.
     *
     * Output: one row per distinct collection NAME (same-name
     * collections merged, reference filter_duplicates.py): stable id =
@@ -314,9 +307,7 @@ object Collections {
     */
   def build(members: DataFrame, entities: DataFrame, collections: DataFrame,
             typeEdges: DataFrame, topK: Int = 10,
-            relations: Option[DataFrame] = None,
-            closureStride: Int = 4,
-            closureUniquePaths: Boolean = false): DataFrame = {
+            relations: Option[DataFrame] = None): DataFrame = {
     // Relation merge (stage before everything else): remap category
     // members onto the related list and drop the absorbed category
     // seed. The relation table is dim-sized → broadcast join; the
@@ -388,13 +379,7 @@ object Collections {
     val closure = Graph.reachableTo(
       typeEdges.select(col("src"), col("dst")),
       coll0.select(col("required_type").as("dst")),
-      stride = closureStride,
-      uniquePaths = closureUniquePaths,
-      // stride > 1 IS the caller's "typeEdges is dimension-sized"
-      // declaration (reachableTo's stride cost contract) — the same
-      // condition that makes broadcasting the step side sound, so
-      // the two plan choices ride one knob.
-      broadcastStep = closureStride > 1)
+      broadcastStep = true)
 
     // LEFT join to entities (r12 review, reference parity): a member
     // with no entity row cannot validate — the reference counts it

@@ -1,23 +1,34 @@
 package graft.operators
 
 import graft.operators.Checkpoints.Cuttable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed graph reachability — the Spark-first replacement for the
   * reference's type-validation DFS (collection-templates
   * scripts/filter_articles2.py `has_path_rocksdb_subclass`, which walks
   * the `subclass_of` RocksDB map one key at a time).
   *
-  * Semi-naive iteration: each round joins only the frontier (pairs
-  * discovered last round) against the edge set, so work per round is
-  * proportional to NEW paths, not the whole closure. Every round is one
-  * shuffle on the join key; a [[Checkpoints]] cut truncates lineage so
-  * the plan doesn't grow with iteration count (and AQE re-plans each
-  * round from actual sizes — small frontiers get broadcast
-  * automatically). Cuts default to `localCheckpoint`; set
-  * `spark.graft.checkpointDir` for reliable checkpoints that survive
-  * executor loss — required on clusters with dynamic allocation.
+  * The two closures walk in one of two ways, picked by the caller's
+  * declaration of the edge set's size:
+  *
+  *  - `broadcastStep = true` (a dimension-sized edge set, such as a
+  *    type taxonomy): the edges are collected once, broadcast as a
+  *    compact adjacency, and every walk runs to completion inside the
+  *    tasks that scan the start nodes. No rounds, no cuts: the result
+  *    is a lazy, recomputable frame.
+  *  - `broadcastStep = false` (an edge set that may be corpus-sized):
+  *    semi-naive iteration. Each round joins only the frontier (pairs
+  *    discovered last round) against the edge set, so work per round
+  *    is proportional to NEW paths, not the whole closure. Every round
+  *    is one shuffle on the join key; a [[Checkpoints]] cut truncates
+  *    lineage so the plan doesn't grow with iteration count (and AQE
+  *    re-plans each round from actual sizes). Cuts default to
+  *    `localCheckpoint`; set `spark.graft.checkpointDir` for reliable
+  *    checkpoints that survive executor loss — required on clusters
+  *    with dynamic allocation.
   */
 object Graph {
 
@@ -57,150 +68,125 @@ object Graph {
   private def unionAll(parts: Seq[DataFrame]): DataFrame =
     parts.reduce(_ union _)
 
-  /** `(seed, step)` hop sets for a stride-`k` walk: `seed` holds every
-    * pair at distance 1..k (what round 0 discovers), `step` every pair
-    * connected by a path of length exactly k (what each round composes
-    * with). k−1 self-joins, computed once and checkpointed. Any
-    * reachable pair decomposes as (r ≤ k) + q·k, so seeding 1..k and
-    * striding by k covers the full closure in ⌈depth/k⌉ rounds instead
-    * of `depth` — on local mode (and on a busy cluster) per-round job
-    * latency dominates these tiny frontier joins, so fewer, slightly
-    * fatter rounds win. `dedup` (non-forest inputs) inserts a distinct
-    * per composition so path multiplicity can't snowball, and a final
-    * distinct over the seed union: a pair connected at two different
-    * distances ≤ k (a shortcut edge alongside a longer path) would
-    * otherwise appear once per distance and leak duplicate rows into
-    * the closure's set contract. On a forest every pair has exactly
-    * one path, hence one distance — no cross-distance dedup needed.
-    *
-    * COST CONTRACT: the k−1 self-joins run over the ENTIRE edge set —
-    * O(|E| · k) once, before any target restriction a caller like
-    * [[reachableTo]] applies. That is the right trade when the edge
-    * set is dimension-sized (a type taxonomy walked many times); keep
-    * stride = 1 when the edge set is huge and the target cone tiny,
-    * or the precomposition alone dwarfs the cone walk.
-    */
-  private def strideHops(base: DataFrame, stride: Int,
-                         dedup: Boolean): (DataFrame, DataFrame) = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    if (stride == 1) return (base, base)
-    val right = base.select(col("src").as("h_src"), col("dst").as("h_dst"))
-    var exact = base
-    var seed = base
-    for (_ <- 2 to stride) {
-      val next0 = exact.join(right, exact("dst") === col("h_src"))
-        .select(exact("src"), col("h_dst").as("dst"))
-      val next = if (dedup) next0.distinct() else next0
-      // NOT checkpointed per level: `base` is already materialized, so
-      // re-deriving level i inside level i+1's plan and the seed union
-      // costs i extra dim-sized joins — cheaper than the sequential
-      // job barrier an eager localCheckpoint per level inserts
-      // (stride−1 of them, each a full driver round-trip).
-      exact = next
-      seed = seed.union(exact)
+  /** A collected edge set in compressed-sparse-row form, the broadcast
+    * payload of the `broadcastStep = true` walks. `ids` holds every
+    * non-null node id, sorted, and index `ids.length` stands for the
+    * null id; node i's neighbours are the node indices
+    * `nbrs(offsets(i) until offsets(i + 1))`. */
+  private final class Adjacency(val ids: Array[Long], offsets: Array[Int], nbrs: Array[Int])
+      extends Serializable {
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    def id(i: Int): Any = if (i == ids.length) null else ids(i)
+
+    /** The nodes reachable from `start` by a path of length ≥ 1,
+      * breadth first. The null id is reported but never expanded: as a
+      * join key it matches nothing, so no path continues through it. */
+    def reach(start: Int): Iterable[Int] = {
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      val todo = scala.collection.mutable.Queue(start)
+      while (todo.nonEmpty) {
+        val v = todo.dequeue()
+        for (j <- offsets(v) until offsets(v + 1) if seen.add(nbrs(j)) && nbrs(j) != ids.length)
+          todo.enqueue(nbrs(j))
+      }
+      seen
     }
-    val seedOut = if (dedup) seed.distinct() else seed
-    // LAZY cuts: both materialize inside the caller's first loop
-    // round (the counted cut's job — seed as round 0's frontier,
-    // exact as the step side), so the precomposition inserts zero
-    // pre-loop jobs of its own (r16 verdict ask #2). Callers defer
-    // their base/seedHops uncuts accordingly.
-    (seedOut.cutLazy(), exact.cutLazy())
   }
 
-  /** Transitive closure of `edges` (columns `src`, `dst`): every pair
-    * (a, b) with a path a → … → b of length ≥ 1. Terminates when a
-    * round yields no new pairs, or after `maxIter` rounds (a cycle
-    * guard for non-DAG inputs; the closure itself is cycle-safe because
-    * known pairs are anti-joined away each round). Hitting `maxIter`
-    * with a non-empty frontier means the closure is INCOMPLETE: a
-    * warning is logged, or an `IllegalStateException` thrown when
-    * `strict = true`.
-    *
-    * `uniquePaths = true` asserts every reachable pair has exactly one
-    * path (PRECONDITION: the edge set is a tree/forest — every node has
-    * at most one parent, e.g. a `subclass_of` taxonomy; violating it
-    * yields duplicate pairs and, on cyclic inputs, non-termination
-    * until `maxIter`). Then no pair can be rediscovered, so the
-    * per-round `distinct` + anti-join (two extra shuffles) are skipped
-    * and each round is a single join. `strict = true` additionally
-    * verifies the precondition up front (one cheap aggregation).
-    *
-    * `stride = k` walks k hops per round (see [[strideHops]]):
-    * identical result, ⌈depth/k⌉ sequential rounds. Each round is a
-    * frontier-sized join either way, so total work is flat; what
-    * shrinks is the number of sequential job barriers.
-    *
-    * `broadcastStep = true` (r16 verdict ask #2) hints the hop/step
-    * side of every round's join as a BROADCAST build: the per-round
-    * sort-merge plan shuffles BOTH sides (two exchange stages + the
-    * join stage, each a scheduling round-trip that dominates wall on
-    * deep chains — b5 completed 150 stages for 10 s of cpu), while
-    * the broadcast form reads the frontier's checkpoint blocks once,
-    * map-side, with only the step set's collect per round. Correct
-    * whenever the edge set is dimension-sized (a type taxonomy — the
-    * b1/b4/b5/b6 family's declared shape; at 100 TB the CLOSURE
-    * grows with the corpus but the taxonomy stays a dim, so this is
-    * also the right cluster plan: the corpus-sized frontier is never
-    * shuffled). Default OFF: a general edge set (d7's pair graphs)
-    * can be corpus-sized, where broadcasting would OOM the driver —
-    * same opt-in doctrine as `stride`.
-    */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 30,
-                        uniquePaths: Boolean = false,
-                        strict: Boolean = false,
-                        stride: Int = 1,
-                        broadcastStep: Boolean = false): DataFrame = {
-    val raw = edges.select(col("src"), col("dst"))
-    // LAZY base cut only under broadcastStep (r16 verdict ask #2 +
-    // r17 A/B): with a broadcast step the round-1 broadcast-build
-    // job materializes step → base BEFORE the probe stage scans
-    // seed → base, so the lazy cut folds into existing jobs with
-    // every first-materialization single-scanned. WITHOUT the
-    // broadcast, round 1 scans frontier(seed→base) and hop(step→
-    // base) in one job — concurrent tasks hit Spark's
-    // get-or-compute race and double-compute base's partitions
-    // (measured +40% cpu on the lazily-cut jaccard family), so the
-    // sort-merge path keeps the eager cut.
-    val base0 = if (uniquePaths) raw else raw.distinct()
-    val base = if (broadcastStep) base0.cutLazy() else base0.cut()
-    if (uniquePaths && strict) {
-      // Edges run child → parent; duplicate paths require some node
-      // with MORE THAN ONE OUTGOING edge (two parents). Multiple
-      // edges INTO a node are just siblings — legal in any forest.
-      val multiParent = base.groupBy("src").count().filter(col("count") > 1).limit(1).count()
-      if (multiParent > 0) {
-        // Free the just-created edge cut before throwing: a serving
-        // loop catching this per cycle (retry with uniquePaths=false)
-        // must not leak an |E|-sized block set per attempt.
-        base.uncut()
-        throw new IllegalStateException(
-          "transitiveClosure(uniquePaths = true) requires a tree/forest edge set, " +
-            "but some src has more than one parent edge — rerun with uniquePaths = false")
-      }
+  /** Builds the adjacency keyed by column `key` of (src, dst) rows of
+    * longs: key 0 gives successor lists, key 1 predecessor lists. */
+  private def adjacency(edges: Array[Row], key: Int): Adjacency = {
+    val ids = edges.flatMap(r => Seq(0, 1).filterNot(r.isNullAt).map(r.getLong))
+      .distinct.sorted
+    def index(r: Row, i: Int): Long =
+      if (r.isNullAt(i)) ids.length else java.util.Arrays.binarySearch(ids, r.getLong(i))
+    // (key index, neighbour index) packed into one long: sorting orders
+    // by key, then neighbour, and distinct drops duplicate edges.
+    val packed = edges.map(r => index(r, key) << 32 | index(r, 1 - key)).distinct.sorted
+    val offsets = new Array[Int](ids.length + 2)
+    packed.foreach(p => offsets((p >>> 32).toInt + 1) += 1)
+    for (i <- 1 until offsets.length) offsets(i) += offsets(i - 1)
+    new Adjacency(ids, offsets, packed.map(_.toInt))
+  }
+
+  private def forestViolation(op: String) = new IllegalStateException(
+    s"$op(uniquePaths = true) requires a tree/forest edge set, but some src " +
+      "has more than one parent edge — rerun with uniquePaths = false")
+
+  /** The `broadcastStep = true` walk behind both closures. ONE job
+    * collects the (src, dst) edges as longs (integral ids compare equal
+    * across int and long columns after the cast); `strict &&
+    * uniquePaths` checks the collected rows for a forest; the edges go
+    * out as successor lists, or as predecessor lists when `targets` is
+    * given. The walks then run inside the tasks that scan the start
+    * set — every node index for the closure (a range scan, so the null
+    * id can start a walk too), the distinct targets for [[reachableTo]]
+    * — and the result is a lazy frame with the input's column types. */
+  private def broadcastWalk(raw: DataFrame, targets: Option[DataFrame], op: String,
+                            uniquePaths: Boolean, strict: Boolean): DataFrame = {
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    for (f <- raw.schema.fields ++ targets.map(_.schema("dst")) if !integral.contains(f.dataType))
+      throw new IllegalArgumentException(s"$op(broadcastStep = true) walks integral " +
+        s"node ids, but `${f.name}` is ${f.dataType.simpleString}")
+    val rows = raw.select(col("src").cast(LongType), col("dst").cast(LongType)).collect()
+    // The semi-naive path's groupBy("src").count() > 1 on the raw
+    // edges: duplicate rows and a repeated null src count too.
+    if (uniquePaths && strict && rows.map(_.get(0)).distinct.length < rows.length)
+      throw forestViolation(op)
+    val backward = targets.isDefined
+    val spark = raw.sparkSession
+    val adj = spark.sparkContext.broadcast(adjacency(rows, if (backward) 1 else 0))
+    val nodes = adj.value.ids.length + 1 // the null id's index included
+    val starts = targets.fold(
+      spark.range(0, nodes, 1, math.min(nodes, spark.sparkContext.defaultParallelism)).toDF())(
+      _.select(col("dst").cast(LongType)).distinct())
+    // The walks emit longs; the final projection restores the input's
+    // column types (exact: every id came from that column).
+    starts.mapPartitions(_.filterNot(_.isNullAt(0)).flatMap { r =>
+      val a = adj.value
+      val s = if (backward) a.indexOf(r.getLong(0)) else r.getLong(0).toInt
+      (if (s < 0) Nil else a.reach(s)).iterator
+        .map(v => if (backward) Row(a.id(v), a.id(s)) else Row(a.id(s), a.id(v)))
+    })(Encoders.row(StructType(raw.schema.map(_.copy(dataType = LongType)))))
+      .select(raw.schema.map(f => col(f.name).cast(f.dataType)): _*)
+  }
+
+  /** The semi-naive path's edge cut: distinct unless `uniquePaths`,
+    * eager, and under `uniquePaths && strict` checked for a forest
+    * (freed before the throw, so a catch-and-retry serving loop does
+    * not leak an |E|-sized block set per attempt). */
+  private def edgeCut(raw: DataFrame, op: String, uniquePaths: Boolean,
+                      strict: Boolean): DataFrame = {
+    val e = (if (uniquePaths) raw else raw.distinct()).cut()
+    // Edges run child → parent; duplicate paths require some node
+    // with MORE THAN ONE OUTGOING edge (two parents). Multiple edges
+    // INTO a node are just siblings — legal in any forest.
+    if (uniquePaths && strict &&
+        e.groupBy("src").count().filter(col("count") > 1).limit(1).count() > 0) {
+      e.uncut()
+      throw forestViolation(op)
     }
-    val (seed, step) = strideHops(base, stride, dedup = !uniquePaths)
-    // stride > 1: seed/step supersede the base edge cut (stride == 1
-    // they ARE base — keep it, it is increments(0)), but ALL of them
-    // are lazy now, so base's uncut waits until the loop's first
-    // counted job has materialized the chain (post-loop, below) —
-    // the cutLazy ordering contract. Holding the dim-sized (stride
-    // cost contract) edge cut for the loop's duration is noise, not
-    // storage pressure.
-    // Rename once so the iterated self-join never has ambiguous columns.
-    val hop0 = step.select(col("src").as("h_src"), col("dst").as("h_dst"))
-    val hop = if (broadcastStep) broadcast(hop0) else hop0
+    e
+  }
+
+  /** Semi-naive rounds from `seed`: `hop` extends the last round's new
+    * pairs by one edge, and each round's novel pairs take a lazy
+    * counted cut (the emptiness scalar rides the cut's materializing
+    * job, see Checkpoints.cutEval). Returns the union of seed and the
+    * increments. Stops when a round finds nothing new, or after
+    * `maxIter` rounds with a warning — or, under `strict`, an
+    * `IllegalStateException` after freeing every cut the walk made
+    * (`edges` included): nothing is returned, and a serving loop that
+    * catches and retries must not accumulate rounds × |frame| storage. */
+  private def rounds(op: String, seed: DataFrame, edges: DataFrame, maxIter: Int,
+                     uniquePaths: Boolean, strict: Boolean)
+                    (hop: DataFrame => DataFrame): DataFrame = {
     val increments = scala.collection.mutable.ArrayBuffer[DataFrame](seed)
     var frontier = seed
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      val grown = frontier
-        .join(hop, frontier("dst") === col("h_src"))
-        .select(frontier("src"), col("h_dst").as("dst"))
-      // Lazy counted cut: the emptiness scalar rides the cut's own
-      // materializing job (see Checkpoints.cutEval — the eager
-      // cut + isEmpty pair cost a second job every round).
+      val grown = hop(frontier)
       val (novel, n) = Checkpoints.cutCount(
         if (uniquePaths) grown
         else grown.distinct()
@@ -213,30 +199,69 @@ object Graph {
       }
     }
     if (!done) {
-      val msg = s"transitiveClosure stopped at maxIter = $maxIter with a non-empty " +
-        "frontier — the returned closure is incomplete (deeper chains, or a cycle " +
-        "under uniquePaths = true); raise maxIter"
+      val msg = s"$op stopped at maxIter = $maxIter with a non-empty frontier — " +
+        "the result is incomplete (deeper chains, or a cycle under uniquePaths = " +
+        "true); raise maxIter"
       if (strict) {
-        // Nothing is returned on the strict path, so EVERY cut this
-        // call made is dead — free them, or a serving loop that
-        // catches and retries accumulates exactly the rounds×|frame|
-        // storage the uncut contract exists to bound (double-free of
-        // the stride==1 seed/step alias is a harmless no-op; all are
-        // materialized — maxIter rounds ran to get here).
         increments.foreach(Checkpoints.uncut)
-        step.uncut()
-        if (stride > 1) base.uncut()
+        edges.uncut()
         throw new IllegalStateException(msg)
       } else log.warn(msg)
     }
-    // stride > 1: the k-hop step set fed only the (now-cut) rounds,
-    // and the base edge cut fed only seed/step; the returned union
-    // holds seed + novels, never step or base. stride == 1 step IS
-    // increments(0) — live. Guarded on a round having run (it always
-    // has for maxIter >= 1): unpersisting a never-materialized lazy
-    // cut would strip the storage level its checkpoint needs.
-    if (stride > 1 && (done || iter > 0)) { base.uncut(); step.uncut() }
     unionAll(increments.toSeq)
+  }
+
+  /** Transitive closure of `edges` (columns `src`, `dst`): every pair
+    * (a, b) with a path a → … → b of length ≥ 1, as a set; (a, a)
+    * appears iff a lies on a cycle.
+    *
+    * `broadcastStep = true` declares the edge set dimension-sized (a
+    * type taxonomy — the b1/b4/b5/b6 family's shape; at 100 TB the
+    * CLOSURE grows with the corpus but the taxonomy stays a dim). The
+    * edges are collected in one job and broadcast as successor lists,
+    * and a breadth-first walk from every source node runs inside the
+    * tasks of a range scan over those nodes. The result is a lazy frame
+    * that recomputes the walks on every scan: no rounds, no cuts, and
+    * `maxIter` is ignored because the walk always completes, cycles
+    * included. Ids must be integral (byte, short, int or long), or an
+    * `IllegalArgumentException` is thrown; the output keeps the input's
+    * `src`/`dst` types, and a null endpoint yields the rows the join
+    * path yields (it is emitted, never matched). Default OFF: a general
+    * edge set (d7's pair graphs) can be corpus-sized, where collecting
+    * it would OOM the driver.
+    *
+    * `broadcastStep = false` iterates semi-naively and terminates when
+    * a round yields no new pairs, or after `maxIter` rounds (a cycle
+    * guard for non-DAG inputs; the closure itself is cycle-safe because
+    * known pairs are anti-joined away each round). Hitting `maxIter`
+    * with a non-empty frontier means the closure is INCOMPLETE: a
+    * warning is logged, or an `IllegalStateException` thrown when
+    * `strict = true`.
+    *
+    * `uniquePaths = true` asserts every reachable pair has exactly one
+    * path (PRECONDITION: the edge set is a tree/forest — every node has
+    * at most one parent, e.g. a `subclass_of` taxonomy; on the
+    * semi-naive path violating it yields duplicate pairs and, on cyclic
+    * inputs, non-termination until `maxIter`). Then no pair can be
+    * rediscovered, so the per-round `distinct` + anti-join (two extra
+    * shuffles) are skipped and each round is a single join. `strict =
+    * true` additionally verifies the precondition up front (one cheap
+    * aggregation; on the broadcast path a check of the collected edges,
+    * no extra job).
+    */
+  def transitiveClosure(edges: DataFrame, maxIter: Int = 30,
+                        uniquePaths: Boolean = false,
+                        strict: Boolean = false,
+                        broadcastStep: Boolean = false): DataFrame = {
+    val raw = edges.select(col("src"), col("dst"))
+    if (broadcastStep) return broadcastWalk(raw, None, "transitiveClosure", uniquePaths, strict)
+    val base = edgeCut(raw, "transitiveClosure", uniquePaths, strict)
+    // Rename once so the iterated self-join never has ambiguous columns.
+    val hop = base.select(col("src").as("h_src"), col("dst").as("h_dst"))
+    rounds("transitiveClosure", base, base, maxIter, uniquePaths, strict) { frontier =>
+      frontier.join(hop, frontier("dst") === col("h_src"))
+        .select(frontier("src"), col("h_dst").as("dst"))
+    }
   }
 
   /** Transitive closure by pointer doubling: after round k the result
@@ -291,7 +316,7 @@ object Graph {
   }
 
   /** Reachability restricted to a target set: all (src, dst) with dst
-    * ∈ `targets` and a path src →* dst — semi-naive BFS growing
+    * ∈ `targets` and a path src → … → dst of length ≥ 1, grown
     * BACKWARD from the targets, so work is proportional to the
     * targets' ancestor cone, never the full closure. This is the
     * 100 TB shape of the reference's validation (filter_articles2.py
@@ -301,115 +326,47 @@ object Graph {
     *
     * `targets` must have a single column named `dst`.
     *
-    * `uniquePaths = true` — same precondition and payoff as
-    * [[transitiveClosure]]: on a tree/forest edge set no (src, dst)
-    * pair can be rediscovered, so each round drops the dedup
-    * `distinct` + anti-join (two shuffles) and is a single join.
-    * Violating the precondition yields DUPLICATE pairs (which inflate
-    * any downstream join fan-out); `strict = true` verifies it up
-    * front and turns the maxIter warning into an exception.
+    * `broadcastStep = true` carries [[transitiveClosure]]'s contract
+    * (a dimension-sized edge set, integral ids, one collect job,
+    * `maxIter` ignored): the edges go out as predecessor lists and one
+    * backward walk per distinct target runs inside the tasks that scan
+    * the target set. The result is a lazy frame over `targets` — it is
+    * not a cut, so do not [[Checkpoints.uncut]] it.
     *
-    * `stride > 1` caveat: the k-hop sets are precomposed over the
-    * WHOLE edge set (see [[strideHops]]) — O(|E| · stride) up-front
-    * work that is NOT cone-proportional. Use stride when the edge set
-    * is dimension-sized relative to the members being validated (a
-    * type taxonomy); keep stride = 1 when the edge set is huge and
-    * the target cone small, where cone-proportionality is the point.
-    * `broadcastStep` carries [[transitiveClosure]]'s contract: opt in
-    * exactly when the edge set is dim-sized (the same condition that
-    * justifies stride), and each round becomes a map-side probe of
-    * the frontier's blocks instead of a two-exchange shuffle join.
+    * `broadcastStep = false` runs semi-naive rounds from the targets
+    * with [[transitiveClosure]]'s `maxIter` contract. `uniquePaths =
+    * true` — same precondition and payoff as [[transitiveClosure]]: on
+    * a tree/forest edge set no (src, dst) pair can be rediscovered, so
+    * each round drops the dedup `distinct` + anti-join (two shuffles)
+    * and is a single join. Violating the precondition yields DUPLICATE
+    * pairs (which inflate any downstream join fan-out); `strict = true`
+    * verifies it up front and turns the maxIter warning into an
+    * exception.
     */
   def reachableTo(edges: DataFrame, targets: DataFrame,
                   maxIter: Int = 30,
                   uniquePaths: Boolean = false,
                   strict: Boolean = false,
-                  stride: Int = 1,
                   broadcastStep: Boolean = false): DataFrame = {
     val raw = edges.select(col("src"), col("dst"))
-    // LAZY prep chain under broadcastStep only (r16 verdict ask #2 +
-    // r17 A/B — see transitiveClosure's matching note on the
-    // get-or-compute race): the broadcast-build job serializes
-    // step → e materialization ahead of the probe stage, so every
-    // lazy first-materialization stays single-scanned; the
-    // sort-merge path keeps the eager edge cut. The superseded-cut
-    // uncuts (e, seedHops under stride > 1) move post-loop per the
-    // cutLazy ordering contract; both are dim-sized under the
-    // stride cost contract, so holding them for the loop is noise,
-    // not pressure.
-    val e0raw = if (uniquePaths) raw else raw.distinct()
-    val e = if (broadcastStep) e0raw.cutLazy() else e0raw.cut()
-    if (uniquePaths && strict) {
-      val multiParent = e.groupBy("src").count().filter(col("count") > 1).limit(1).count()
-      if (multiParent > 0) {
-        // Same leak guard as transitiveClosure: free the edge cut
-        // before the precondition throw reaches a catch-and-retry
-        // (the check's own job just materialized it).
-        e.uncut()
-        throw new IllegalStateException(
-          "reachableTo(uniquePaths = true) requires a tree/forest edge set, " +
-            "but some src has more than one outgoing edge — rerun with uniquePaths = false")
-      }
-    }
-    val (seedHops, step) = strideHops(e, stride, dedup = !uniquePaths)
-    val targetSet = targets.select(col("dst")).distinct()
-    // Pairs at distance 1..stride into the target set.
-    val seed = seedHops.join(targetSet, "dst").select(col("src"), col("dst"))
-      .cutLazy()
-    val increments = scala.collection.mutable.ArrayBuffer[DataFrame](seed)
-    // Broadcast the (dimension-sized, by the caller's declaration)
-    // step set once per round instead of shuffling frontier AND step
-    // — see transitiveClosure's broadcastStep scaladoc.
-    val stepSide0 = step.select(col("src").as("g_src"), col("dst").as("g_dst"))
-    val stepSide = if (broadcastStep) broadcast(stepSide0) else stepSide0
-    var frontier = seed
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // Walk `stride` hops backward: predecessors of the current frontier.
-      val hop = stepSide
+    if (broadcastStep) return broadcastWalk(raw, Some(targets), "reachableTo", uniquePaths, strict)
+    val e = edgeCut(raw, "reachableTo", uniquePaths, strict)
+    // Pairs at distance 1 into the target set.
+    val seed = e.join(targets.select(col("dst")).distinct(), "dst")
+      .select(col("src"), col("dst")).cutLazy()
+    val stepSide = e.select(col("src").as("g_src"), col("dst").as("g_dst"))
+    val result = rounds("reachableTo", seed, e, maxIter, uniquePaths, strict) { frontier =>
+      // One hop backward: predecessors of the current frontier.
+      stepSide
         .join(frontier.select(col("src").as("f_src"), col("dst").as("f_dst")),
               col("g_dst") === col("f_src"))
         .select(col("g_src").as("src"), col("f_dst").as("dst"))
-      // Lazy counted cut (see transitiveClosure): emptiness rides the
-      // materializing job.
-      val (grown, n) = Checkpoints.cutCount(
-        if (uniquePaths) hop
-        else hop.distinct()
-          .join(unionAll(increments.toSeq), Seq("src", "dst"), "left_anti"))
-      if (n == 0L) done = true
-      else {
-        increments += grown
-        frontier = grown
-        iter += 1
-      }
     }
-    if (!done) {
-      val msg = s"reachableTo stopped at maxIter = $maxIter with a non-empty " +
-        "frontier — the result is incomplete (deeper chains, or a cycle under " +
-        "uniquePaths = true); raise maxIter"
-      if (strict) {
-        // Strict path returns nothing: free every cut (see
-        // transitiveClosure; alias double-frees are no-ops; all
-        // materialized — maxIter rounds ran to get here).
-        increments.foreach(Checkpoints.uncut)
-        step.uncut()
-        if (stride > 1) { e.uncut(); seedHops.uncut() }
-        throw new IllegalStateException(msg)
-      } else log.warn(msg)
-    }
-    // The returned union holds seed + per-round cones; the edge/step
-    // set is done in every stride case (stride == 1: step === e ===
-    // seedHops, none of which is an increment — seed was re-cut), and
-    // under stride > 1 the deferred base-chain uncuts land here too.
-    // Guarded on a round having run (always true for maxIter >= 1):
-    // unpersisting a never-materialized lazy cut would strip the
-    // storage level its checkpoint needs.
-    if (done || iter > 0) {
-      step.uncut()
-      if (stride > 1) { e.uncut(); seedHops.uncut() }
-    }
-    unionAll(increments.toSeq)
+    // The returned union holds seed + per-round cones; the edge cut is
+    // done. Only once a round has run: freeing e before the lazy seed
+    // cut materialized would leave seed without its input.
+    if (maxIter > 0) e.uncut()
+    result
   }
 
   /** Connected components of an undirected pair set — the cluster
@@ -773,7 +730,14 @@ object Graph {
     * (ingest slices chain shallowly); `maxIter` guards with the
     * usual warn/strict contract, and the per-round emptiness check
     * is a declared scalar driver action like the closure loops
-    * above. */
+    * above.
+    *
+    * `broadcastStep = true` runs B⁺ as [[transitiveClosure]]'s
+    * broadcast walk, which COLLECTS the base relation B to the driver:
+    * B must fit there. B is not bounded by the slice alone — its
+    * prefixed segments grow with |source cone| × |slice| (every old
+    * path into a new edge's source, times the new edges) — so opt in
+    * only when that product is dimension-sized. */
   def transitiveClosureDelta(closure: DataFrame, newEdges: DataFrame,
                              maxIter: Int = 30,
                              strict: Boolean = false,
@@ -802,18 +766,14 @@ object Graph {
     val withPrefix = e0.union(pre).distinct().cut()
     val post = compose(withPrefix.hint("broadcast"), c)
     // No distinct/cut here: transitiveClosure's own base preparation
-    // distincts and checkpoints its edge input — doing it twice would
-    // pay a redundant shuffle and a second executor-storage
-    // materialization per delta call.
+    // distincts and checkpoints (or, under broadcastStep, collects)
+    // its edge input — doing it twice would pay a redundant shuffle
+    // and a second executor-storage materialization per delta call.
     val b = withPrefix.union(post)
     // B⁺ IS a transitive closure — of the slice-bounded base
-    // relation, not the edge set — so the tested semi-naive loop
-    // above computes it (frontier ∘ B rounds, per-round anti-join,
-    // same maxIter/strict contract; rounds = the longest chain of
-    // distinct new edges on one path).
-    // broadcastStep is sound here whenever the SLICE is bounded (the
-    // base relation b is slice-derived, not corpus-sized) — the
-    // delta contract's own precondition.
+    // relation, not the edge set — so the tested closure operator
+    // computes it (rounds = the longest chain of distinct new edges on
+    // one path; under broadcastStep one walk per node instead).
     val total =
       try transitiveClosure(b, maxIter = maxIter, strict = strict,
         broadcastStep = broadcastStep)
@@ -833,15 +793,17 @@ object Graph {
           throw e
       }
     // The base relation b was consumed by transitiveClosure's eager
-    // input cut; the slice and prefixed-slice cuts feeding it are dead
-    // (`total` references only the closure loop's own increments).
+    // input cut or collect; the slice and prefixed-slice cuts feeding
+    // it are dead (`total` references only the closure loop's own
+    // increments, or the broadcast walk).
     e0.uncut()
     withPrefix.uncut()
     // Drop already-known pairs without shuffling the closure — the
     // shared [[subtractKnown]] shape (closure streamed, slice-bounded
     // total on the broadcast build side). No trailing distinct:
     // transitiveClosure's result is globally distinct by construction
-    // (distinct seed + per-round anti-joined distinct increments) and
+    // (distinct seed + per-round anti-joined distinct increments, or
+    // one walk per source node) and
     // subtractKnown only removes rows — the old distinct re-shuffled
     // the whole delta per ingest cycle for nothing (r12 review).
     subtractKnown(total, c)
@@ -882,7 +844,10 @@ object Graph {
     * pinned randomized in GraphSpec against
     * [[transitiveClosureDelta]]'s full-closure answer. `maxIter` /
     * `strict` carry [[transitiveClosure]]'s contract for the chain
-    * rounds. */
+    * rounds. `broadcastStep = true` collects the base relation
+    * (new edges ∪ cone-prefixed new edges) to the driver, so it must
+    * fit there: it grows with |source cone| × |slice|, the bound
+    * [[transitiveClosureDelta]] documents. */
   def reachableToDelta(targets: DataFrame, coneToTargets: DataFrame,
                        coneToSources: DataFrame, newEdges: DataFrame,
                        maxIter: Int = 30,
@@ -902,9 +867,8 @@ object Graph {
     // source cone must stream, never shuffle).
     val base = e0.union(compose(cS, e0.hint("broadcast")))
     // Chains of (old-path? · new-edge) segments: the base relation's
-    // own transitive closure, via the tested semi-naive loop.
-    // broadcastStep: sound by the delta contract — base is
-    // slice-bounded (see transitiveClosureDelta's matching note).
+    // own transitive closure, via the tested closure operator (which
+    // cuts or, under broadcastStep, collects base before e0 is freed).
     val bPlus =
       try transitiveClosure(base, maxIter = maxIter, strict = strict,
         broadcastStep = broadcastStep)
@@ -925,11 +889,12 @@ object Graph {
     // the target cone streams; the target set is a dim by contract.
     val delta0 = bPlus.union(compose(bPlus.hint("broadcast"), cT))
       .join(tSet.hint("broadcast"), Seq("dst"), "left_semi").distinct().cut()
-    // `base` was consumed by the closure's eager input cut, and the
-    // delta0 cut just materialized every read of bPlus — free the
-    // slice cut and the chain loop's increment cuts (bPlus is a pure
-    // union of dead cuts, the [[Checkpoints.uncut]] contract's case
-    // (b)).
+    // `base` was consumed by the closure's eager input cut or collect,
+    // and the delta0 cut just materialized every read of bPlus — free
+    // the slice cut and the chain loop's increment cuts (bPlus is a
+    // pure union of dead cuts, the [[Checkpoints.uncut]] contract's
+    // case (b); the broadcast walk holds no cut, so there it frees
+    // nothing).
     e0.uncut()
     bPlus.uncut()
     // Drop already-known pairs without shuffling the cone — the

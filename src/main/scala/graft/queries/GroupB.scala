@@ -193,7 +193,7 @@ object GroupB {
     graft.sinks.ServingStore.ensure(key, inputs, version) { root =>
       graft.sinks.ModelStore.save(
         Graph.transitiveClosure(edges(s, d).filter(col("src") % 10 =!= 0),
-          uniquePaths = true, stride = 4, broadcastStep = true),
+          uniquePaths = true, broadcastStep = true),
         root + "/closure")
     }
   }
@@ -242,15 +242,13 @@ object GroupB {
 
   val queries: Map[String, Q] = Map(
     // b1: full transitive closure (the reference walks this per-member
-    // with a RocksDB DFS). The k -> k/2 hierarchy is a forest, so
-    // uniquePaths discovers each closure pair exactly once — no
-    // per-round distinct/anti-join — and stride = 4 walks four hops
-    // per round: ~4 frontier joins for the ~14-deep tree instead of
-    // 14 (pointer doubling needs similar rounds but re-distincts the
-    // ENTIRE closure each one; on a forest that's pure waste).
+    // with a RocksDB DFS). The part-key taxonomy is dimension-sized, so
+    // broadcastStep collects it once and walks every node's ancestors
+    // inside the tasks — no per-depth rounds (pointer doubling needs
+    // ~log2 14 rounds and re-distincts the ENTIRE closure each one).
+    // The k -> k/2 hierarchy is a forest, so uniquePaths is declared.
     "b1_closure_iterative" -> ((s, d) =>
-      Graph.transitiveClosure(edges(s, d), uniquePaths = true, stride = 4,
-        broadcastStep = true)),
+      Graph.transitiveClosure(edges(s, d), uniquePaths = true, broadcastStep = true)),
 
     // b4: INCREMENTAL closure maintenance — b1 without re-walking the
     // old edge set: every tenth parent link (src % 10 = 0, the
@@ -263,13 +261,14 @@ object GroupB {
     "b4_closure_incremental" -> ((s, d) => {
       val all = edges(s, d)
       // Timed.region("fit"): the existing-closure derivation is the
-      // EAGER self-containment cost (transitiveClosure cuts per
-      // round) — the bench artifact's fit_s column splits b4's wall
-      // into amortizable fit + per-cycle delta fold (b6 measures the
-      // store-backed serving regime where only the fold is paid).
+      // self-containment cost — the bench artifact's fit_s column
+      // splits b4's wall into amortizable fit + per-cycle delta fold
+      // (b6 measures the store-backed serving regime where only the
+      // fold is paid). The broadcast walk's eager part is its edge
+      // collect; the walks themselves run in the fold's scans.
       val c = graft.Timed.region("fit")(
         Graph.transitiveClosure(all.filter(col("src") % 10 =!= 0),
-          uniquePaths = true, stride = 4, broadcastStep = true))
+          uniquePaths = true, broadcastStep = true))
       val delta = Graph.transitiveClosureDelta(c,
         all.filter(col("src") % 10 === 0), strict = true,
         broadcastStep = true)
@@ -325,12 +324,11 @@ object GroupB {
       // superset tolerance lets the same frame serve as BOTH cone
       // arguments (irrelevant-endpoint pairs drop out of each join),
       // and validateReachable's (type, required) equi-join restricts
-      // it to the target cone by construction — so the stride
-      // precomposition and the backward BFS run once, not three
-      // times.
+      // it to the target cone by construction — so the edge collect
+      // runs once, not three times.
       val cone = Graph.reachableTo(oldE,
         targets.unionByName(newE.select(col("src").as("dst"))),
-        uniquePaths = true, stride = 4, broadcastStep = true)
+        uniquePaths = true, broadcastStep = true)
       val members = Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .join(Tables(s, d, "orders")
@@ -420,10 +418,10 @@ object GroupB {
               col("l_orderkey") === col("o_orderkey"))
       // Targets come from orders alone — no reason to scan the fact
       // join just to distinct ~30 values. The k -> k/2 hierarchy is a
-      // forest: uniquePaths skips the per-round dedup shuffles.
+      // dimension-sized forest: one broadcast walk per target.
       val closure = Graph.reachableTo(edges(s, d),
         Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, stride = 4, broadcastStep = true)
+        uniquePaths = true, broadcastStep = true)
       Graph.validateReachable(members, closure, "l_partkey", "required")
         .groupBy("o_orderkey")
         .agg(sum(when(col("valid"), 1L).otherwise(0L)).as("valid_cnt"),
@@ -452,7 +450,7 @@ object GroupB {
         .join(broadcast(redirects), col("l_partkey") === col("r_src"), "left")
       val closure = Graph.reachableTo(edges(s, d),
         Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, stride = 4, broadcastStep = true)
+        uniquePaths = true, broadcastStep = true)
       val v1 = Graph.validateReachable(withAlt, closure, "l_partkey", "required")
         .withColumnRenamed("valid", "valid_orig")
       Graph.validateReachable(v1, closure, "r_dst", "required")

@@ -153,7 +153,7 @@ object GroupG2 {
         .drop("o_orderkey")
       val closure = Graph.reachableTo(edges(s, d),
         Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, stride = 4, broadcastStep = true)
+        uniquePaths = true, broadcastStep = true)
       Sessions.validatedCounts(members, closure)
     }),
   )

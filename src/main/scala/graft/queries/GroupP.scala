@@ -76,11 +76,8 @@ object GroupP {
 
   val queries: Map[String, Q] = Map(
     "p1_pipeline" -> ((s, d) => {
-      // The p_partkey DIV 2 taxonomy is a forest (one parent per key),
-      // so the closure legitimately skips per-round dedup shuffles.
       Collections.build(membersOf(s, d), entitiesOf(s, d), collectionsOf(s, d),
-          typeEdgesOf(s, d), topK = 5, relations = Some(relationsOf(s, d)),
-          closureUniquePaths = true)
+          typeEdgesOf(s, d), topK = 5, relations = Some(relationsOf(s, d)))
         .select(col("collection_name"), col("stable_id"),
           col("valid_cnt"), col("invalid_cnt"),
           round(col("rank"), 6).as("rank"),

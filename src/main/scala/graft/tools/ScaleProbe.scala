@@ -267,7 +267,7 @@ object ScaleProbe {
     // copy-0 nodes — same delta cone on both sides, only the closure
     // being scanned grows.
     lazy val closure0 = Graph.transitiveClosure(edges,
-      uniquePaths = true, stride = 4, broadcastStep = true).localCheckpoint()
+      uniquePaths = true, broadcastStep = true).localCheckpoint()
     lazy val closureK = scaled(closure0, Seq("src", "dst"))
     lazy val newLeaves = edges
       .select((col("src") + lit(1_000_000_000L)).as("src"), col("dst"))
@@ -369,7 +369,7 @@ object ScaleProbe {
       .localCheckpoint()
     lazy val coneB5 = Graph.reachableTo(oldEb5,
         targetsB5.unionByName(newEb5.select(col("src").as("dst"))),
-        uniquePaths = true, stride = 4, broadcastStep = true)
+        uniquePaths = true, broadcastStep = true)
       .localCheckpoint()
     lazy val oldVb5 = Graph.validateReachable(
         Tables(spark, sfDir, "lineitem")
@@ -423,7 +423,7 @@ object ScaleProbe {
       val mem = m.select(col("l_partkey").as("t"),
         (col("l_orderkey") % 30 + 2).as("required"))
       val closure = Graph.reachableTo(edges,
-        mem.select(col("required").as("dst")), uniquePaths = true, stride = 4,
+        mem.select(col("required").as("dst")), uniquePaths = true,
         broadcastStep = true)
       Graph.validateReachable(mem, closure, "t", "required")
         .groupBy("required").agg(sum(when(col("valid"), 1L).otherwise(0L)).as("v"))
@@ -434,7 +434,7 @@ object ScaleProbe {
       Collections.build(
         m.select(col("l_orderkey").as("collection_id"),
           col("l_partkey").as("member_id"), col("l_extendedprice").as("score")),
-        entities, c, edges, topK = 5, closureUniquePaths = true)
+        entities, c, edges, topK = 5)
     // g5: two-level exact distinct (shifted user ids multiply the
     // per-window distinct-user count — the audience-grows direction).
     // The registered g10/g12 batch-mode bodies (shared GroupG2
@@ -588,8 +588,8 @@ object ScaleProbe {
       // passes alone.
       // b4: FIXED new-edge slice, K× existing closure (the
       // taxonomy-grows direction). The base relation is two
-      // broadcast-slice scans of the closure and the semi-naive
-      // rounds are B-bounded, so the ratio must stay far below K —
+      // broadcast-slice scans of the closure and the walk over it is
+      // B-bounded, so the ratio must stay far below K —
       // a closure-sized re-walk (b1's shape) would read ≈ K.
       ("b4 closure-delta",
         () => noop(Graph.transitiveClosureDelta(closure0, newLeaves,

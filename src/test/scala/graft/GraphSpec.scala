@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Graph
 import graft.sources.NTriples
+import org.apache.spark.sql.graft.SparkInternals
 
 class GraphSpec extends GraftSuite {
   private val ss = SparkTestBase.spark
@@ -52,91 +53,107 @@ class GraphSpec extends GraftSuite {
     assert(full.nonEmpty)
   }
 
-  test("stride > 1 closures equal the single-hop closure") {
+  /** Rows with nulls kept: the null-endpoint cases compare these. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+    df.collect().map(r => (r.get(0), r.get(1))).toSet
+
+  test("broadcast walk equals the semi-naive closure on chains, diamonds and cycles") {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
-    val want = pairs(Graph.transitiveClosure(chain))
-    for (k <- 2 to 4)
-      assert(pairs(Graph.transitiveClosure(chain, stride = k)) === want,
-        s"stride $k diverged on the chain")
-    // stride larger than the graph depth: seed alone covers everything.
-    assert(pairs(Graph.transitiveClosure(chain, stride = 7)) === want)
-    // forest fast path with stride
-    assert(pairs(Graph.transitiveClosure(chain, uniquePaths = true, stride = 3)) === want)
-    // diamond (multiple paths) and cycle still converge to the same set
     val diamond = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
-    assert(pairs(Graph.transitiveClosure(diamond, stride = 2)) ===
-      pairs(Graph.transitiveClosure(diamond)))
-    val cycle = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    assert(pairs(Graph.transitiveClosure(cycle, stride = 2)) ===
-      pairs(Graph.transitiveClosure(cycle)))
+    val cycle = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
+    for (edges <- Seq(chain, diamond, cycle)) {
+      val want = pairs(Graph.transitiveClosure(edges))
+      val got = Graph.transitiveClosure(edges, broadcastStep = true).as[(Long, Long)].collect()
+      assert(got.length === got.distinct.length, "the walk must emit a set")
+      assert(got.toSet === want)
+      // maxIter is ignored on the broadcast path: the walk completes.
+      assert(pairs(Graph.transitiveClosure(edges, maxIter = 1, strict = true,
+        broadcastStep = true)) === want)
+    }
+    // forest fast path: the declaration changes nothing on the walk
+    assert(pairs(Graph.transitiveClosure(chain, uniquePaths = true, broadcastStep = true)) ===
+      pairs(Graph.transitiveClosure(chain)))
+    // (t, t) iff t lies on a cycle
+    assert(pairs(Graph.transitiveClosure(cycle, broadcastStep = true)).filter(p => p._1 == p._2) ===
+      Set((1L, 1L), (2L, 2L)))
   }
 
-  test("stride reachableTo equals single-hop reachableTo (b2 shape)") {
+  test("broadcast reachableTo equals semi-naive reachableTo (b2 shape)") {
     val edges = Tables(spark, sfDir, "part")
       .filter($"p_partkey" >= 2)
       .selectExpr("p_partkey AS src", "p_partkey DIV 2 AS dst")
     val targets = spark.range(2, 32).select($"id".as("dst"))
     val want = pairs(Graph.reachableTo(edges, targets))
-    assert(pairs(Graph.reachableTo(edges, targets, stride = 4)) === want)
-    assert(pairs(Graph.reachableTo(edges, targets, uniquePaths = true, stride = 4)) === want)
+    assert(pairs(Graph.reachableTo(edges, targets, broadcastStep = true)) === want)
+    assert(pairs(Graph.reachableTo(edges, targets, uniquePaths = true, strict = true,
+      broadcastStep = true)) === want)
     assert(want.nonEmpty)
   }
 
   test("reachableTo handles cycles and disconnected targets") {
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 4L)).toDF("src", "dst")
     val targets = Seq(Tuple1(1L), Tuple1(9L)).toDF("dst")
-    assert(pairs(Graph.reachableTo(edges, targets)) ===
-      Set((2L, 1L), (1L, 1L)))
+    for (broadcastStep <- Seq(false, true))
+      assert(pairs(Graph.reachableTo(edges, targets, broadcastStep = broadcastStep)) ===
+        Set((2L, 1L), (1L, 1L)), s"broadcastStep = $broadcastStep")
   }
 
   test("strict uniquePaths accepts forests and rejects multi-parent graphs") {
     // A genuine forest: node 1 has two children — legal.
     val forest = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("src", "dst")
-    assert(pairs(Graph.transitiveClosure(forest, uniquePaths = true, strict = true)) ===
-      pairs(Graph.transitiveClosure(forest)))
-    assert(pairs(Graph.reachableTo(forest, Seq(Tuple1(1L)).toDF("dst"),
-      uniquePaths = true, strict = true)).nonEmpty)
     // Node 4 with two parents: multiple paths — must be rejected,
     // and the rejection must FREE the just-created edge cut (a
     // catch-and-retry serving loop must not leak one block set per
     // attempt — round-11 second review): the persisted-RDD map must
     // not grow across the throws. unpersist(blocking = false) removes
-    // from the map synchronously; only the block drop is async.
+    // from the map synchronously; only the block drop is async. The
+    // broadcast path checks the collected edges and cuts nothing.
     val diamond = Seq((4L, 2L), (4L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
-    val before = ss.sparkContext.getPersistentRDDs.keySet
-    intercept[IllegalStateException] {
-      Graph.transitiveClosure(diamond, uniquePaths = true, strict = true)
+    for (broadcastStep <- Seq(false, true)) {
+      assert(pairs(Graph.transitiveClosure(forest, uniquePaths = true, strict = true,
+        broadcastStep = broadcastStep)) === pairs(Graph.transitiveClosure(forest)))
+      assert(pairs(Graph.reachableTo(forest, Seq(Tuple1(1L)).toDF("dst"),
+        uniquePaths = true, strict = true, broadcastStep = broadcastStep)).nonEmpty)
+      val before = ss.sparkContext.getPersistentRDDs.keySet
+      intercept[IllegalStateException] {
+        Graph.transitiveClosure(diamond, uniquePaths = true, strict = true,
+          broadcastStep = broadcastStep)
+      }
+      intercept[IllegalStateException] {
+        Graph.reachableTo(diamond, Seq(Tuple1(1L)).toDF("dst"),
+          uniquePaths = true, strict = true, broadcastStep = broadcastStep)
+      }
+      val leaked = ss.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"strict throws leaked persisted RDDs: $leaked")
     }
-    intercept[IllegalStateException] {
-      Graph.reachableTo(diamond, Seq(Tuple1(1L)).toDF("dst"),
-        uniquePaths = true, strict = true)
-    }
-    val leaked = ss.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"strict throws leaked persisted RDDs: $leaked")
   }
 
-  test("stride closure has no duplicate rows when a shortcut edge coexists with a longer path") {
+  test("closures have no duplicate rows when a shortcut edge coexists with a longer path") {
     // (1,3) is connected at distance 1 (shortcut) AND distance 2
-    // (1→2→3): the stride-2 seed must dedup across hop distances or
-    // the pair leaks twice into the returned closure.
+    // (1→2→3): each walk must report the pair once.
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    for (stride <- Seq(2, 3)) {
-      val c = Graph.transitiveClosure(edges, stride = stride)
+    for (broadcastStep <- Seq(false, true)) {
+      val c = Graph.transitiveClosure(edges, broadcastStep = broadcastStep)
       assert(c.count() === c.distinct().count(),
-        s"stride=$stride closure must be a set")
-      val r = Graph.reachableTo(edges, Seq(Tuple1(3L)).toDF("dst"), stride = stride)
+        s"broadcastStep = $broadcastStep closure must be a set")
+      val r = Graph.reachableTo(edges, Seq(Tuple1(3L)).toDF("dst"),
+        broadcastStep = broadcastStep)
       assert(r.count() === r.distinct().count(),
-        s"stride=$stride reachableTo must be a set")
+        s"broadcastStep = $broadcastStep reachableTo must be a set")
     }
   }
 
-  test("property: closures match an in-memory BFS oracle on random DAGs, all strides") {
+  test("property: closures match an in-memory BFS oracle on random graphs, both walks") {
     val rnd = new scala.util.Random(1234)
-    for (trial <- 1 to 6) {
-      // Random DAG: edges only src > dst, so acyclic by construction;
-      // nodes 1..20, ~2 outgoing edges each (multi-parent allowed).
+    for (trial <- 1 to 8) {
+      // Odd trials: random DAGs (edges only src > dst, multi-parent
+      // allowed). Even trials: any direction, so cycles and
+      // self-loops. Nodes 1..20, ~2 outgoing edges each.
       val edgePairs = (2 to 20).flatMap { s =>
-        Seq.fill(rnd.nextInt(3))((s.toLong, (rnd.nextInt(s - 1) + 1).toLong))
+        Seq.fill(rnd.nextInt(3)) {
+          val d = if (trial % 2 == 1) rnd.nextInt(s - 1) + 1 else rnd.nextInt(20) + 1
+          (s.toLong, d.toLong)
+        }
       }.distinct
       if (edgePairs.nonEmpty) {
         // Independent oracle: BFS closure over the collected edge set.
@@ -153,24 +170,103 @@ class GraphSpec extends GraftSuite {
         val want = edgePairs.map(_._1).distinct
           .flatMap(s => reach(s).map(d => (s, d))).toSet
         val edges = edgePairs.toDF("src", "dst")
-        for (stride <- Seq(1, 2, 4)) {
-          val got = Graph.transitiveClosure(edges, stride = stride)
+        for (broadcastStep <- Seq(false, true)) {
+          val got = Graph.transitiveClosure(edges, broadcastStep = broadcastStep)
             .as[(Long, Long)].collect()
           assert(got.length === got.distinct.length,
-            s"trial $trial stride $stride: closure emitted duplicates")
-          assert(got.toSet === want, s"trial $trial stride $stride")
-          val targets = want.map(_._2).take(3)
-          if (targets.nonEmpty) {
-            val r = Graph.reachableTo(edges, targets.toSeq.toDF("dst"),
-              stride = stride).as[(Long, Long)].collect()
-            assert(r.length === r.distinct.length,
-              s"trial $trial stride $stride: reachableTo emitted duplicates")
-            assert(r.toSet === want.filter(p => targets.contains(p._2)),
-              s"trial $trial stride $stride reachableTo")
-          }
+            s"trial $trial broadcastStep $broadcastStep: closure emitted duplicates")
+          assert(got.toSet === want, s"trial $trial broadcastStep $broadcastStep")
+          val targets = want.map(_._2).take(3) + 99L // 99: no such node
+          val r = Graph.reachableTo(edges, targets.toSeq.toDF("dst"),
+            broadcastStep = broadcastStep).as[(Long, Long)].collect()
+          assert(r.length === r.distinct.length,
+            s"trial $trial broadcastStep $broadcastStep: reachableTo emitted duplicates")
+          assert(r.toSet === want.filter(p => targets.contains(p._2)),
+            s"trial $trial broadcastStep $broadcastStep reachableTo")
         }
       }
     }
+  }
+
+  test("broadcast walk: empty edge set, empty and disconnected target sets") {
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
+    for (broadcastStep <- Seq(false, true)) {
+      assert(Graph.transitiveClosure(none, broadcastStep = broadcastStep).count() === 0L)
+      assert(Graph.reachableTo(none, Seq(1L).toDF("dst"),
+        broadcastStep = broadcastStep).count() === 0L)
+      assert(Graph.reachableTo(edges, Seq.empty[Long].toDF("dst"),
+        broadcastStep = broadcastStep).count() === 0L)
+      // 1 is a source only, 9 no node at all, 8 a separate component.
+      assert(pairs(Graph.reachableTo(edges, Seq(1L, 9L, 8L, 8L).toDF("dst"),
+        broadcastStep = broadcastStep)) === Set((7L, 8L)))
+    }
+  }
+
+  test("broadcast walk: null endpoints give the join path's rows") {
+    // A null id never matches as a join key: an edge into null ends
+    // there, an edge out of null starts there, and null is never a
+    // target.
+    val edges = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(2L)),
+      (None, Some(3L)), (Some(3L), Some(1L)), (None, None), (Some(4L), Some(5L)))
+      .toDF("src", "dst")
+    val targets = Seq(Some(1L), Some(2L), None).toDF("dst")
+    assert(rows(Graph.transitiveClosure(edges, broadcastStep = true)) ===
+      rows(Graph.transitiveClosure(edges)))
+    assert(rows(Graph.reachableTo(edges, targets, broadcastStep = true)) ===
+      rows(Graph.reachableTo(edges, targets)))
+    assert(rows(Graph.reachableTo(edges, targets, broadcastStep = true))
+      .contains((null, 1L)))
+  }
+
+  test("broadcast walk keeps int src with long dst, and rejects non-integral ids") {
+    val mixed = Seq((4, 2L), (2, 1L), (5, 2L)).toDF("src", "dst")
+    val targets = Seq(1L).toDF("dst")
+    for (df <- Seq(Graph.transitiveClosure(mixed, broadcastStep = true),
+                   Graph.reachableTo(mixed, targets, broadcastStep = true)))
+      assert(df.schema.map(_.dataType) === Seq(
+        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType))
+    assert(rows(Graph.transitiveClosure(mixed, broadcastStep = true)) ===
+      rows(Graph.transitiveClosure(mixed)))
+    assert(rows(Graph.reachableTo(mixed, targets, broadcastStep = true)) ===
+      rows(Graph.reachableTo(mixed, targets)))
+    // An int target set against long ids matches by value too.
+    assert(pairs(Graph.reachableTo(Seq((2L, 1L)).toDF("src", "dst"), Seq(1).toDF("dst"),
+      broadcastStep = true)) === Set((2L, 1L)))
+    val named = Seq(("a", "b")).toDF("src", "dst")
+    intercept[IllegalArgumentException](Graph.transitiveClosure(named, broadcastStep = true))
+    intercept[IllegalArgumentException](
+      Graph.reachableTo(named, Seq("b").toDF("dst"), broadcastStep = true))
+    intercept[IllegalArgumentException](
+      Graph.reachableTo(mixed, Seq("1").toDF("dst"), broadcastStep = true))
+    intercept[IllegalArgumentException](Graph.transitiveClosure(
+      Seq((1.0, 2.0)).toDF("src", "dst"), broadcastStep = true))
+  }
+
+  test("broadcastStep walks a 40-hop chain in at most 2 Spark jobs") {
+    // One job collects the edges; the walks run inside the one job
+    // that reads the result. The semi-naive rounds run a job per hop
+    // (maxIter = 50 lets them finish the chain).
+    val chain = (1L to 40L).map(i => (i, i - 1)).toDF("src", "dst")
+    val sc = ss.sparkContext
+    def jobs(body: => Unit): Int = {
+      SparkInternals.drainListenerBus(sc)
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      try { body; SparkInternals.drainListenerBus(sc); n.get() }
+      finally sc.removeSparkListener(l)
+    }
+    val closureJobs = jobs(assert(Graph.transitiveClosure(chain, maxIter = 50,
+      broadcastStep = true).collect().length === 40 * 41 / 2))
+    assert(closureJobs <= 2, s"transitiveClosure ran $closureJobs jobs")
+    // The root as the one target: the whole chain reaches it.
+    val reachJobs = jobs(assert(Graph.reachableTo(chain, Seq(0L).toDF("dst"), maxIter = 50,
+      broadcastStep = true).collect().length === 40))
+    assert(reachJobs <= 2, s"reachableTo ran $reachJobs jobs")
   }
 
   test("redirect fallback rescues members whose redirect target reaches (b3 shape)") {
@@ -216,10 +312,10 @@ class GraphSpec extends GraftSuite {
     // be identical and the files must actually land there.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)).toDF("src", "dst")
-    val want = pairs(Graph.transitiveClosure(edges))
+    val want = pairs(Graph.transitiveClosure(edges, broadcastStep = true))
     spark.conf.set(graft.operators.Checkpoints.confKey, dir.toString)
     try {
-      assert(pairs(Graph.transitiveClosure(edges, stride = 2)) === want)
+      assert(pairs(Graph.transitiveClosure(edges)) === want)
       val cc = Graph.connectedComponents(
         Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
@@ -369,13 +465,13 @@ class GraphSpec extends GraftSuite {
       val all = (1 to 22).map(_ => (rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
         .filter { case (a, b) => a != b }.distinct
       val (oldE, newE) = all.partition(_ => rnd.nextInt(3) != 0)
-      if (oldE.nonEmpty && newE.nonEmpty) {
-        val c = Graph.transitiveClosure(oldE.toDF("src", "dst"))
+      if (oldE.nonEmpty && newE.nonEmpty) for (broadcastStep <- Seq(false, true)) {
+        val c = Graph.transitiveClosure(oldE.toDF("src", "dst"), broadcastStep = broadcastStep)
         val delta = Graph.transitiveClosureDelta(c, newE.toDF("src", "dst"),
-          strict = true)
+          strict = true, broadcastStep = broadcastStep)
         val got = pairs(c) ++ pairs(delta)
         val want = pairs(Graph.transitiveClosure(all.toDF("src", "dst")))
-        assert(got === want, s"trial $trial old=$oldE new=$newE")
+        assert(got === want, s"trial $trial old=$oldE new=$newE broadcastStep=$broadcastStep")
         assert((pairs(delta) & pairs(c)).isEmpty,
           s"trial $trial: delta repeats closure rows")
       }
@@ -475,16 +571,19 @@ class GraphSpec extends GraftSuite {
           .distinct.toDF("dst")
         val oldDf = oldE.toDF("src", "dst")
         val newDf = newE.toDF("src", "dst")
-        val coneT = Graph.reachableTo(oldDf, targets)
-        val coneS = Graph.reachableTo(oldDf,
-          newDf.select(col("src").as("dst")))
-        val got = Graph.reachableToDelta(targets, coneT, coneS, newDf)
-          .as[(Long, Long)].collect().toSet
         val want = Graph.transitiveClosureDelta(
             Graph.transitiveClosure(oldDf), newDf)
           .join(targets, Seq("dst"), "left_semi")
           .select("src", "dst").as[(Long, Long)].collect().toSet
-        assert(got === want, s"trial $trial old=$oldE new=$newE")
+        for (broadcastStep <- Seq(false, true)) {
+          val coneT = Graph.reachableTo(oldDf, targets, broadcastStep = broadcastStep)
+          val coneS = Graph.reachableTo(oldDf,
+            newDf.select(col("src").as("dst")), broadcastStep = broadcastStep)
+          val got = Graph.reachableToDelta(targets, coneT, coneS, newDf,
+              broadcastStep = broadcastStep)
+            .as[(Long, Long)].collect().toSet
+          assert(got === want, s"trial $trial old=$oldE new=$newE broadcastStep=$broadcastStep")
+        }
         // Superset tolerance: the full closure works as either cone.
         val full = Graph.transitiveClosure(oldDf)
         val got2 = Graph.reachableToDelta(targets, full, full, newDf)

@@ -142,7 +142,7 @@ class ModelStoreSpec extends GraftSuite {
       .filter(col("p_partkey") >= 2)
       .select(col("p_partkey").as("src"), expr("p_partkey DIV 2").as("dst"))
     val c = Graph.transitiveClosure(edges.filter(col("src") % 10 =!= 0),
-      uniquePaths = true, stride = 4)
+      uniquePaths = true, broadcastStep = true)
     val p = tmp("closure")
     ModelStore.save(c, p)
     val slice = edges.filter(col("src") % 10 === 0)

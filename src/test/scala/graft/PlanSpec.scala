@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 
 /** Physical-plan assertions for representative queries — the scale
   * properties SURVEY §5 promises must be visible in the plan, not just
@@ -19,16 +22,26 @@ class PlanSpec extends GraftSuite {
 
   /** Every node of the plan that ran: the final adaptive plan, through
     * query stages, reused exchanges and subqueries — never AQE's
-    * pre-adaptive "Initial Plan", which `toString` also prints. */
-  private def executedNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
-    case q: QueryStageExec => q +: executedNodes(q.plan)
-    case r: ReusedExchangeExec => r +: executedNodes(r.child)
-    case n => n +: (n.children ++ n.subqueries).flatMap(executedNodes)
-  }
+    * pre-adaptive "Initial Plan", which `toString` also prints.
+    * `intoReused = false` stops at a reused exchange, so each node that
+    * ran is listed once. */
+  private def executedNodes(p: SparkPlan, intoReused: Boolean = true): Seq[SparkPlan] =
+    p match {
+      case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan, intoReused)
+      case q: QueryStageExec => q +: executedNodes(q.plan, intoReused)
+      case r: ReusedExchangeExec => r +: (if (intoReused) executedNodes(r.child) else Nil)
+      case n => n +: (n.children ++ n.subqueries).flatMap(executedNodes(_, intoReused))
+    }
 
-  private def ranBnlj(p: SparkPlan): Boolean =
-    executedNodes(p).exists(_.isInstanceOf[BroadcastNestedLoopJoinExec])
+  private def ran[T <: SparkPlan](p: SparkPlan)(implicit t: ClassTag[T]): Boolean =
+    executedNodes(p).exists(t.runtimeClass.isInstance)
+
+  /** The delta pins' shape: the plan that ran broadcast a join and
+    * sort-merged none, so nothing it streams went through an exchange. */
+  private def assertBroadcastOnly(p: SparkPlan, why: String): Unit = {
+    assert(ran[BroadcastHashJoinExec](p), p)
+    assert(!ran[SortMergeJoinExec](p), s"$why\n$p")
+  }
 
   test("executed-plan walk reads the final plan, not AQE's initial plan") {
     // A filter the static planner cannot size keeps the range at its
@@ -168,13 +181,10 @@ class PlanSpec extends GraftSuite {
         s"(stats-less cuts cannot rely on AQE)\n$staticP")
     val qe = delta.queryExecution
     qe.executedPlan.execute().count()
-    // Assert on the FINAL adaptive plan only — AQE's toString keeps
-    // the pre-adaptive Initial Plan section, whose provisional SMJs
-    // are exactly what adaptivity replaces.
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"componentsDelta must never shuffle the assignment\n$p")
+    // Assert on the plan that ran (the executed-tree walk) — AQE's
+    // toString keeps the pre-adaptive Initial Plan section, whose
+    // provisional SMJs are exactly what adaptivity replaces.
+    assertBroadcastOnly(qe.executedPlan, "componentsDelta must never shuffle the assignment")
   }
 
   test("p4: ingest composition broadcasts its dims, never a cartesian product") {
@@ -188,16 +198,15 @@ class PlanSpec extends GraftSuite {
     // discipline) — the unexecuted initial plan can differ from what
     // AQE actually runs.
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(!p.contains("CartesianProduct"), p)
-    // The BNLJ is probed by walking the executed tree (the p5 test's
-    // rationale): at the tiny test SF, AQE's stage layout can print the
-    // centroid subtree behind a reused query-stage reference, dropping
-    // the literal from the final-plan section while the join still
-    // executes.
-    assert(ranBnlj(qe.executedPlan),
-      s"centroid assignment must broadcast the centroid dim\n${qe.executedPlan}")
-    assert(p.contains("BroadcastHashJoin"), p)
+    val p = qe.executedPlan
+    assert(!ran[CartesianProductExec](p), p)
+    // The walk reaches the BNLJ (the p5 test's rationale): at the tiny
+    // test SF, AQE's stage layout can print the centroid subtree behind
+    // a reused query-stage reference, dropping the literal from the
+    // final-plan section while the join still executes.
+    assert(ran[BroadcastNestedLoopJoinExec](p),
+      s"centroid assignment must broadcast the centroid dim\n$p")
+    assert(ran[BroadcastHashJoinExec](p), p)
   }
 
   test("p5: the serving plan broadcasts its dims, no cartesian, confirm never shuffles the index by id") {
@@ -210,8 +219,8 @@ class PlanSpec extends GraftSuite {
     val q = SparkEntry.queries("p5_serving_ingest")(spark, sfDir)
     val qe = q.queryExecution
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(!p.contains("CartesianProduct"), p)
+    val p = qe.executedPlan
+    assert(!ran[CartesianProductExec](p), p)
     // The BNLJ is probed by walking the executed tree, not the final-
     // plan SECTION of the string: after the r18 broadcast hints, AQE's
     // stage layout at the tiny test SF prints the vector leg's centroid
@@ -219,9 +228,9 @@ class PlanSpec extends GraftSuite {
     // literal from that section while the join itself still executes
     // (it stays visible in the sf0.1 executed dumps,
     // plans/r18/p5_*_executed_after.txt).
-    assert(ranBnlj(qe.executedPlan),
-      s"centroid assignment must broadcast the centroid dim\n${qe.executedPlan}")
-    assert(p.contains("BroadcastHashJoin"), p)
+    assert(ran[BroadcastNestedLoopJoinExec](p),
+      s"centroid assignment must broadcast the centroid dim\n$p")
+    assert(ran[BroadcastHashJoinExec](p), p)
   }
 
   test("d17: the gram dim is streamed under broadcast joins, never shuffled") {
@@ -237,10 +246,7 @@ class PlanSpec extends GraftSuite {
       docs.filter(col("doc_id") % 10 === 0), "doc_id", "text", n = 3)
     val qe = delta.queryExecution
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"dupSpansAgainst must never shuffle the gram dim\n$p")
+    assertBroadcastOnly(qe.executedPlan, "dupSpansAgainst must never shuffle the gram dim")
   }
 
   test("b4: transitiveClosureDelta's delta plan never shuffles the closure") {
@@ -267,10 +273,7 @@ class PlanSpec extends GraftSuite {
       s"transitiveClosureDelta's subtraction must broadcast STATICALLY\n$staticP")
     val qe = delta.queryExecution
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"transitiveClosureDelta must never shuffle the closure\n$p")
+    assertBroadcastOnly(qe.executedPlan, "transitiveClosureDelta must never shuffle the closure")
   }
 
   test("b5: reachableToDelta's delta plan never shuffles the cones") {
@@ -299,10 +302,7 @@ class PlanSpec extends GraftSuite {
     val qe = graft.operators.Graph
       .reachableToDelta(targets, coneT, coneS, newE).queryExecution
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"reachableToDelta must never shuffle the cones\n$p")
+    assertBroadcastOnly(qe.executedPlan, "reachableToDelta must never shuffle the cones")
   }
 
   test("b5: revalidateDelta probes the verdict frame, never shuffles it") {
@@ -322,10 +322,7 @@ class PlanSpec extends GraftSuite {
     val qe = graft.operators.Graph.revalidateDelta(v, delta, "typ", "target")
       .queryExecution
     qe.executedPlan.execute().count()
-    val p = qe.executedPlan.toString.split("Initial Plan")(0)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"revalidateDelta must never shuffle the verdict frame\n$p")
+    assertBroadcastOnly(qe.executedPlan, "revalidateDelta must never shuffle the verdict frame")
   }
 
   test("a21: asof join costs exactly its two keyed shuffles, filters pushed") {
@@ -631,13 +628,13 @@ class PlanSpec extends GraftSuite {
       qe.executedPlan.execute().count()
       // AdaptiveSparkPlanExec prints BOTH "Final Plan" and "Initial
       // Plan" sections once they diverge; the conversion under test
-      // GUARANTEES they diverge here, so the asserts must only see
-      // the final section.
-      val p = qe.executedPlan.toString.split("Initial Plan")(0)
-      assert("BroadcastHashJoin [^\n]*LeftAnti".r.findFirstIn(p).isDefined,
-        s"over-cap anti join must broadcast\n$p")
-      assert(!"SortMergeJoin [^\n]*LeftAnti".r.findFirstIn(p).isDefined,
-        s"edge set must not shuffle for the dfCap cut\n$p")
+      // GUARANTEES they diverge here, so the asserts walk the plan
+      // that ran.
+      val nodes = executedNodes(qe.executedPlan)
+      assert(nodes.exists { case j: BroadcastHashJoinExec => j.joinType == LeftAnti; case _ => false },
+        s"over-cap anti join must broadcast\n${qe.executedPlan}")
+      assert(!nodes.exists { case j: SortMergeJoinExec => j.joinType == LeftAnti; case _ => false },
+        s"edge set must not shuffle for the dfCap cut\n${qe.executedPlan}")
     } finally saved.foreach { case (k, v) =>
       v.fold(c.unset(k))(c.set(k, _))
     }
@@ -772,25 +769,28 @@ class PlanSpec extends GraftSuite {
     // segmented frame has ONE consumer. A second part scan would
     // betray a reintroduced branch duplication (the rejected
     // join-back form re-ran the DP once per branch plus once in a
-    // pushed-down join condition). Count inside the FINAL adaptive
-    // plan only — the toString repeats every scan in the
+    // pushed-down join condition). Count the nodes that RAN, each
+    // once — the toString repeats every scan in the
     // "== Initial Plan ==" section.
-    val finalP = p.split("== Initial Plan ==")(0)
+    val ranOnce = executedNodes(qe.executedPlan, intoReused = false)
+    def line(n: SparkPlan) = n.simpleString(Int.MaxValue)
     // Match the exact path token ScanAudit uses ("/part.parquet"):
     // a bare contains("part") also matches partsupp scans or any
     // path segment containing "part", so the pin could pass/fail
     // for the wrong reason if the plan or test-data path changed.
-    val partScans = finalP.linesIterator
-      .count(l => l.contains("FileScan parquet") && l.contains("/part.parquet"))
+    val partScans = ranOnce.count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains("/part.parquet"))
+      case _ => false
+    }
     assert(partScans == 2, // names input + the dictionary fit
       s"a41 must scan part exactly twice (names + dict fit), saw $partScans\n$p")
-    assert(finalP.linesIterator.count(_.contains("graft_segment")) == 1,
+    assert(ranOnce.count(line(_).contains("graft_segment")) == 1,
       s"graft_segment must appear in exactly one operator (single DP)\n$p")
     // The counts render must sit BELOW the explode's Generate (once
     // per collection, not once per name): the Generate's requiredChild
-    // output carries coll_counts as an attribute, so the Generate line
+    // output carries coll_counts as an attribute, so the Generate node
     // itself must not contain the render's aggregate().
-    val gen = finalP.linesIterator.find(_.contains("Generate explode"))
+    val gen = ranOnce.collectFirst { case g: GenerateExec => line(g) }
     assert(gen.isDefined, s"the rows explode is missing\n$p")
     assert(!gen.get.contains("aggregate("),
       s"the counts render must be computed below the Generate\n$p")
