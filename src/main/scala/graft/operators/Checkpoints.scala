@@ -8,8 +8,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Lineage cuts for iterative and multi-consumer intermediates.
   *
-  * Every iterative operator in this package (closures, connected
-  * components, LSH bucket sets, pair generators) materializes
+  * Every iterative operator in this package (connected components,
+  * the cycle peel, LSH bucket sets, pair generators) materializes
   * intermediates so the Catalyst plan does not grow with iteration
   * count and shared subplans execute once. One resolver picks the
   * mechanism per cut, because Spark's two checkpoint flavors fail
@@ -32,8 +32,8 @@ import org.apache.spark.storage.StorageLevel
   * switch every graft operator to reliable cuts; it is read per cut, so
   * a session can flip it between jobs.
   *
-  * `round = true` marks a per-ROUND cut of an iterative loop (closures,
-  * label propagation) and persists its local blocks DISK_ONLY instead
+  * `round = true` marks a per-ROUND cut of an iterative loop (label
+  * propagation, the cycle peel) and persists its local blocks DISK_ONLY instead
   * of localCheckpoint's MEMORY_AND_DISK. Each round supersedes the
   * last, and round blocks held in the unified storage pool churn
   * through eviction and re-serialization under co-tenant memory
@@ -103,10 +103,10 @@ private[graft] object Checkpoints {
   }
 
   /** [[cutEval]] with the action specialized to a row count — the
-    * emptiness/convergence form the closure loops consume. The count
-    * runs over `queryExecution.toRdd` (a single-stage RDD job with a
-    * driver-side sum), not `Dataset.count()` (an Aggregate plan with a
-    * one-row exchange — a second stage per round for nothing). */
+    * convergence form [[Graph.reachesCycle]]'s peel rounds consume.
+    * The count runs over `queryExecution.toRdd` (a single-stage RDD job
+    * with a driver-side sum), not `Dataset.count()` (an Aggregate plan
+    * with a one-row exchange — a second stage per round for nothing). */
   def cutCount(df: DataFrame, round: Boolean = false): (DataFrame, Long) =
     cutEval(df, round)(_.queryExecution.toRdd.count())
 

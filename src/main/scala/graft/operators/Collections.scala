@@ -283,9 +283,9 @@ object Collections {
     *  - `typeEdges`: (src, dst) subclass edges with integral type ids
     *    — reference: db2. The type taxonomy is a dimension: it is
     *    collected and broadcast once, and every required type's
-    *    ancestor cone is walked inside the tasks (the
-    *    `broadcastStep = true` path of [[Graph.reachableTo]]); it may
-    *    be a general DAG, cycles included.
+    *    ancestor cone is walked inside the tasks
+    *    ([[Graph.reachableTo]]); it may be a general DAG, cycles
+    *    included, and must fit in the driver.
     * @param relations optional (category_id, list_id) edges — the
     *   P1753/P1754 related-list relation. When present, each category
     *   with a relation is merged into its FIRST related list (smallest
@@ -378,8 +378,7 @@ object Collections {
     // the standalone validation query exploits).
     val closure = Graph.reachableTo(
       typeEdges.select(col("src"), col("dst")),
-      coll0.select(col("required_type").as("dst")),
-      broadcastStep = true)
+      coll0.select(col("required_type").as("dst")))
 
     // LEFT join to entities (r12 review, reference parity): a member
     // with no entity row cannot validate — the reference counts it

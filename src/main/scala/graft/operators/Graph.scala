@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.operators.Checkpoints.Cuttable
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,24 +10,21 @@ import org.apache.spark.sql.types._
   * scripts/filter_articles2.py `has_path_rocksdb_subclass`, which walks
   * the `subclass_of` RocksDB map one key at a time).
   *
-  * The two closures walk in one of two ways, picked by the caller's
-  * declaration of the edge set's size:
+  * The closure family ([[transitiveClosure]], [[reachableTo]] and their
+  * deltas) runs that DFS inside Spark tasks: the edge set is collected
+  * once, broadcast as a compact adjacency, and every walk runs to
+  * completion inside the tasks that scan the start nodes. One collect
+  * job, no rounds, no cuts; the result is a lazy, recomputable frame.
+  * PRECONDITION: the edge set fits in the driver (a type taxonomy — at
+  * 100 TB the closure grows with the corpus, the taxonomy stays a dim).
   *
-  *  - `broadcastStep = true` (a dimension-sized edge set, such as a
-  *    type taxonomy): the edges are collected once, broadcast as a
-  *    compact adjacency, and every walk runs to completion inside the
-  *    tasks that scan the start nodes. No rounds, no cuts: the result
-  *    is a lazy, recomputable frame.
-  *  - `broadcastStep = false` (an edge set that may be corpus-sized):
-  *    semi-naive iteration. Each round joins only the frontier (pairs
-  *    discovered last round) against the edge set, so work per round
-  *    is proportional to NEW paths, not the whole closure. Every round
-  *    is one shuffle on the join key; a [[Checkpoints]] cut truncates
-  *    lineage so the plan doesn't grow with iteration count (and AQE
-  *    re-plans each round from actual sizes). Cuts default to
-  *    `localCheckpoint`; set `spark.graft.checkpointDir` for reliable
-  *    checkpoints that survive executor loss — required on clusters
-  *    with dynamic allocation.
+  * The component and cycle operators iterate over pair sets that may
+  * be corpus-sized. Each round is one shuffle on the join key; a
+  * [[Checkpoints]] cut truncates lineage so the plan doesn't grow with
+  * iteration count (and AQE re-plans each round from actual sizes).
+  * Cuts default to `localCheckpoint`; set `spark.graft.checkpointDir`
+  * for reliable checkpoints that survive executor loss — required on
+  * clusters with dynamic allocation.
   */
 object Graph {
 
@@ -51,7 +47,7 @@ object Graph {
     * subtraction shape, shared by both delta operators. */
   private def subtractKnown(delta0: DataFrame, known: DataFrame): DataFrame = {
     // Hinted broadcasts (r18): both build sides are slice-bounded
-    // cuts whose checkpoint scans carry no statistics — without the
+    // frames whose checkpoint scans carry no statistics — without the
     // hint the static plan sort-merges, shuffling the corpus-sized
     // known frame before AQE's runtime conversion can intervene (the
     // componentsDelta rationale; the doc above already declares the
@@ -61,17 +57,10 @@ object Graph {
     delta0.join(touched.hint("broadcast"), Seq("src", "dst"), "left_anti")
   }
 
-  /** Union of per-round increments. Each increment is already
-    * checkpointed, so the union's lineage stays flat (depth 1) without
-    * ever re-materializing the accumulated result — re-checkpointing
-    * the whole closure every round would cost O(total · rounds). */
-  private def unionAll(parts: Seq[DataFrame]): DataFrame =
-    parts.reduce(_ union _)
-
   /** A collected edge set in compressed-sparse-row form, the broadcast
-    * payload of the `broadcastStep = true` walks. `ids` holds every
-    * non-null node id, sorted, and index `ids.length` stands for the
-    * null id; node i's neighbours are the node indices
+    * payload of the closure walks. `ids` holds every non-null node id,
+    * sorted, and index `ids.length` stands for the null id; node i's
+    * neighbours are the node indices
     * `nbrs(offsets(i) until offsets(i + 1))`. */
   private final class Adjacency(val ids: Array[Long], offsets: Array[Int], nbrs: Array[Int])
       extends Serializable {
@@ -109,30 +98,21 @@ object Graph {
     new Adjacency(ids, offsets, packed.map(_.toInt))
   }
 
-  private def forestViolation(op: String) = new IllegalStateException(
-    s"$op(uniquePaths = true) requires a tree/forest edge set, but some src " +
-      "has more than one parent edge — rerun with uniquePaths = false")
-
-  /** The `broadcastStep = true` walk behind both closures. ONE job
-    * collects the (src, dst) edges as longs (integral ids compare equal
-    * across int and long columns after the cast); `strict &&
-    * uniquePaths` checks the collected rows for a forest; the edges go
-    * out as successor lists, or as predecessor lists when `targets` is
-    * given. The walks then run inside the tasks that scan the start
-    * set — every node index for the closure (a range scan, so the null
-    * id can start a walk too), the distinct targets for [[reachableTo]]
-    * — and the result is a lazy frame with the input's column types. */
-  private def broadcastWalk(raw: DataFrame, targets: Option[DataFrame], op: String,
-                            uniquePaths: Boolean, strict: Boolean): DataFrame = {
+  /** The walk behind both closures. ONE job collects the (src, dst)
+    * edges as longs (integral ids compare equal across int and long
+    * columns after the cast); the edges go out as successor lists, or
+    * as predecessor lists when `targets` is given. The walks then run
+    * inside the tasks that scan the start set — every node index for
+    * the closure (a range scan, so the null id can start a walk too),
+    * the distinct targets for [[reachableTo]] — and the result is a
+    * lazy frame with the input's column types. */
+  private def broadcastWalk(edges: DataFrame, targets: Option[DataFrame], op: String): DataFrame = {
+    val raw = edges.select(col("src"), col("dst"))
     val integral = Seq(ByteType, ShortType, IntegerType, LongType)
     for (f <- raw.schema.fields ++ targets.map(_.schema("dst")) if !integral.contains(f.dataType))
-      throw new IllegalArgumentException(s"$op(broadcastStep = true) walks integral " +
-        s"node ids, but `${f.name}` is ${f.dataType.simpleString}")
+      throw new IllegalArgumentException(s"$op walks integral node ids, but " +
+        s"`${f.name}` is ${f.dataType.simpleString}")
     val rows = raw.select(col("src").cast(LongType), col("dst").cast(LongType)).collect()
-    // The semi-naive path's groupBy("src").count() > 1 on the raw
-    // edges: duplicate rows and a repeated null src count too.
-    if (uniquePaths && strict && rows.map(_.get(0)).distinct.length < rows.length)
-      throw forestViolation(op)
     val backward = targets.isDefined
     val spark = raw.sparkSession
     val adj = spark.sparkContext.broadcast(adjacency(rows, if (backward) 1 else 0))
@@ -151,169 +131,26 @@ object Graph {
       .select(raw.schema.map(f => col(f.name).cast(f.dataType)): _*)
   }
 
-  /** The semi-naive path's edge cut: distinct unless `uniquePaths`,
-    * eager, and under `uniquePaths && strict` checked for a forest
-    * (freed before the throw, so a catch-and-retry serving loop does
-    * not leak an |E|-sized block set per attempt). */
-  private def edgeCut(raw: DataFrame, op: String, uniquePaths: Boolean,
-                      strict: Boolean): DataFrame = {
-    val e = (if (uniquePaths) raw else raw.distinct()).cut()
-    // Edges run child → parent; duplicate paths require some node
-    // with MORE THAN ONE OUTGOING edge (two parents). Multiple edges
-    // INTO a node are just siblings — legal in any forest.
-    if (uniquePaths && strict &&
-        e.groupBy("src").count().filter(col("count") > 1).limit(1).count() > 0) {
-      e.uncut()
-      throw forestViolation(op)
-    }
-    e
-  }
-
-  /** Semi-naive rounds from `seed`: `hop` extends the last round's new
-    * pairs by one edge, and each round's novel pairs take a lazy
-    * counted cut (the emptiness scalar rides the cut's materializing
-    * job, see Checkpoints.cutEval). Returns the union of seed and the
-    * increments. Stops when a round finds nothing new, or after
-    * `maxIter` rounds with a warning — or, under `strict`, an
-    * `IllegalStateException` after freeing every cut the walk made
-    * (`edges` included): nothing is returned, and a serving loop that
-    * catches and retries must not accumulate rounds × |frame| storage. */
-  private def rounds(op: String, seed: DataFrame, edges: DataFrame, maxIter: Int,
-                     uniquePaths: Boolean, strict: Boolean)
-                    (hop: DataFrame => DataFrame): DataFrame = {
-    val increments = scala.collection.mutable.ArrayBuffer[DataFrame](seed)
-    var frontier = seed
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val grown = hop(frontier)
-      val (novel, n) = Checkpoints.cutCount(
-        if (uniquePaths) grown
-        else grown.distinct()
-          .join(unionAll(increments.toSeq), Seq("src", "dst"), "left_anti"))
-      if (n == 0L) done = true
-      else {
-        increments += novel
-        frontier = novel
-        iter += 1
-      }
-    }
-    if (!done) {
-      val msg = s"$op stopped at maxIter = $maxIter with a non-empty frontier — " +
-        "the result is incomplete (deeper chains, or a cycle under uniquePaths = " +
-        "true); raise maxIter"
-      if (strict) {
-        increments.foreach(Checkpoints.uncut)
-        edges.uncut()
-        throw new IllegalStateException(msg)
-      } else log.warn(msg)
-    }
-    unionAll(increments.toSeq)
-  }
-
   /** Transitive closure of `edges` (columns `src`, `dst`): every pair
-    * (a, b) with a path a → … → b of length ≥ 1, as a set; (a, a)
-    * appears iff a lies on a cycle.
+    * (a, b) with a path a → … → b of length ≥ 1, as a set with no
+    * duplicate rows; (a, a) appears iff a lies on a cycle.
     *
-    * `broadcastStep = true` declares the edge set dimension-sized (a
-    * type taxonomy — the b1/b4/b5/b6 family's shape; at 100 TB the
-    * CLOSURE grows with the corpus but the taxonomy stays a dim). The
-    * edges are collected in one job and broadcast as successor lists,
-    * and a breadth-first walk from every source node runs inside the
-    * tasks of a range scan over those nodes. The result is a lazy frame
-    * that recomputes the walks on every scan: no rounds, no cuts, and
-    * `maxIter` is ignored because the walk always completes, cycles
-    * included. Ids must be integral (byte, short, int or long), or an
+    * The edges are collected in one job and broadcast as successor
+    * lists, and a breadth-first walk from every source node runs inside
+    * the tasks of a range scan over those nodes. The result is a lazy
+    * frame that recomputes the walks on every scan; it always completes,
+    * on any graph (multi-parent nodes and cycles included). Ids must be
+    * integral (byte, short, int or long), or an
     * `IllegalArgumentException` is thrown; the output keeps the input's
-    * `src`/`dst` types, and a null endpoint yields the rows the join
-    * path yields (it is emitted, never matched). Default OFF: a general
-    * edge set (d7's pair graphs) can be corpus-sized, where collecting
-    * it would OOM the driver.
+    * `src`/`dst` types. A null endpoint is emitted but never matched:
+    * an edge into null ends there, an edge out of null starts there.
     *
-    * `broadcastStep = false` iterates semi-naively and terminates when
-    * a round yields no new pairs, or after `maxIter` rounds (a cycle
-    * guard for non-DAG inputs; the closure itself is cycle-safe because
-    * known pairs are anti-joined away each round). Hitting `maxIter`
-    * with a non-empty frontier means the closure is INCOMPLETE: a
-    * warning is logged, or an `IllegalStateException` thrown when
-    * `strict = true`.
-    *
-    * `uniquePaths = true` asserts every reachable pair has exactly one
-    * path (PRECONDITION: the edge set is a tree/forest — every node has
-    * at most one parent, e.g. a `subclass_of` taxonomy; on the
-    * semi-naive path violating it yields duplicate pairs and, on cyclic
-    * inputs, non-termination until `maxIter`). Then no pair can be
-    * rediscovered, so the per-round `distinct` + anti-join (two extra
-    * shuffles) are skipped and each round is a single join. `strict =
-    * true` additionally verifies the precondition up front (one cheap
-    * aggregation; on the broadcast path a check of the collected edges,
-    * no extra job).
+    * PRECONDITION: the edge set fits in the driver (the b1/b4/b5/b6
+    * family's type taxonomy). A general edge set that may be
+    * corpus-sized (d7's pair graphs) is not a closure input.
     */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 30,
-                        uniquePaths: Boolean = false,
-                        strict: Boolean = false,
-                        broadcastStep: Boolean = false): DataFrame = {
-    val raw = edges.select(col("src"), col("dst"))
-    if (broadcastStep) return broadcastWalk(raw, None, "transitiveClosure", uniquePaths, strict)
-    val base = edgeCut(raw, "transitiveClosure", uniquePaths, strict)
-    // Rename once so the iterated self-join never has ambiguous columns.
-    val hop = base.select(col("src").as("h_src"), col("dst").as("h_dst"))
-    rounds("transitiveClosure", base, base, maxIter, uniquePaths, strict) { frontier =>
-      frontier.join(hop, frontier("dst") === col("h_src"))
-        .select(frontier("src"), col("h_dst").as("dst"))
-    }
-  }
-
-  /** Transitive closure by pointer doubling: after round k the result
-    * holds every pair connected by a path of length ≤ 2^k, so a
-    * hierarchy of depth d closes in ⌈log2 d⌉ rounds instead of d —
-    * the right variant for deep chains (each round is one self-join +
-    * distinct). Trade-off vs semi-naive: a pair at distance n is
-    * re-derived once per split point, so on shallow-but-bushy graphs
-    * the duplicate volume (pruned by the per-round distinct) can exceed
-    * the frontier approach; pick per workload.
-    */
-  def transitiveClosureDoubling(edges: DataFrame, maxIter: Int = 20,
-                                strict: Boolean = false): DataFrame = {
-    // Per-round closure frames: DISK_ONLY counted cuts (see
-    // connectedComponents for the level, Checkpoints.cutEval for the
-    // one-job convergence scalar).
-    var (closure, size) = Checkpoints.cutCount(
-      edges.select(col("src"), col("dst")).distinct(), round = true)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val left = closure.select(col("src"), col("dst").as("mid"))
-      val right = closure.select(col("src").as("mid"), col("dst"))
-      val doubled = left.join(right, "mid").select(col("src"), col("dst"))
-      val (grown, next) = Checkpoints.cutCount(
-        closure.union(doubled).distinct(), round = true)
-      // The superseded round's closure-sized blocks are dead once the
-      // grown cut materializes (the counted cut's action already ran)
-      // — without this the doubling loop holds rounds × |closure|
-      // live storage (the connectedComponents pressure failure mode,
-      // at closure scale).
-      closure.uncut()
-      closure = grown
-      if (next == size) done = true
-      size = next
-      iter += 1
-    }
-    // Same warn/strict non-convergence contract as every sibling
-    // iterative operator (r12 review: this one returned the truncated
-    // closure silently) — depth > 2^maxIter is an input, not a bug,
-    // but the caller must hear about it.
-    if (!done) {
-      val msg = s"transitiveClosureDoubling stopped at maxIter = $maxIter " +
-        "still growing — the returned closure is incomplete (depth > " +
-        s"2^$maxIter); raise maxIter"
-      if (strict) {
-        closure.uncut()
-        throw new IllegalStateException(msg)
-      } else log.warn(msg)
-    }
-    closure
-  }
+  def transitiveClosure(edges: DataFrame): DataFrame =
+    broadcastWalk(edges, None, "transitiveClosure")
 
   /** Reachability restricted to a target set: all (src, dst) with dst
     * ∈ `targets` and a path src → … → dst of length ≥ 1, grown
@@ -326,48 +163,16 @@ object Graph {
     *
     * `targets` must have a single column named `dst`.
     *
-    * `broadcastStep = true` carries [[transitiveClosure]]'s contract
-    * (a dimension-sized edge set, integral ids, one collect job,
-    * `maxIter` ignored): the edges go out as predecessor lists and one
-    * backward walk per distinct target runs inside the tasks that scan
-    * the target set. The result is a lazy frame over `targets` — it is
-    * not a cut, so do not [[Checkpoints.uncut]] it.
-    *
-    * `broadcastStep = false` runs semi-naive rounds from the targets
-    * with [[transitiveClosure]]'s `maxIter` contract. `uniquePaths =
-    * true` — same precondition and payoff as [[transitiveClosure]]: on
-    * a tree/forest edge set no (src, dst) pair can be rediscovered, so
-    * each round drops the dedup `distinct` + anti-join (two shuffles)
-    * and is a single join. Violating the precondition yields DUPLICATE
-    * pairs (which inflate any downstream join fan-out); `strict = true`
-    * verifies it up front and turns the maxIter warning into an
-    * exception.
+    * Carries [[transitiveClosure]]'s contract (integral ids, one
+    * collect job, a set on any graph, the edge set fits in the
+    * driver): the edges go out as predecessor lists and one backward
+    * walk per distinct target runs inside the tasks that scan the
+    * target set. A null target matches nothing. The result is a lazy
+    * frame over `targets` — it is not a cut, so do not
+    * [[Checkpoints.uncut]] it.
     */
-  def reachableTo(edges: DataFrame, targets: DataFrame,
-                  maxIter: Int = 30,
-                  uniquePaths: Boolean = false,
-                  strict: Boolean = false,
-                  broadcastStep: Boolean = false): DataFrame = {
-    val raw = edges.select(col("src"), col("dst"))
-    if (broadcastStep) return broadcastWalk(raw, Some(targets), "reachableTo", uniquePaths, strict)
-    val e = edgeCut(raw, "reachableTo", uniquePaths, strict)
-    // Pairs at distance 1 into the target set.
-    val seed = e.join(targets.select(col("dst")).distinct(), "dst")
-      .select(col("src"), col("dst")).cutLazy()
-    val stepSide = e.select(col("src").as("g_src"), col("dst").as("g_dst"))
-    val result = rounds("reachableTo", seed, e, maxIter, uniquePaths, strict) { frontier =>
-      // One hop backward: predecessors of the current frontier.
-      stepSide
-        .join(frontier.select(col("src").as("f_src"), col("dst").as("f_dst")),
-              col("g_dst") === col("f_src"))
-        .select(col("g_src").as("src"), col("f_dst").as("dst"))
-    }
-    // The returned union holds seed + per-round cones; the edge cut is
-    // done. Only once a round has run: freeing e before the lazy seed
-    // cut materialized would leave seed without its input.
-    if (maxIter > 0) e.uncut()
-    result
-  }
+  def reachableTo(edges: DataFrame, targets: DataFrame): DataFrame =
+    broadcastWalk(edges, Some(targets), "reachableTo")
 
   /** Connected components of an undirected pair set — the cluster
     * resolution step after any near-dup pair generator (exact, n-gram
@@ -388,7 +193,8 @@ object Graph {
     * strictly monotone until fixpoint; no per-row diff join. Round
     * count = cluster diameter, which for near-dup clusters is small
     * (dup groups are near-cliques); `maxIter` guards adversarial
-    * chains with the same warn/strict contract as the closures above.
+    * chains: stopping there unconverged logs a warning, or throws an
+    * `IllegalStateException` under `strict = true`.
     *
     * `shortcut = true` (r11) adds a POINTER-JUMPING pass after each
     * pull — comp ← comp's own comp, the Shiloach–Vishkin hook+
@@ -724,37 +530,24 @@ object Graph {
     * edges with optional closure prefix/suffix, two joins where the
     * closure is SCANNED against the broadcast slice, never shuffled
     * (the componentsDelta doctrine) — and chained-new-edge paths are
-    * B's own transitive closure, reached by semi-naive iteration on
-    * frontiers bounded by B (slice-cone-sized, never the corpus).
-    * Rounds = the longest chain of DISTINCT new edges on one path
-    * (ingest slices chain shallowly); `maxIter` guards with the
-    * usual warn/strict contract, and the per-round emptiness check
-    * is a declared scalar driver action like the closure loops
-    * above.
+    * B's own transitive closure, walked by [[transitiveClosure]].
     *
-    * `broadcastStep = true` runs B⁺ as [[transitiveClosure]]'s
-    * broadcast walk, which COLLECTS the base relation B to the driver:
-    * B must fit there. B is not bounded by the slice alone — its
-    * prefixed segments grow with |source cone| × |slice| (every old
-    * path into a new edge's source, times the new edges) — so opt in
-    * only when that product is dimension-sized. */
-  def transitiveClosureDelta(closure: DataFrame, newEdges: DataFrame,
-                             maxIter: Int = 30,
-                             strict: Boolean = false,
-                             broadcastStep: Boolean = false): DataFrame = {
+    * PRECONDITION: that walk COLLECTS B to the driver, so B must fit
+    * there. B is not bounded by the slice alone — its prefixed
+    * segments grow with |source cone| × |slice| (every old path into a
+    * new edge's source, times the new edges). */
+  def transitiveClosureDelta(closure: DataFrame, newEdges: DataFrame): DataFrame = {
     // The closure is the caller's SERVING state (a transitiveClosure
-    // result — flat checkpointed lineage — or a ModelStore scan):
-    // never cut it (a localCheckpoint would materialize the corpus-
-    // sized frame into executor storage per call) and never shuffle
-    // it — it appears only as the streamed side of broadcast-slice
-    // joins, three scans total (PlanSpec pins no-SortMergeJoin, the
-    // componentsDelta doctrine).
+    // result or a ModelStore scan): never cut it (a localCheckpoint
+    // would materialize the corpus-sized frame into executor storage
+    // per call) and never shuffle it — it appears only as the streamed
+    // side of broadcast-slice joins, three scans total (PlanSpec pins
+    // no-SortMergeJoin, the componentsDelta doctrine).
     val c = closure.select(col("src"), col("dst"))
     // EAGER slice cuts (r17 A/B): e0 is scanned twice inside
     // withPrefix (the union with its own composed prefix) and
     // withPrefix twice inside b — self-union shapes double-compute
-    // under the get-or-compute race when cut lazily (see
-    // transitiveClosure's note).
+    // under Spark's get-or-compute race when cut lazily.
     val e0 = newEdges.select(col("src"), col("dst")).distinct().cut()
     // Hinted broadcasts on the slice sides of both cone compositions
     // (r18, the componentsDelta rationale): the slice cuts carry no
@@ -765,47 +558,21 @@ object Graph {
     val pre = compose(c, e0.hint("broadcast"))
     val withPrefix = e0.union(pre).distinct().cut()
     val post = compose(withPrefix.hint("broadcast"), c)
-    // No distinct/cut here: transitiveClosure's own base preparation
-    // distincts and checkpoints (or, under broadcastStep, collects)
-    // its edge input — doing it twice would pay a redundant shuffle
-    // and a second executor-storage materialization per delta call.
+    // No distinct/cut here: transitiveClosure collects its edge input.
     val b = withPrefix.union(post)
     // B⁺ IS a transitive closure — of the slice-bounded base
     // relation, not the edge set — so the tested closure operator
-    // computes it (rounds = the longest chain of distinct new edges on
-    // one path; under broadcastStep one walk per node instead).
+    // computes it. Its collect job is the slice cuts' last read, so
+    // they are freed on the way out, on failure too (an executor-loss
+    // SparkException must not leak them into a catch-and-retry serving
+    // loop — the componentsDelta `failing` contract).
     val total =
-      try transitiveClosure(b, maxIter = maxIter, strict = strict,
-        broadcastStep = broadcastStep)
-      catch {
-        case e: IllegalStateException =>
-          // The inner strict path freed its own cuts; ours die here.
-          e0.uncut(); withPrefix.uncut()
-          throw new IllegalStateException(
-            s"transitiveClosureDelta: ${e.getMessage}", e)
-        // Free-before-rethrow on ANY other failure too (r12 review):
-        // an executor-loss SparkException out of the inner loop must
-        // not leak the slice cuts into a catch-and-retry serving loop
-        // (the componentsDelta `failing` contract). Rethrown, never
-        // absorbed.
-        case e: Throwable =>
-          e0.uncut(); withPrefix.uncut()
-          throw e
-      }
-    // The base relation b was consumed by transitiveClosure's eager
-    // input cut or collect; the slice and prefixed-slice cuts feeding
-    // it are dead (`total` references only the closure loop's own
-    // increments, or the broadcast walk).
-    e0.uncut()
-    withPrefix.uncut()
+      try transitiveClosure(b)
+      finally { e0.uncut(); withPrefix.uncut() }
     // Drop already-known pairs without shuffling the closure — the
     // shared [[subtractKnown]] shape (closure streamed, slice-bounded
-    // total on the broadcast build side). No trailing distinct:
-    // transitiveClosure's result is globally distinct by construction
-    // (distinct seed + per-round anti-joined distinct increments, or
-    // one walk per source node) and
-    // subtractKnown only removes rows — the old distinct re-shuffled
-    // the whole delta per ingest cycle for nothing (r12 review).
+    // total on the broadcast build side). No trailing distinct: the
+    // walk emits a set and subtractKnown only removes rows.
     subtractKnown(total, c)
   }
 
@@ -825,12 +592,11 @@ object Graph {
     * slice-shaped cone); the final old segment ends at a target, so
     * it lives in `coneToTargets` = old-paths into `targets` (b2's
     * validation cone, typically already in hand). The base relation
-    * (new edges with optional cone prefix) chains by the tested
-    * semi-naive loop — frontiers bounded by the base, rounds = the
-    * longest chain of distinct new edges — and the final suffix/
-    * target restriction and known-pair subtraction are broadcast-
-    * slice joins (the cones are only ever scanned or semi-probed,
-    * never shuffled whole).
+    * (new edges with optional cone prefix) chains by
+    * [[transitiveClosure]]'s walk, and the final suffix/target
+    * restriction and known-pair subtraction are broadcast-slice joins
+    * (the cones are only ever scanned or semi-probed, never shuffled
+    * whole).
     *
     * PRECONDITION (completeness, not exactness): `coneToSources`
     * must contain EVERY old path ending at a `newEdges` source, and
@@ -842,23 +608,19 @@ object Graph {
     * absent from `coneToTargets`):
     * coneToTargets ∪ delta ≡ reachableTo(old ∪ new, targets) —
     * pinned randomized in GraphSpec against
-    * [[transitiveClosureDelta]]'s full-closure answer. `maxIter` /
-    * `strict` carry [[transitiveClosure]]'s contract for the chain
-    * rounds. `broadcastStep = true` collects the base relation
-    * (new edges ∪ cone-prefixed new edges) to the driver, so it must
-    * fit there: it grows with |source cone| × |slice|, the bound
+    * [[transitiveClosureDelta]]'s full-closure answer.
+    *
+    * PRECONDITION (size): the walk collects the base relation (new
+    * edges ∪ cone-prefixed new edges) to the driver, so it must fit
+    * there: it grows with |source cone| × |slice|, the bound
     * [[transitiveClosureDelta]] documents. */
   def reachableToDelta(targets: DataFrame, coneToTargets: DataFrame,
-                       coneToSources: DataFrame, newEdges: DataFrame,
-                       maxIter: Int = 30,
-                       strict: Boolean = false,
-                       broadcastStep: Boolean = false): DataFrame = {
+                       coneToSources: DataFrame, newEdges: DataFrame): DataFrame = {
     val cT = coneToTargets.select(col("src"), col("dst"))
     val cS = coneToSources.select(col("src"), col("dst"))
     val tSet = targets.select(col("dst")).distinct()
     // EAGER slice cut (r17 A/B): base = e0 ∪ compose(cS, e0) scans
-    // e0 twice — the self-union double-compute race (see
-    // transitiveClosure's note).
+    // e0 twice — the self-union double-compute race.
     val e0 = newEdges.select(col("src"), col("dst")).distinct().cut()
     // Old-path prefix into a new edge, then the edge itself. Cone
     // pairs ending anywhere but a new-edge source drop out here —
@@ -867,20 +629,10 @@ object Graph {
     // source cone must stream, never shuffle).
     val base = e0.union(compose(cS, e0.hint("broadcast")))
     // Chains of (old-path? · new-edge) segments: the base relation's
-    // own transitive closure, via the tested closure operator (which
-    // cuts or, under broadcastStep, collects base before e0 is freed).
-    val bPlus =
-      try transitiveClosure(base, maxIter = maxIter, strict = strict,
-        broadcastStep = broadcastStep)
-      catch {
-        case e: IllegalStateException =>
-          e0.uncut() // inner strict path freed its own cuts
-          throw new IllegalStateException(
-            s"reachableToDelta: ${e.getMessage}", e)
-        case e: Throwable => // free-before-rethrow (see closureDelta)
-          e0.uncut()
-          throw e
-      }
+    // own transitive closure, via the tested closure operator. Its
+    // collect job is e0's last read: freed on the way out, on failure
+    // too (see transitiveClosureDelta).
+    val bPlus = try transitiveClosure(base) finally e0.uncut()
     // Final old segment into a target (or none, when the last new
     // edge already lands on one); restrict to the target set BEFORE
     // the known-pair subtraction so a superset coneToTargets cannot
@@ -889,14 +641,6 @@ object Graph {
     // the target cone streams; the target set is a dim by contract.
     val delta0 = bPlus.union(compose(bPlus.hint("broadcast"), cT))
       .join(tSet.hint("broadcast"), Seq("dst"), "left_semi").distinct().cut()
-    // `base` was consumed by the closure's eager input cut or collect,
-    // and the delta0 cut just materialized every read of bPlus — free
-    // the slice cut and the chain loop's increment cuts (bPlus is a
-    // pure union of dead cuts, the [[Checkpoints.uncut]] contract's
-    // case (b); the broadcast walk holds no cut, so there it frees
-    // nothing).
-    e0.uncut()
-    bPlus.uncut()
     // Drop already-known pairs without shuffling the cone — the
     // shared [[subtractKnown]] shape.
     subtractKnown(delta0, cT)
@@ -906,9 +650,8 @@ object Graph {
     * can reach a directed cycle, WITHOUT materializing any closure
     * (reference anchor: research/subtype/subtypes.ipynb checks
     * `is_directed_acyclic_graph` / `find_cycle` on the subclass graph
-    * before trusting its DFS walks — the hazard every closure
-    * operator's `maxIter` guard here cites; this is the audit that
-    * finds the offending region at scale).
+    * before trusting its DFS walks; this is the audit that finds the
+    * offending region at scale).
     *
     * Iterative SINK PEELING (Kahn's order, run to fixpoint): each
     * round keeps only edges whose dst still has an outgoing edge —

@@ -192,8 +192,7 @@ object GroupB {
     val (key, inputs, version) = taxonomyStoreId(d)
     graft.sinks.ServingStore.ensure(key, inputs, version) { root =>
       graft.sinks.ModelStore.save(
-        Graph.transitiveClosure(edges(s, d).filter(col("src") % 10 =!= 0),
-          uniquePaths = true, broadcastStep = true),
+        Graph.transitiveClosure(edges(s, d).filter(col("src") % 10 =!= 0)),
         root + "/closure")
     }
   }
@@ -213,8 +212,7 @@ object GroupB {
     * the per-cycle serving cost. */
   def closureServingOf(closure: DataFrame, newE: DataFrame): DataFrame =
     closure.unionByName(
-      Graph.transitiveClosureDelta(closure, newE, strict = true,
-        broadcastStep = true))
+      Graph.transitiveClosureDelta(closure, newE))
 
   /** b5's per-cycle body, state injected (the servingChain pattern):
     * given the held serving state — the target cone and yesterday's
@@ -227,8 +225,7 @@ object GroupB {
     * probe; everything else is slice-cone-bounded. */
   def revalidateChain(targets: DataFrame, cone: DataFrame,
                       newE: DataFrame, oldV: DataFrame): DataFrame = {
-    val delta = Graph.reachableToDelta(targets, cone, cone, newE,
-      strict = true, broadcastStep = true)
+    val delta = Graph.reachableToDelta(targets, cone, cone, newE)
     val oldCounts = oldV.groupBy("o_orderkey")
       .agg(sum(when(col("valid"), 1L).otherwise(0L)).as("valid_cnt"),
            sum(when(col("valid"), 0L).otherwise(1L)).as("invalid_cnt"))
@@ -242,21 +239,19 @@ object GroupB {
 
   val queries: Map[String, Q] = Map(
     // b1: full transitive closure (the reference walks this per-member
-    // with a RocksDB DFS). The part-key taxonomy is dimension-sized, so
-    // broadcastStep collects it once and walks every node's ancestors
-    // inside the tasks — no per-depth rounds (pointer doubling needs
-    // ~log2 14 rounds and re-distincts the ENTIRE closure each one).
-    // The k -> k/2 hierarchy is a forest, so uniquePaths is declared.
+    // with a RocksDB DFS). The part-key taxonomy is dimension-sized:
+    // the closure collects it once and walks every node's ancestors
+    // inside the tasks, with no per-depth rounds.
     "b1_closure_iterative" -> ((s, d) =>
-      Graph.transitiveClosure(edges(s, d), uniquePaths = true, broadcastStep = true)),
+      Graph.transitiveClosure(edges(s, d))),
 
     // b4: INCREMENTAL closure maintenance — b1 without re-walking the
     // old edge set: every tenth parent link (src % 10 = 0, the
     // d11/d13/d16 slice convention) arrives as today's taxonomy
     // growth; the existing closure folds them in via
     // Graph.transitiveClosureDelta (new pairs = old-path? · new-edge
-    // · old-path? segments, chained by slice-bounded semi-naive
-    // rounds). Output is closure ∪ delta, so b1's own recursive CTE
+    // · old-path? segments, chained by one broadcast walk over those
+    // segments). Output is closure ∪ delta, so b1's own recursive CTE
     // over ALL edges oracles incremental ≡ full recompute.
     "b4_closure_incremental" -> ((s, d) => {
       val all = edges(s, d)
@@ -264,14 +259,12 @@ object GroupB {
       // self-containment cost — the bench artifact's fit_s column
       // splits b4's wall into amortizable fit + per-cycle delta fold
       // (b6 measures the store-backed serving regime where only the
-      // fold is paid). The broadcast walk's eager part is its edge
-      // collect; the walks themselves run in the fold's scans.
+      // fold is paid). The walk's eager part is its edge collect; the
+      // walks themselves run in the fold's scans.
       val c = graft.Timed.region("fit")(
-        Graph.transitiveClosure(all.filter(col("src") % 10 =!= 0),
-          uniquePaths = true, broadcastStep = true))
+        Graph.transitiveClosure(all.filter(col("src") % 10 =!= 0)))
       val delta = Graph.transitiveClosureDelta(c,
-        all.filter(col("src") % 10 === 0), strict = true,
-        broadcastStep = true)
+        all.filter(col("src") % 10 === 0))
       c.unionByName(delta)
     }),
 
@@ -327,8 +320,7 @@ object GroupB {
       // it to the target cone by construction — so the edge collect
       // runs once, not three times.
       val cone = Graph.reachableTo(oldE,
-        targets.unionByName(newE.select(col("src").as("dst"))),
-        uniquePaths = true, broadcastStep = true)
+        targets.unionByName(newE.select(col("src").as("dst"))))
       val members = Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .join(Tables(s, d, "orders")
@@ -420,8 +412,7 @@ object GroupB {
       // join just to distinct ~30 values. The k -> k/2 hierarchy is a
       // dimension-sized forest: one broadcast walk per target.
       val closure = Graph.reachableTo(edges(s, d),
-        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, broadcastStep = true)
+        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")))
       Graph.validateReachable(members, closure, "l_partkey", "required")
         .groupBy("o_orderkey")
         .agg(sum(when(col("valid"), 1L).otherwise(0L)).as("valid_cnt"),
@@ -449,8 +440,7 @@ object GroupB {
       val withAlt = members
         .join(broadcast(redirects), col("l_partkey") === col("r_src"), "left")
       val closure = Graph.reachableTo(edges(s, d),
-        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, broadcastStep = true)
+        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")))
       val v1 = Graph.validateReachable(withAlt, closure, "l_partkey", "required")
         .withColumnRenamed("valid", "valid_orig")
       Graph.validateReachable(v1, closure, "r_dst", "required")

@@ -152,8 +152,7 @@ object GroupG2 {
               col("collection_id") === col("o_orderkey"))
         .drop("o_orderkey")
       val closure = Graph.reachableTo(edges(s, d),
-        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")),
-        uniquePaths = true, broadcastStep = true)
+        Tables(s, d, "orders").select((col("o_orderkey") % 30 + 2).as("dst")))
       Sessions.validatedCounts(members, closure)
     }),
   )

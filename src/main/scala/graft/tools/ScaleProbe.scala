@@ -266,8 +266,7 @@ object ScaleProbe {
     // fit cost. The bridge slice hangs NEW leaves (+1e9) under
     // copy-0 nodes — same delta cone on both sides, only the closure
     // being scanned grows.
-    lazy val closure0 = Graph.transitiveClosure(edges,
-      uniquePaths = true, broadcastStep = true).localCheckpoint()
+    lazy val closure0 = Graph.transitiveClosure(edges).localCheckpoint()
     lazy val closureK = scaled(closure0, Seq("src", "dst"))
     lazy val newLeaves = edges
       .select((col("src") + lit(1_000_000_000L)).as("src"), col("dst"))
@@ -368,8 +367,7 @@ object ScaleProbe {
       .select((col("o_orderkey") % 30 + 2).as("dst")).distinct()
       .localCheckpoint()
     lazy val coneB5 = Graph.reachableTo(oldEb5,
-        targetsB5.unionByName(newEb5.select(col("src").as("dst"))),
-        uniquePaths = true, broadcastStep = true)
+        targetsB5.unionByName(newEb5.select(col("src").as("dst"))))
       .localCheckpoint()
     lazy val oldVb5 = Graph.validateReachable(
         Tables(spark, sfDir, "lineitem")
@@ -423,8 +421,7 @@ object ScaleProbe {
       val mem = m.select(col("l_partkey").as("t"),
         (col("l_orderkey") % 30 + 2).as("required"))
       val closure = Graph.reachableTo(edges,
-        mem.select(col("required").as("dst")), uniquePaths = true,
-        broadcastStep = true)
+        mem.select(col("required").as("dst")))
       Graph.validateReachable(mem, closure, "t", "required")
         .groupBy("required").agg(sum(when(col("valid"), 1L).otherwise(0L)).as("v"))
     }
@@ -592,10 +589,8 @@ object ScaleProbe {
       // B-bounded, so the ratio must stay far below K —
       // a closure-sized re-walk (b1's shape) would read ≈ K.
       ("b4 closure-delta",
-        () => noop(Graph.transitiveClosureDelta(closure0, newLeaves,
-          broadcastStep = true)),
-        () => noop(Graph.transitiveClosureDelta(closureK, newLeaves,
-          broadcastStep = true))),
+        () => noop(Graph.transitiveClosureDelta(closure0, newLeaves)),
+        () => noop(Graph.transitiveClosureDelta(closureK, newLeaves))),
       // d17: FIXED ingest slice, K× gram-count dim (the corpus-grows
       // direction). The dim is streamed against the broadcast slice
       // gram set and everything downstream is slice-keyed, so the

@@ -11,6 +11,23 @@ class GraphSpec extends GraftSuite {
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.as[(Long, Long)].collect().toSet
 
+  /** Independent oracle: the closure of an edge list by in-memory BFS
+    * from every source — paths of length ≥ 1, so (a, a) iff a lies on
+    * a cycle. */
+  private def bfsClosure(edgePairs: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    val adj = edgePairs.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    def reach(n: Long): Set[Long] = {
+      var seen = Set.empty[Long]
+      var frontier = adj.getOrElse(n, Set.empty)
+      while (frontier.nonEmpty) {
+        seen ++= frontier
+        frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- seen
+      }
+      seen
+    }
+    adj.keys.flatMap(s => reach(s).map(d => (s, d))).toSet
+  }
+
   test("closure of a chain finds all ancestor pairs") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     assert(pairs(Graph.transitiveClosure(edges)) ===
@@ -31,25 +48,30 @@ class GraphSpec extends GraftSuite {
       Set((1L, 2L), (2L, 1L), (1L, 1L), (2L, 2L)))
   }
 
-  test("uniquePaths closure matches general closure on a tree") {
+  test("closure of a tree equals its literal ancestor pairs") {
     val edges = Seq((2L, 1L), (3L, 1L), (4L, 2L), (5L, 2L), (6L, 3L), (7L, 3L))
       .toDF("src", "dst")
-    assert(pairs(Graph.transitiveClosure(edges, uniquePaths = true)) ===
-      pairs(Graph.transitiveClosure(edges)))
+    assert(pairs(Graph.transitiveClosure(edges)) ===
+      Set((2L, 1L), (3L, 1L), (4L, 2L), (5L, 2L), (6L, 3L), (7L, 3L),
+        (4L, 1L), (5L, 1L), (6L, 1L), (7L, 1L)))
   }
 
+  /** The b2 shape: binary-tree edges k → k/2 over sf0.001 part keys. */
+  private def partTree() = Tables(spark, sfDir, "part")
+    .filter($"p_partkey" >= 2)
+    .selectExpr("p_partkey AS src", "p_partkey DIV 2 AS dst")
+
   test("reachableTo equals the target-filtered full closure") {
-    // Binary-tree edges over sf0.001 part keys, targets 2..31 — the
-    // exact shape b2 runs; seeded backward BFS must agree with the
-    // full closure restricted to those destinations.
-    val edges = Tables(spark, sfDir, "part")
-      .filter($"p_partkey" >= 2)
-      .selectExpr("p_partkey AS src", "p_partkey DIV 2 AS dst")
+    // Targets 2..31 — the exact shape b2 runs; the backward walk must
+    // agree with the oracle's full closure restricted to those
+    // destinations, and so must the forward walk filtered the same way.
+    val edges = partTree()
     val targets = spark.range(2, 32).select($"id".as("dst"))
-    val full = pairs(Graph.transitiveClosureDoubling(edges)
-      .join(targets, "dst").select("src", "dst"))
+    val full = bfsClosure(edges.as[(Long, Long)].collect().toSeq)
+      .filter(p => p._2 >= 2 && p._2 < 32)
     assert(pairs(Graph.reachableTo(edges, targets)) === full)
-    assert(pairs(Graph.reachableTo(edges, targets, uniquePaths = true)) === full)
+    assert(pairs(Graph.transitiveClosure(edges).join(targets, "dst")
+      .select("src", "dst")) === full)
     assert(full.nonEmpty)
   }
 
@@ -57,93 +79,53 @@ class GraphSpec extends GraftSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
     df.collect().map(r => (r.get(0), r.get(1))).toSet
 
-  test("broadcast walk equals the semi-naive closure on chains, diamonds and cycles") {
+  test("closure equals literal pair sets on chains, diamonds and cycles") {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
     val diamond = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
     val cycle = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
-    for (edges <- Seq(chain, diamond, cycle)) {
-      val want = pairs(Graph.transitiveClosure(edges))
-      val got = Graph.transitiveClosure(edges, broadcastStep = true).as[(Long, Long)].collect()
+    val cases = Seq(
+      chain -> (for (a <- 1L to 6L; b <- a + 1 to 6L) yield (a, b)).toSet,
+      diamond -> Set((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
+        (1L, 4L), (1L, 5L), (2L, 5L), (3L, 5L)),
+      // (t, t) iff t lies on a cycle: 1 and 2 do, 3 does not.
+      cycle -> Set((1L, 2L), (2L, 1L), (2L, 3L), (1L, 3L), (1L, 1L), (2L, 2L)))
+    for ((edges, want) <- cases) {
+      val got = Graph.transitiveClosure(edges).as[(Long, Long)].collect()
       assert(got.length === got.distinct.length, "the walk must emit a set")
       assert(got.toSet === want)
-      // maxIter is ignored on the broadcast path: the walk completes.
-      assert(pairs(Graph.transitiveClosure(edges, maxIter = 1, strict = true,
-        broadcastStep = true)) === want)
     }
-    // forest fast path: the declaration changes nothing on the walk
-    assert(pairs(Graph.transitiveClosure(chain, uniquePaths = true, broadcastStep = true)) ===
-      pairs(Graph.transitiveClosure(chain)))
-    // (t, t) iff t lies on a cycle
-    assert(pairs(Graph.transitiveClosure(cycle, broadcastStep = true)).filter(p => p._1 == p._2) ===
-      Set((1L, 1L), (2L, 2L)))
   }
 
-  test("broadcast reachableTo equals semi-naive reachableTo (b2 shape)") {
-    val edges = Tables(spark, sfDir, "part")
-      .filter($"p_partkey" >= 2)
-      .selectExpr("p_partkey AS src", "p_partkey DIV 2 AS dst")
+  test("reachableTo equals the closed-form ancestor pairs (b2 shape)") {
+    // In the k → k/2 tree the ancestors of k are k/2, k/4, …, as long
+    // as each step's source is itself an edge source.
+    val edges = partTree()
     val targets = spark.range(2, 32).select($"id".as("dst"))
-    val want = pairs(Graph.reachableTo(edges, targets))
-    assert(pairs(Graph.reachableTo(edges, targets, broadcastStep = true)) === want)
-    assert(pairs(Graph.reachableTo(edges, targets, uniquePaths = true, strict = true,
-      broadcastStep = true)) === want)
+    val srcs = edges.select("src").as[Long].collect().toSet
+    def ancestors(k: Long): List[Long] = if (!srcs(k)) Nil else (k / 2) :: ancestors(k / 2)
+    val want = srcs.flatMap(k => ancestors(k).filter(t => t >= 2 && t < 32).map(t => (k, t)))
+    assert(pairs(Graph.reachableTo(edges, targets)) === want)
     assert(want.nonEmpty)
   }
 
   test("reachableTo handles cycles and disconnected targets") {
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 4L)).toDF("src", "dst")
     val targets = Seq(Tuple1(1L), Tuple1(9L)).toDF("dst")
-    for (broadcastStep <- Seq(false, true))
-      assert(pairs(Graph.reachableTo(edges, targets, broadcastStep = broadcastStep)) ===
-        Set((2L, 1L), (1L, 1L)), s"broadcastStep = $broadcastStep")
-  }
-
-  test("strict uniquePaths accepts forests and rejects multi-parent graphs") {
-    // A genuine forest: node 1 has two children — legal.
-    val forest = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("src", "dst")
-    // Node 4 with two parents: multiple paths — must be rejected,
-    // and the rejection must FREE the just-created edge cut (a
-    // catch-and-retry serving loop must not leak one block set per
-    // attempt — round-11 second review): the persisted-RDD map must
-    // not grow across the throws. unpersist(blocking = false) removes
-    // from the map synchronously; only the block drop is async. The
-    // broadcast path checks the collected edges and cuts nothing.
-    val diamond = Seq((4L, 2L), (4L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
-    for (broadcastStep <- Seq(false, true)) {
-      assert(pairs(Graph.transitiveClosure(forest, uniquePaths = true, strict = true,
-        broadcastStep = broadcastStep)) === pairs(Graph.transitiveClosure(forest)))
-      assert(pairs(Graph.reachableTo(forest, Seq(Tuple1(1L)).toDF("dst"),
-        uniquePaths = true, strict = true, broadcastStep = broadcastStep)).nonEmpty)
-      val before = ss.sparkContext.getPersistentRDDs.keySet
-      intercept[IllegalStateException] {
-        Graph.transitiveClosure(diamond, uniquePaths = true, strict = true,
-          broadcastStep = broadcastStep)
-      }
-      intercept[IllegalStateException] {
-        Graph.reachableTo(diamond, Seq(Tuple1(1L)).toDF("dst"),
-          uniquePaths = true, strict = true, broadcastStep = broadcastStep)
-      }
-      val leaked = ss.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"strict throws leaked persisted RDDs: $leaked")
-    }
+    assert(pairs(Graph.reachableTo(edges, targets)) === Set((2L, 1L), (1L, 1L)))
   }
 
   test("closures have no duplicate rows when a shortcut edge coexists with a longer path") {
     // (1,3) is connected at distance 1 (shortcut) AND distance 2
     // (1→2→3): each walk must report the pair once.
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    for (broadcastStep <- Seq(false, true)) {
-      val c = Graph.transitiveClosure(edges, broadcastStep = broadcastStep)
-      assert(c.count() === c.distinct().count(),
-        s"broadcastStep = $broadcastStep closure must be a set")
-      val r = Graph.reachableTo(edges, Seq(Tuple1(3L)).toDF("dst"),
-        broadcastStep = broadcastStep)
-      assert(r.count() === r.distinct().count(),
-        s"broadcastStep = $broadcastStep reachableTo must be a set")
-    }
+    val c = Graph.transitiveClosure(edges)
+    assert(c.count() === c.distinct().count(), "closure must be a set")
+    val r = Graph.reachableTo(edges, Seq(Tuple1(3L)).toDF("dst"))
+    assert(r.count() === r.distinct().count(), "reachableTo must be a set")
   }
 
   test("property: closures match an in-memory BFS oracle on random graphs, both walks") {
+    // Both walks: the forward closure and the backward reachableTo.
     val rnd = new scala.util.Random(1234)
     for (trial <- 1 to 8) {
       // Odd trials: random DAGs (edges only src > dst, multi-parent
@@ -156,34 +138,15 @@ class GraphSpec extends GraftSuite {
         }
       }.distinct
       if (edgePairs.nonEmpty) {
-        // Independent oracle: BFS closure over the collected edge set.
-        val adj = edgePairs.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        def reach(n: Long): Set[Long] = {
-          var seen = Set.empty[Long]
-          var frontier = adj.getOrElse(n, Set.empty)
-          while (frontier.nonEmpty) {
-            seen ++= frontier
-            frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- seen
-          }
-          seen
-        }
-        val want = edgePairs.map(_._1).distinct
-          .flatMap(s => reach(s).map(d => (s, d))).toSet
+        val want = bfsClosure(edgePairs)
         val edges = edgePairs.toDF("src", "dst")
-        for (broadcastStep <- Seq(false, true)) {
-          val got = Graph.transitiveClosure(edges, broadcastStep = broadcastStep)
-            .as[(Long, Long)].collect()
-          assert(got.length === got.distinct.length,
-            s"trial $trial broadcastStep $broadcastStep: closure emitted duplicates")
-          assert(got.toSet === want, s"trial $trial broadcastStep $broadcastStep")
-          val targets = want.map(_._2).take(3) + 99L // 99: no such node
-          val r = Graph.reachableTo(edges, targets.toSeq.toDF("dst"),
-            broadcastStep = broadcastStep).as[(Long, Long)].collect()
-          assert(r.length === r.distinct.length,
-            s"trial $trial broadcastStep $broadcastStep: reachableTo emitted duplicates")
-          assert(r.toSet === want.filter(p => targets.contains(p._2)),
-            s"trial $trial broadcastStep $broadcastStep reachableTo")
-        }
+        val got = Graph.transitiveClosure(edges).as[(Long, Long)].collect()
+        assert(got.length === got.distinct.length, s"trial $trial: closure emitted duplicates")
+        assert(got.toSet === want, s"trial $trial")
+        val targets = want.map(_._2).take(3) + 99L // 99: no such node
+        val r = Graph.reachableTo(edges, targets.toSeq.toDF("dst")).as[(Long, Long)].collect()
+        assert(r.length === r.distinct.length, s"trial $trial: reachableTo emitted duplicates")
+        assert(r.toSet === want.filter(p => targets.contains(p._2)), s"trial $trial reachableTo")
       }
     }
   }
@@ -191,62 +154,60 @@ class GraphSpec extends GraftSuite {
   test("broadcast walk: empty edge set, empty and disconnected target sets") {
     val none = Seq.empty[(Long, Long)].toDF("src", "dst")
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
-    for (broadcastStep <- Seq(false, true)) {
-      assert(Graph.transitiveClosure(none, broadcastStep = broadcastStep).count() === 0L)
-      assert(Graph.reachableTo(none, Seq(1L).toDF("dst"),
-        broadcastStep = broadcastStep).count() === 0L)
-      assert(Graph.reachableTo(edges, Seq.empty[Long].toDF("dst"),
-        broadcastStep = broadcastStep).count() === 0L)
-      // 1 is a source only, 9 no node at all, 8 a separate component.
-      assert(pairs(Graph.reachableTo(edges, Seq(1L, 9L, 8L, 8L).toDF("dst"),
-        broadcastStep = broadcastStep)) === Set((7L, 8L)))
-    }
+    assert(Graph.transitiveClosure(none).count() === 0L)
+    assert(Graph.reachableTo(none, Seq(1L).toDF("dst")).count() === 0L)
+    assert(Graph.reachableTo(edges, Seq.empty[Long].toDF("dst")).count() === 0L)
+    // 1 is a source only, 9 no node at all, 8 a separate component.
+    assert(pairs(Graph.reachableTo(edges, Seq(1L, 9L, 8L, 8L).toDF("dst"))) === Set((7L, 8L)))
   }
 
   test("broadcast walk: null endpoints give the join path's rows") {
-    // A null id never matches as a join key: an edge into null ends
-    // there, an edge out of null starts there, and null is never a
-    // target.
+    // The rows a join-based walk yields: a null id never matches as a
+    // join key, so an edge into null ends there, an edge out of null
+    // starts there, and null is never a target.
     val edges = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(2L)),
       (None, Some(3L)), (Some(3L), Some(1L)), (None, None), (Some(4L), Some(5L)))
       .toDF("src", "dst")
     val targets = Seq(Some(1L), Some(2L), None).toDF("dst")
-    assert(rows(Graph.transitiveClosure(edges, broadcastStep = true)) ===
-      rows(Graph.transitiveClosure(edges)))
-    assert(rows(Graph.reachableTo(edges, targets, broadcastStep = true)) ===
-      rows(Graph.reachableTo(edges, targets)))
-    assert(rows(Graph.reachableTo(edges, targets, broadcastStep = true))
-      .contains((null, 1L)))
+    val closure: Set[(Any, Any)] = Set((1L, 2L), (1L, null), (2L, null), (3L, 1L),
+      (3L, 2L), (3L, null), (4L, 5L), (null, 2L), (null, 3L), (null, null), (null, 1L))
+    assert(rows(Graph.transitiveClosure(edges)) === closure)
+    assert(rows(Graph.reachableTo(edges, targets)) ===
+      closure.filter(p => p._2 == 1L || p._2 == 2L))
   }
 
   test("broadcast walk keeps int src with long dst, and rejects non-integral ids") {
     val mixed = Seq((4, 2L), (2, 1L), (5, 2L)).toDF("src", "dst")
     val targets = Seq(1L).toDF("dst")
-    for (df <- Seq(Graph.transitiveClosure(mixed, broadcastStep = true),
-                   Graph.reachableTo(mixed, targets, broadcastStep = true)))
+    for (df <- Seq(Graph.transitiveClosure(mixed), Graph.reachableTo(mixed, targets)))
       assert(df.schema.map(_.dataType) === Seq(
         org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType))
-    assert(rows(Graph.transitiveClosure(mixed, broadcastStep = true)) ===
-      rows(Graph.transitiveClosure(mixed)))
-    assert(rows(Graph.reachableTo(mixed, targets, broadcastStep = true)) ===
-      rows(Graph.reachableTo(mixed, targets)))
+    assert(rows(Graph.transitiveClosure(mixed)) ===
+      Set[(Any, Any)]((4, 2L), (2, 1L), (5, 2L), (4, 1L), (5, 1L)))
+    assert(rows(Graph.reachableTo(mixed, targets)) ===
+      Set[(Any, Any)]((2, 1L), (4, 1L), (5, 1L)))
     // An int target set against long ids matches by value too.
-    assert(pairs(Graph.reachableTo(Seq((2L, 1L)).toDF("src", "dst"), Seq(1).toDF("dst"),
-      broadcastStep = true)) === Set((2L, 1L)))
+    assert(pairs(Graph.reachableTo(Seq((2L, 1L)).toDF("src", "dst"), Seq(1).toDF("dst"))) ===
+      Set((2L, 1L)))
     val named = Seq(("a", "b")).toDF("src", "dst")
-    intercept[IllegalArgumentException](Graph.transitiveClosure(named, broadcastStep = true))
-    intercept[IllegalArgumentException](
-      Graph.reachableTo(named, Seq("b").toDF("dst"), broadcastStep = true))
-    intercept[IllegalArgumentException](
-      Graph.reachableTo(mixed, Seq("1").toDF("dst"), broadcastStep = true))
+    intercept[IllegalArgumentException](Graph.transitiveClosure(named))
+    intercept[IllegalArgumentException](Graph.reachableTo(named, Seq("b").toDF("dst")))
+    intercept[IllegalArgumentException](Graph.reachableTo(mixed, Seq("1").toDF("dst")))
     intercept[IllegalArgumentException](Graph.transitiveClosure(
-      Seq((1.0, 2.0)).toDF("src", "dst"), broadcastStep = true))
+      Seq((1.0, 2.0)).toDF("src", "dst")))
+    // The deltas reject them too, and free their slice cuts first: a
+    // catch-and-retry serving loop must not leak one set per attempt.
+    val before = ss.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException](Graph.transitiveClosureDelta(named, named))
+    intercept[IllegalArgumentException](
+      Graph.reachableToDelta(Seq("b").toDF("dst"), named, named, named))
+    val leaked = ss.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"a failing delta leaked its slice cuts: $leaked")
   }
 
-  test("broadcastStep walks a 40-hop chain in at most 2 Spark jobs") {
+  test("closures walk a 40-hop chain in at most 2 Spark jobs") {
     // One job collects the edges; the walks run inside the one job
-    // that reads the result. The semi-naive rounds run a job per hop
-    // (maxIter = 50 lets them finish the chain).
+    // that reads the result. A walk by rounds would run a job per hop.
     val chain = (1L to 40L).map(i => (i, i - 1)).toDF("src", "dst")
     val sc = ss.sparkContext
     def jobs(body: => Unit): Int = {
@@ -260,12 +221,10 @@ class GraphSpec extends GraftSuite {
       try { body; SparkInternals.drainListenerBus(sc); n.get() }
       finally sc.removeSparkListener(l)
     }
-    val closureJobs = jobs(assert(Graph.transitiveClosure(chain, maxIter = 50,
-      broadcastStep = true).collect().length === 40 * 41 / 2))
+    val closureJobs = jobs(assert(Graph.transitiveClosure(chain).collect().length === 40 * 41 / 2))
     assert(closureJobs <= 2, s"transitiveClosure ran $closureJobs jobs")
     // The root as the one target: the whole chain reaches it.
-    val reachJobs = jobs(assert(Graph.reachableTo(chain, Seq(0L).toDF("dst"), maxIter = 50,
-      broadcastStep = true).collect().length === 40))
+    val reachJobs = jobs(assert(Graph.reachableTo(chain, Seq(0L).toDF("dst")).collect().length === 40))
     assert(reachJobs <= 2, s"reachableTo ran $reachJobs jobs")
   }
 
@@ -309,20 +268,23 @@ class GraphSpec extends GraftSuite {
     // spark.graft.checkpointDir flips every operator lineage cut from
     // localCheckpoint (executor blocks — dies with any executor loss)
     // to reliable checkpoint() on the fault-tolerant FS. Results must
-    // be identical and the files must actually land there.
+    // be identical and the files must actually land there: the closure
+    // delta cuts its slice frames, connectedComponents its rounds.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)).toDF("src", "dst")
-    val want = pairs(Graph.transitiveClosure(edges, broadcastStep = true))
+    def files(): Long = java.nio.file.Files.walk(dir).filter(
+      java.nio.file.Files.isRegularFile(_)).count()
+    val closure = Graph.transitiveClosure(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
+    val slice = Seq((3L, 4L), (0L, 1L)).toDF("src", "dst")
+    val want = pairs(Graph.transitiveClosureDelta(closure, slice))
+    assert(want === Set((3L, 4L), (2L, 4L), (1L, 4L), (0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)))
     spark.conf.set(graft.operators.Checkpoints.confKey, dir.toString)
     try {
-      assert(pairs(Graph.transitiveClosure(edges)) === want)
+      assert(pairs(Graph.transitiveClosureDelta(closure, slice)) === want)
+      assert(files() > 0, "reliable mode must write the delta's checkpoint files")
       val cc = Graph.connectedComponents(
         Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
       assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      val files = java.nio.file.Files.walk(dir).filter(
-        java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0, "reliable mode must write checkpoint files")
     } finally spark.conf.unset(graft.operators.Checkpoints.confKey)
   }
 
@@ -465,13 +427,11 @@ class GraphSpec extends GraftSuite {
       val all = (1 to 22).map(_ => (rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
         .filter { case (a, b) => a != b }.distinct
       val (oldE, newE) = all.partition(_ => rnd.nextInt(3) != 0)
-      if (oldE.nonEmpty && newE.nonEmpty) for (broadcastStep <- Seq(false, true)) {
-        val c = Graph.transitiveClosure(oldE.toDF("src", "dst"), broadcastStep = broadcastStep)
-        val delta = Graph.transitiveClosureDelta(c, newE.toDF("src", "dst"),
-          strict = true, broadcastStep = broadcastStep)
+      if (oldE.nonEmpty && newE.nonEmpty) {
+        val c = Graph.transitiveClosure(oldE.toDF("src", "dst"))
+        val delta = Graph.transitiveClosureDelta(c, newE.toDF("src", "dst"))
         val got = pairs(c) ++ pairs(delta)
-        val want = pairs(Graph.transitiveClosure(all.toDF("src", "dst")))
-        assert(got === want, s"trial $trial old=$oldE new=$newE broadcastStep=$broadcastStep")
+        assert(got === bfsClosure(all), s"trial $trial old=$oldE new=$newE")
         assert((pairs(delta) & pairs(c)).isEmpty,
           s"trial $trial: delta repeats closure rows")
       }
@@ -485,19 +445,10 @@ class GraphSpec extends GraftSuite {
   }
 
   test("delta operators: strict throws before returning incomplete results") {
-    // A slice that CHAINS (12 new edges / 12 component merges) needs
-    // more rounds than maxIter = 1 allows — strict must throw, never
-    // hand back a silently-short delta.
-    val chain = (1L until 13L).map(i => (i, i + 1))
-    val emptyClosure = Seq((100L, 101L)).toDF("src", "dst")
-    val e1 = intercept[IllegalStateException] {
-      Graph.transitiveClosureDelta(
-        Graph.transitiveClosure(emptyClosure),
-        chain.toDF("src", "dst"), maxIter = 1, strict = true).count()
-    }
-    assert(e1.getMessage.startsWith("transitiveClosureDelta:"))
-    // componentsDelta: pair up isolated two-node comps, then chain
-    // them with a slice — rep-space diameter > 1.
+    // A slice that CHAINS (11 component merges) needs more rep-space
+    // rounds than maxIter = 1 allows — strict must throw, never hand
+    // back a silently-short delta. Pair up isolated two-node comps,
+    // then chain them with a slice — rep-space diameter > 1.
     val asg = Graph.connectedComponents(
       (0L until 12L).map(i => (2 * i + 50, 2 * i + 51)).toDF("id_a", "id_b"))
     intercept[IllegalStateException] {
@@ -571,19 +522,14 @@ class GraphSpec extends GraftSuite {
           .distinct.toDF("dst")
         val oldDf = oldE.toDF("src", "dst")
         val newDf = newE.toDF("src", "dst")
-        val want = Graph.transitiveClosureDelta(
-            Graph.transitiveClosure(oldDf), newDf)
-          .join(targets, Seq("dst"), "left_semi")
-          .select("src", "dst").as[(Long, Long)].collect().toSet
-        for (broadcastStep <- Seq(false, true)) {
-          val coneT = Graph.reachableTo(oldDf, targets, broadcastStep = broadcastStep)
-          val coneS = Graph.reachableTo(oldDf,
-            newDf.select(col("src").as("dst")), broadcastStep = broadcastStep)
-          val got = Graph.reachableToDelta(targets, coneT, coneS, newDf,
-              broadcastStep = broadcastStep)
-            .as[(Long, Long)].collect().toSet
-          assert(got === want, s"trial $trial old=$oldE new=$newE broadcastStep=$broadcastStep")
-        }
+        // The closure delta from the oracle: new pairs of old ∪ new.
+        val ts = targets.as[Long].collect().toSet
+        val want = (bfsClosure(all) -- bfsClosure(oldE)).filter(p => ts(p._2))
+        val coneT = Graph.reachableTo(oldDf, targets)
+        val coneS = Graph.reachableTo(oldDf, newDf.select(col("src").as("dst")))
+        val got = Graph.reachableToDelta(targets, coneT, coneS, newDf)
+          .as[(Long, Long)].collect().toSet
+        assert(got === want, s"trial $trial old=$oldE new=$newE")
         // Superset tolerance: the full closure works as either cone.
         val full = Graph.transitiveClosure(oldDf)
         val got2 = Graph.reachableToDelta(targets, full, full, newDf)
@@ -630,7 +576,7 @@ class GraphSpec extends GraftSuite {
     for (trial <- 1 to 5) {
       val n = 24
       // k -> k/2-ish forest plus random shortcuts kept acyclic
-      // (src > dst), so the closure terminates without uniquePaths.
+      // (src > dst).
       val all = ((2 to n).map(k => (k.toLong, (k / 2).toLong)) ++
         (1 to 10).map { _ =>
           val a = rnd.nextInt(n - 1) + 2; (a.toLong, rnd.nextInt(a - 1).toLong + 1)
@@ -707,21 +653,6 @@ class GraphSpec extends GraftSuite {
     val got = Graph.validateReachable(members, closure, "typ", "target")
     assert(got.filter($"valid".isNull).count() == 0, "valid must be total")
     assert(got.filter(!$"valid").count() == 2, "unvalidatable rows are invalid")
-  }
-
-  test("transitiveClosureDoubling: non-convergence warns (and throws under strict)") {
-    // r12 review: the doubling variant silently returned a truncated
-    // closure at maxIter where every sibling warns or throws.
-    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    intercept[IllegalStateException] {
-      Graph.transitiveClosureDoubling(chain, maxIter = 2, strict = true)
-    }
-    // Non-strict still returns the (incomplete) closure.
-    val c = Graph.transitiveClosureDoubling(chain, maxIter = 2)
-    assert(c.count() > 0)
-    // And a converging input under strict is untouched.
-    val full = Graph.transitiveClosureDoubling(chain, maxIter = 10, strict = true)
-    assert(full.count() == 39L * 40L / 2L)
   }
 
   test("ntriples parse handles uri objects, literals, language tags, junk") {

@@ -141,8 +141,7 @@ class ModelStoreSpec extends GraftSuite {
     val edges = Tables(spark, sfDir, "part")
       .filter(col("p_partkey") >= 2)
       .select(col("p_partkey").as("src"), expr("p_partkey DIV 2").as("dst"))
-    val c = Graph.transitiveClosure(edges.filter(col("src") % 10 =!= 0),
-      uniquePaths = true, broadcastStep = true)
+    val c = Graph.transitiveClosure(edges.filter(col("src") % 10 =!= 0))
     val p = tmp("closure")
     ModelStore.save(c, p)
     val slice = edges.filter(col("src") % 10 === 0)
