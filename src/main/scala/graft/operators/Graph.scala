@@ -18,8 +18,12 @@ import org.apache.spark.sql.types._
   * PRECONDITION: the edge set fits in the driver (a type taxonomy — at
   * 100 TB the closure grows with the corpus, the taxonomy stays a dim).
   *
-  * The component and cycle operators iterate over pair sets that may
-  * be corpus-sized. Each round is one shuffle on the join key; a
+  * [[componentsDelta]] merges a slice into a component assignment the
+  * same way: one collect of the slice's pairs, one union-find on the
+  * driver, no rounds and no cuts.
+  *
+  * [[connectedComponents]] and [[reachesCycle]] iterate over pair sets
+  * that may be corpus-sized. Each round is one shuffle on the join key; a
   * [[Checkpoints]] cut truncates lineage so the plan doesn't grow with
   * iteration count (and AQE re-plans each round from actual sizes).
   * Cuts default to `localCheckpoint`; set `spark.graft.checkpointDir`
@@ -43,15 +47,15 @@ object Graph {
     * builds right, so anti-joining against `known` directly would
     * sort-merge it whole — semi `known` down to delta0's pairs first
     * (known streamed, bounded delta0 on the broadcast build side),
-    * then anti against that bounded set. The componentsDelta-doctrine
-    * subtraction shape, shared by both delta operators. */
+    * then anti against that bounded set. The serving-state doctrine
+    * (scan the corpus-sized frame, never shuffle it), shared by both
+    * closure delta operators. */
   private def subtractKnown(delta0: DataFrame, known: DataFrame): DataFrame = {
     // Hinted broadcasts (r18): both build sides are slice-bounded
     // frames whose checkpoint scans carry no statistics — without the
     // hint the static plan sort-merges, shuffling the corpus-sized
     // known frame before AQE's runtime conversion can intervene (the
-    // componentsDelta rationale; the doc above already declares the
-    // broadcast shape).
+    // doc above already declares the broadcast shape).
     val touched = known.join(delta0.hint("broadcast"),
       Seq("src", "dst"), "left_semi")
     delta0.join(touched.hint("broadcast"), Seq("src", "dst"), "left_anti")
@@ -98,6 +102,17 @@ object Graph {
     new Adjacency(ids, offsets, packed.map(_.toInt))
   }
 
+  /** `df` with every column cast to long — exact, because each must be
+    * integral (byte, short, int or long); any other type throws
+    * `IllegalArgumentException` naming `op` and the column. The node-id
+    * contract of the operators that collect ids to the driver. */
+  private def asLongs(df: DataFrame, op: String): DataFrame = {
+    for (f <- df.schema.fields if !Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+      throw new IllegalArgumentException(s"$op takes integral node ids, but " +
+        s"`${f.name}` is ${f.dataType.simpleString}")
+    df.select(df.columns.map(c => col(c).cast(LongType)): _*)
+  }
+
   /** The walk behind both closures. ONE job collects the (src, dst)
     * edges as longs (integral ids compare equal across int and long
     * columns after the cast); the edges go out as successor lists, or
@@ -108,18 +123,14 @@ object Graph {
     * lazy frame with the input's column types. */
   private def broadcastWalk(edges: DataFrame, targets: Option[DataFrame], op: String): DataFrame = {
     val raw = edges.select(col("src"), col("dst"))
-    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
-    for (f <- raw.schema.fields ++ targets.map(_.schema("dst")) if !integral.contains(f.dataType))
-      throw new IllegalArgumentException(s"$op walks integral node ids, but " +
-        s"`${f.name}` is ${f.dataType.simpleString}")
-    val rows = raw.select(col("src").cast(LongType), col("dst").cast(LongType)).collect()
+    val rows = asLongs(raw, op).collect()
     val backward = targets.isDefined
     val spark = raw.sparkSession
     val adj = spark.sparkContext.broadcast(adjacency(rows, if (backward) 1 else 0))
     val nodes = adj.value.ids.length + 1 // the null id's index included
     val starts = targets.fold(
       spark.range(0, nodes, 1, math.min(nodes, spark.sparkContext.defaultParallelism)).toDF())(
-      _.select(col("dst").cast(LongType)).distinct())
+      t => asLongs(t.select(col("dst")), op).distinct())
     // The walks emit longs; the final projection restores the input's
     // column types (exact: every id came from that column).
     starts.mapPartitions(_.filterNot(_.isNullAt(0)).flatMap { r =>
@@ -332,184 +343,103 @@ object Graph {
     * produces), so each component is equivalent to a star around its
     * representative, and components(old pairs ∪ new pairs) =
     * components(star edges ∪ new pairs). That graph only changes
-    * where new pairs touch it, so the merge runs entirely in
+    * where new pairs touch it, so the merge is one driver pass in
     * REPRESENTATIVE space:
     *
-    *   1. lift each new-pair endpoint to its current label (absent →
-    *      itself): one LEFT SEMI of the corpus-sized assignment
-    *      against the slice's endpoint set (broadcastable build side
-    *      — ONE scan of the assignment, never a shuffle of it),
-    *      then slice-sized joins;
-    *   2. min-label propagation over the lifted pairs — a graph with
-    *      one node per TOUCHED component, never corpus-sized; since
-    *      every old label is its component's min id, the rep-space
-    *      minimum IS the global min id;
-    *   3. broadcast the rep→label remap back over the assignment to
-    *      emit delta rows.
+    *   1. one action collects the slice's distinct non-self pairs;
+    *   2. one scan of the assignment collects the rows of their
+    *      endpoints, probed against the endpoint set as a local frame
+    *      (a broadcast build with exact statistics — the assignment is
+    *      scanned, never shuffled); an absent endpoint is its own
+    *      representative;
+    *   3. a union-find over the lifted pairs, keeping the min id as
+    *      each set's root: since every old label is its component's
+    *      min id, the root IS the merged component's global min id.
     *
     * Returns DELTA rows only — (id, comp) for every id whose label
-    * changed plus every id the assignment has never seen — so the
-    * output is bounded by |touched components| + |slice|, and the
-    * caller upserts (anti-join + union, a31's apply shape):
+    * changed plus every id the assignment has never seen, no id
+    * twice — as a lazy frame: the assignment probed against the local
+    * remap of the relabelled reps, plus the never-seen ids as a local
+    * frame. The output is bounded by |touched components| + |slice|,
+    * and the caller upserts (anti-join + union, a31's apply shape):
     * upsert(assignment, delta) ≡ full recompute over old ∪ new pairs
     * (pinned in GraphSpec against randomized graphs). Work per cycle
-    * is two broadcast-join scans of the assignment plus
-    * rep-space iteration — nothing proportional to the OLD pair set,
-    * which is exactly what a 100 TB corpus cannot afford to replay
-    * per ingest cycle. `maxIter` bounds the rep-space rounds (slice
-    * merge diameter, not corpus diameter) with
-    * [[connectedComponents]]'s warn/strict contract; `strict` ALSO
-    * validates the min-id precondition itself on the touched rows
-    * (comp ≤ id; labels exist and are fixpoints) so a non-canonical
-    * assignment fails loudly instead of merging wrong.
+    * is at most three broadcast-probe scans of the assignment (two
+    * here, one when the delta is read, skipped when the slice merges
+    * no old components) — nothing proportional to the OLD pair
+    * set, which is exactly what a 100 TB corpus cannot afford to
+    * replay per ingest cycle. There are no rounds, so a merge chain
+    * of any length costs the same jobs, and no cut outlives the call.
+    *
+    * The min-id precondition is validated on every call, because the
+    * assignment usually comes from outside the program (a
+    * [[graft.sinks.ModelStore]] load) and a non-canonical one merges
+    * WRONG silently — a new id can collide with a non-min label and
+    * relabel an untouched component. Every touched row must carry a
+    * non-null comp ≤ id, and a second scan of the assignment (the
+    * touched labels as the local probe) checks that every touched
+    * label labels itself; a violation throws
+    * `IllegalArgumentException`. Ids must be integral (byte, short,
+    * int or long), or `IllegalArgumentException` is thrown; the output
+    * keeps the column types the inputs imply.
+    *
+    * PRECONDITION: the slice's pair set fits in the driver (the
+    * touched rows and the remap are bounded by it) — the contract the
+    * closure deltas state for their base relation.
     */
   def componentsDelta(assignment: DataFrame, newPairs: DataFrame,
-                      idA: String = "id_a", idB: String = "id_b",
-                      maxIter: Int = 25, strict: Boolean = false): DataFrame = {
+                      idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     val asg = assignment.select(col("id"), col("comp"))
-    // EAGER slice cuts (r17 A/B): e0 is double-scanned by the
-    // endpoint union, touched by the strict stats' crossJoined aggs,
-    // nodeRep by compPairs' two endpoint lifts — each a
-    // multi-scan-in-one-job shape where a lazy cut double-computes
-    // the upstream (slice-Jaccard) pipeline under Spark's
-    // get-or-compute race (two tasks materialize the same partition
-    // concurrently; measured +40% cpu). The job-count diet here
-    // comes from the merged strict stats action and the inner
-    // loop's counted cuts instead.
-    val e0 = newPairs.select(col(idA).as("a"), col(idB).as("b"))
-      .filter(col("a") =!= col("b")).distinct().cut()
-    val nodes = e0.select(col("a").as("id"))
-      .union(e0.select(col("b").as("id"))).distinct().cut()
-    // Slice-bounded view of the old labels: LEFT SEMI keeps the
-    // build (endpoint) side broadcastable, so the corpus-sized
-    // assignment is scanned, not shuffled. The broadcast is HINTED
-    // (r18, closing the r17 verdict's ask #1): `nodes` is a
-    // checkpoint scan carrying no size statistics, so the static
-    // planner cannot prove the broadcast on its own and plans a
-    // sort-merge join — AQE converts it at runtime, but only AFTER
-    // the assignment's map-side shuffle write has executed (the r18
-    // executed-plan dumps show the residual Exchange on asg). The
-    // hint is the module's own declared slice contract (the strict
-    // path's reps already hint for the same reason), and it deletes
-    // the assignment exchange statically.
-    val touched = asg.join(nodes.hint("broadcast"), Seq("id"), "left_semi").cut()
-    // strict: the merge is only correct under the min-id label
-    // convention documented as this function's precondition (labels =
-    // component min ids, every label a fixpoint). A non-canonical
-    // assignment — hand-built, migrated from another system,
-    // label-perturbed — would merge WRONG silently: a new node id can
-    // collide with a non-min component label and relabel an untouched
-    // component. Verify the cheap necessary conditions on the
-    // SLICE-BOUNDED touched frame so violations fail loudly instead:
-    // (a) comp <= id on every touched row (a min label never exceeds
-    // its members), and (b) every touched label exists in the
-    // assignment and labels ITSELF (min-id labels are fixpoints) —
-    // one more broadcast-probe scan of the assignment with the
-    // slice-bounded label set on the build side. Both are declared
-    // scalar driver actions, run only under strict.
-    // Failure cleanup: a strict-mode require or the rep-space loop's
-    // maxIter throw returns nothing to the caller, so the slice cuts
-    // die with it — free them on the way out (the error-path half of
-    // the uncut contract; a serving loop that catches and retries per
-    // cycle must not accumulate them).
-    def failing[T](body: => T): T =
-      try body
-      catch { case t: Throwable =>
-        e0.uncut(); nodes.uncut(); touched.uncut()
-        throw t
+    val spark = asg.sparkSession
+    import spark.implicits._
+    val pairs = asLongs(newPairs.select(col(idA).as("a"), col(idB).as("b")), "componentsDelta")
+      .filter(col("a") =!= col("b")).collect().map(r => (r.getLong(0), r.getLong(1))).distinct
+    val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val longAsg = asLongs(asg, "componentsDelta")
+    def rowsOf(ids: Iterable[Long]): Array[Row] =
+      longAsg.join(ids.toSeq.toDF("id"), Seq("id"), "left_semi").collect()
+    val touched = rowsOf(nodes)
+    require(touched.forall(r => !r.isNullAt(1) && r.getLong(1) <= r.getLong(0)),
+      "componentsDelta: the assignment violates the min-id label convention " +
+        "(a touched row has comp > id, or a NULL comp) — merging on a " +
+        "non-canonical assignment silently corrupts labels; rebuild it with " +
+        "connectedComponents")
+    val label = touched.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val reps = label.values.toSet
+    val repRows = rowsOf(reps)
+    require(repRows.length == reps.size &&
+      repRows.forall(r => !r.isNullAt(1) && r.getLong(1) == r.getLong(0)),
+      "componentsDelta: a touched component label is missing from the " +
+        "assignment or does not label itself (assignment(comp) must equal " +
+        "comp under the min-id convention) — rebuild the assignment with " +
+        "connectedComponents")
+    // Union-find with path halving; every root is its set's min id.
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var v = x
+      while (parent.getOrElse(v, v) != v) {
+        val up = parent.getOrElse(parent(v), parent(v))
+        parent(v) = up
+        v = up
       }
-    if (strict) failing {
-      // ONE driver action (it runs per delta call, so job latency
-      // matters more than data volume — the r16 verdict's per-round
-      // 1-task stat jobs): an agg over the slice-bounded touched
-      // frame checks ordering and counts the distinct labels, and a
-      // broadcast-probe scan of the assignment checks those labels
-      // exist and are fixpoints; the two 1-row aggregates meet in a
-      // crossJoin (the Sampling/Corpus broadcast-1-row-dim pattern)
-      // so both verdicts land in a single head(). The existence
-      // check runs unconditionally — with zero touched reps the semi
-      // probe is empty and both its counts read 0, which satisfies
-      // the same requires the old nReps > 0 guard protected. The
-      // label set is broadcast by hint — it is bounded by the touched
-      // rows (slice contract), and an agg-topped subtree carries no
-      // size estimate for the planner to prove the broadcast on its
-      // own (the overCapShingles rationale, without paying its
-      // checkpoint job).
-      // NULL-safe: `comp > id` evaluates to NULL for a null comp and
-      // count_distinct skips nulls, so a corrupted (id, null) row —
-      // e.g. from a bad outer-join upsert — would sail through both
-      // checks and then be treated as its own representative by the
-      // coalesce below. Count nulls explicitly in the same agg.
-      val reps = touched.select(col("comp").as("id")).distinct()
-      val repAgg = asg.join(reps.hint("broadcast"), Seq("id"), "left_semi")
-        .agg(count(lit(1)).as("__rep_n"),
-          coalesce(sum(when(col("comp") === col("id"), 0L).otherwise(1L)),
-            lit(0L)).as("__rep_bad"))
-      val stats = touched.agg(
-        coalesce(sum(when(col("comp").isNull || col("comp") > col("id"), 1L)
-          .otherwise(0L)), lit(0L)).as("__t_bad"),
-        count_distinct(col("comp")).as("__t_reps"))
-        .crossJoin(repAgg).head()
-      require(stats.getLong(0) == 0L,
-        "componentsDelta(strict = true): the assignment violates the min-id " +
-          "label convention (a touched row has comp > id, or a NULL comp) — " +
-          "merging on a non-canonical assignment silently corrupts labels; " +
-          "rebuild it with connectedComponents")
-      require(stats.getLong(2) == stats.getLong(1) && stats.getLong(3) == 0L,
-        "componentsDelta(strict = true): a touched component label is " +
-          "missing from the assignment or does not label itself " +
-          "(assignment(comp) must equal comp under the min-id convention) " +
-          "— rebuild the assignment with connectedComponents")
+      v
     }
-    // Both sides are slice-bounded cuts; hint the probe side so the
-    // join plans broadcast statically (stats-less checkpoint scans,
-    // the r18 hint rationale above).
-    val nodeRep = nodes.join(touched.hint("broadcast"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("rep")).cut()
-    val compPairs = e0
-      .join(nodeRep.select(col("id").as("a"), col("rep").as("rep_a")), "a")
-      .join(nodeRep.select(col("id").as("b"), col("rep").as("rep_b")), "b")
-      .select(col("rep_a").as("id_a"), col("rep_b").as("id_b"))
-      .filter(col("id_a") =!= col("id_b")).distinct()
-    // (old rep → merged label); pairs inside one component vanished
-    // above, so this graph holds only reps that actually merge.
-    // connectedComponents always returns a checkpointed frame — no
-    // re-cut (a second materialization for nothing).
-    val repMap = failing {
-      try connectedComponents(compPairs, maxIter = maxIter, strict = strict)
-      catch { case t: Throwable => nodeRep.uncut(); throw t }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(label.getOrElse(a, a)), find(label.getOrElse(b, b)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    // compPairs was consumed by connectedComponents' own eager input
-    // cut, so the slice pair set and the rep lift are dead; `nodes`
-    // and `touched` stay live inside the returned lazy delta.
-    e0.uncut()
-    nodeRep.uncut()
-    val remapped = repMap.filter(col("id") =!= col("comp"))
-      .select(col("id").as("__oldc"), col("comp").as("__newc"))
-    // Every member of a remapped old component changes label — work
-    // ∝ touched component sizes (broadcast probe over `comp`). The
-    // remap is bounded by the touched components (slice contract) but
-    // reads from connectedComponents' stats-less label cut — hint the
-    // broadcast so the assignment is never exchanged here (the r18
-    // hint rationale on `touched` above).
-    val changedOld = asg.join(remapped.hint("broadcast"),
-        asg("comp") === col("__oldc"))
+    // Only relabelled reps enter the remap; when none is, the probe is
+    // an empty local join that the optimizer removes, and the delta
+    // reads no assignment row at all.
+    val remap = reps.toSeq.map(r => (r, find(r))).filter(p => p._1 != p._2)
+    val changedOld = asg.join(remap.toDF("__oldc", "__newc"), asg("comp") === col("__oldc"))
       .select(asg("id"), col("__newc").as("comp"))
-    // Ids the assignment has never seen: label = their rep's merged
-    // label, or themselves when their pairs stayed within one rep.
-    // Anti-join against `touched` (= assignment ∩ nodes, slice-
-    // bounded and already materialized), NOT the corpus-sized
-    // assignment — the same set difference without ever shuffling
-    // the assignment (PlanSpec pins the no-SortMergeJoin shape).
-    // Slice-bounded build sides on both joins — hinted for the same
-    // stats-less-checkpoint reason as `touched` above.
-    val newRows = nodes.join(touched.select("id").hint("broadcast"),
-        Seq("id"), "left_anti")
-      .join(repMap.select(col("id").as("__rid"), col("comp").as("__rc"))
-          .hint("broadcast"),
-            col("id") === col("__rid"), "left")
-      .select(col("id"), coalesce(col("__rc"), col("id")).as("comp"))
-    changedOld.union(newRows)
+    val newRows = nodes.filterNot(label.contains).map(id => (id, find(id))).toSeq.toDF("id", "comp")
+    // The column types a union of the assignment and the pair
+    // endpoints widens to (exact: every value came from those columns).
+    val ends = newPairs.select(col(idA)).union(newPairs.select(col(idB)))
+    def typed(c: String) = col(c).cast(asg.select(c).union(ends).schema.head.dataType)
+    changedOld.union(newRows).select(typed("id"), typed("comp"))
   }
 
   /** INCREMENTAL transitive closure — [[componentsDelta]]'s sibling
@@ -550,7 +480,7 @@ object Graph {
     // under Spark's get-or-compute race when cut lazily.
     val e0 = newEdges.select(col("src"), col("dst")).distinct().cut()
     // Hinted broadcasts on the slice sides of both cone compositions
-    // (r18, the componentsDelta rationale): the slice cuts carry no
+    // (r18): the slice cuts carry no
     // statistics, so without hints the static plan sort-merged —
     // shuffling the corpus-sized closure per cycle before AQE's
     // runtime conversion; the scaladoc above already declares the
@@ -565,7 +495,7 @@ object Graph {
     // computes it. Its collect job is the slice cuts' last read, so
     // they are freed on the way out, on failure too (an executor-loss
     // SparkException must not leak them into a catch-and-retry serving
-    // loop — the componentsDelta `failing` contract).
+    // loop).
     val total =
       try transitiveClosure(b)
       finally { e0.uncut(); withPrefix.uncut() }

@@ -350,7 +350,8 @@ object Similarity {
     * sampled seeds, existence/broadcast-size guards, `kmeansIters`
     * Lloyd rounds on `fitKeep`/`fitBuckets` hash-sampled vectors
     * (9-dp-rounded renormalized means — deterministic in practice).
-    * Returns the broadcast (cid, cvec) centroid set. */
+    * Returns the (cid, cvec) centroid set, unhinted: the crossJoins
+    * that consume it ([[ivfAssign]], [[ivfNearest]]) broadcast it. */
   private def ivfFit(unit: DataFrame, centroidMod: Long, kmeansIters: Int,
                      fitBuckets: Int, fitKeep: Int,
                      caller: String): DataFrame = {
@@ -382,7 +383,7 @@ object Similarity {
           s"$caller: broadcasting $c centroids x $dim dims (~${c * dim * 8 / (1 << 20)} MB) " +
             "per Lloyd round; raise centroidMod or fit on a sample (fitKeep)")
     }
-    var centroids = broadcast(seeds)
+    var centroids = seeds
     // Only rounds ≥ 2 supersede a cut WE made — the seed frame wraps
     // the caller's live corpus cut, which uncut must never touch.
     var priorCut: Option[org.apache.spark.sql.DataFrame] = None
@@ -407,7 +408,7 @@ object Similarity {
         .cut()
       priorCut.foreach(Checkpoints.uncut)
       priorCut = Some(refined)
-      centroids = broadcast(refined)
+      centroids = refined
     }
     centroids
   }
@@ -416,7 +417,7 @@ object Similarity {
     * cid-ascending tie-break — via map-side-combinable max_by, so the
     * exchange carries N rows, never the N·C candidates. */
   private def ivfAssign(df: DataFrame, centroids: DataFrame): DataFrame =
-    df.crossJoin(centroids)
+    df.crossJoin(broadcast(centroids))
       .withColumn("cdot", Vectors.dot(col("unit"), col("cvec")))
       .groupBy("id")
       .agg(expr("max_by(cid, struct(cdot, -cid))").as("cid"),
@@ -426,7 +427,7 @@ object Similarity {
   private def ivfNearest(df: DataFrame, centroids: DataFrame,
                          n: Int, outId: String): DataFrame =
     Relational.topKPerGroup(
-      df.crossJoin(centroids)
+      df.crossJoin(broadcast(centroids))
         .withColumn("cdot", Vectors.dot(col("unit"), col("cvec"))),
       Seq(col("id")), Seq(col("cdot").desc, col("cid").asc), n, "__cr")
       .select(col("id").as(outId), col("cid"))
@@ -599,7 +600,7 @@ object Similarity {
     val unit = normalized(slice.filter(col(vecCol).isNotNull),
       idCol, vecCol).cut()
     freeingOnFailure(unit) {
-      val assigned = ivfAssign(unit, broadcast(centroids))
+      val assigned = ivfAssign(unit, centroids)
         .select(col("id"), col("cid"))
       assigned.join(quantizePq(unit, "id", "unit", codebook, m, dim), "id")
         .select("id", "cid", "codes")

@@ -19,12 +19,12 @@ object GroupD {
   /** d19's registered body, dims injected (the servingChain pattern —
     * ScaleProbe drives THIS, so the probed plan is the served plan):
     * slice-confirm against the persisted shingle index (+ its sizes
-    * dim), new×new pairs, rep-space merge into the persisted
-    * assignment, then the full upsert emission — the assignment is
-    * scanned twice (broadcast-probe merge + anti-join), never
-    * shuffled, and the upsert's output is intrinsically
-    * assignment-sized (the registered contract: emit the whole
-    * updated assignment). */
+    * dim), new×new pairs, the one-pass component merge into the
+    * persisted assignment, then the full upsert emission — the
+    * assignment is only ever scanned (componentsDelta's broadcast
+    * probes + the upsert's anti-join), never shuffled, and the
+    * upsert's output is intrinsically assignment-sized (the
+    * registered contract: emit the whole updated assignment). */
   def componentsServingOf(incoming: DataFrame, exSh: DataFrame,
                           exSizes: DataFrame, asg: DataFrame): DataFrame = {
     // ONE slice shingle pass (r17, guide §1.2): the confirm probe and
@@ -36,13 +36,14 @@ object GroupD {
       .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
       .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
         .select("id_a", "id_b"))
-    val delta = Graph.componentsDelta(asg, newPairs, strict = true)
+    val delta = Graph.componentsDelta(asg, newPairs)
     // delta is |touched components| + |slice|-bounded (componentsDelta's
-    // output contract) but plans over stats-less checkpoint scans, so
-    // the anti-join statically sort-merged — shuffling the corpus-sized
-    // assignment once per serving cycle before AQE's runtime broadcast
-    // conversion could intervene (the r18 executed-plan dump shows the
-    // residual Exchange on asg). Hint the broadcast; the assignment is
+    // output contract) but its remap probe scans the assignment, whose
+    // plan carries no size statistics, so the anti-join statically
+    // sort-merged — shuffling the corpus-sized assignment once per
+    // serving cycle before AQE's runtime broadcast conversion could
+    // intervene (the r18 executed-plan dump shows the residual
+    // Exchange on asg). Hint the broadcast; the assignment is
     // then scanned only, the declared serving contract.
     asg.join(delta.hint("broadcast"), Seq("id"), "left_anti")
       .unionByName(delta)
@@ -242,10 +243,10 @@ object GroupD {
         .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
         .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
           .select("id_a", "id_b"))
-      val delta = Graph.componentsDelta(oldAssign, newPairs, strict = true)
+      val delta = Graph.componentsDelta(oldAssign, newPairs)
       // Hinted broadcast on the slice-bounded delta — the d19 upsert's
-      // rationale (stats-less checkpoint scans statically sort-merged
-      // the corpus-sized assignment).
+      // rationale (the delta's stats-less assignment scan statically
+      // sort-merged the corpus-sized assignment).
       oldAssign.join(delta.hint("broadcast"), Seq("id"), "left_anti")
         .unionByName(delta)
         .select(col("id").as("doc_id"), col("comp").as("component"))

@@ -278,7 +278,7 @@ object GroupP {
     * the scale contract: the bitmap gate is two corpus-linear passes
     * and shrinks the confirm join to the maybe sliver; the confirm
     * join is bipartite (slice × corpus index, never a self-join); the
-    * component merge iterates only in representative space
+    * component merge is one driver pass in representative space
     * ([[Graph.componentsDelta]]); the vector-side assignment touches
     * two broadcast dims and the slice. Nothing re-pairs or re-labels
     * the existing corpus. (The old-corpus assignment and the IVF/PQ
@@ -348,7 +348,7 @@ object GroupP {
           .select("id_a", "id_b"))
       // Incoming ids are absent from the old assignment by construction,
       // so their labels live entirely in the delta.
-      val comp = Graph.componentsDelta(oldAssign, newPairs, strict = true)
+      val comp = Graph.componentsDelta(oldAssign, newPairs)
         .filter(col("id") % 10 === 0)
         .select(col("id").as("doc_id"), col("comp").as("component"))
       (gate, dupStats, comp)
@@ -519,14 +519,14 @@ object GroupP {
         .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
         .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
           .select("id_a", "id_b"))
-      val comp = Graph.componentsDelta(asg, newPairs, strict = true)
+      val comp = Graph.componentsDelta(asg, newPairs)
         .filter(col("id") % 10 === 0)
         .select(col("id").as("doc_id"), col("comp").as("component"))
       (gate, dupStats, comp)
     }
     // VECTOR LEG: slice assignment against the reloaded dims — eager
     // only in its normalize cut, but its stages still back-fill the
-    // text leg's sequential rep-merge rounds (guide §2.6).
+    // text leg's sequential driver round-trips (guide §2.6).
     def vecLeg(): DataFrame =
       Similarity.ivfPqIndexDelta(sliceEmb,
           "vec_id", "embedding", cent, cb, m = 8, dim = 64)

@@ -541,9 +541,9 @@ object ScaleProbe {
           n = 3, tau = 0.5))),
       // d16: FIXED ingest slice (bridge pairs into the 1× copy's
       // components), K× assignment (the corpus-grows direction). The
-      // rep-space iteration, the remap, and the delta are all
+      // pair collect, the driver union-find and the remap are all
       // slice-bounded by construction, so the only K-scaled stages
-      // are the two narrow broadcast-probe scans of the assignment —
+      // are the narrow broadcast-probe scans of the assignment —
       // the ratio must stay FAR below K. A corpus-sized iteration
       // (d7's shape, what this operator replaces per ingest cycle)
       // would read ≈ K or worse.

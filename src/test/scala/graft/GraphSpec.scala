@@ -28,6 +28,21 @@ class GraphSpec extends GraftSuite {
     adj.keys.flatMap(s => reach(s).map(d => (s, d))).toSet
   }
 
+  /** The Spark jobs `body` starts, counted by a listener after the
+    * listener bus drains. */
+  private def jobs(body: => Unit): Int = {
+    val sc = ss.sparkContext
+    SparkInternals.drainListenerBus(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { body; SparkInternals.drainListenerBus(sc); n.get() }
+    finally sc.removeSparkListener(l)
+  }
+
   test("closure of a chain finds all ancestor pairs") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     assert(pairs(Graph.transitiveClosure(edges)) ===
@@ -209,18 +224,6 @@ class GraphSpec extends GraftSuite {
     // One job collects the edges; the walks run inside the one job
     // that reads the result. A walk by rounds would run a job per hop.
     val chain = (1L to 40L).map(i => (i, i - 1)).toDF("src", "dst")
-    val sc = ss.sparkContext
-    def jobs(body: => Unit): Int = {
-      SparkInternals.drainListenerBus(sc)
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      try { body; SparkInternals.drainListenerBus(sc); n.get() }
-      finally sc.removeSparkListener(l)
-    }
     val closureJobs = jobs(assert(Graph.transitiveClosure(chain).collect().length === 40 * 41 / 2))
     assert(closureJobs <= 2, s"transitiveClosure ran $closureJobs jobs")
     // The root as the one target: the whole chain reaches it.
@@ -395,8 +398,7 @@ class GraphSpec extends GraftSuite {
       val (oldE, newE) = all.partition(_ => rnd.nextInt(3) != 0)
       if (oldE.nonEmpty && newE.nonEmpty) {
         val oldAssign = Graph.connectedComponents(oldE.toDF("id_a", "id_b"))
-        val delta = Graph.componentsDelta(oldAssign, newE.toDF("id_a", "id_b"),
-          strict = true)
+        val delta = Graph.componentsDelta(oldAssign, newE.toDF("id_a", "id_b"))
         val merged = oldAssign
           .join(delta, Seq("id"), "left_anti").unionByName(delta)
           .as[(Long, Long)].collect().toMap
@@ -444,28 +446,58 @@ class GraphSpec extends GraftSuite {
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() === 0L)
   }
 
-  test("delta operators: strict throws before returning incomplete results") {
-    // A slice that CHAINS (11 component merges) needs more rep-space
-    // rounds than maxIter = 1 allows — strict must throw, never hand
-    // back a silently-short delta. Pair up isolated two-node comps,
-    // then chain them with a slice — rep-space diameter > 1.
+  test("componentsDelta merges a slice that chains 11 components") {
+    // Pair up isolated two-node comps, then chain them with a slice —
+    // rep-space diameter 11: every member but the first component's
+    // moves onto the chain's min id, 50.
     val asg = Graph.connectedComponents(
       (0L until 12L).map(i => (2 * i + 50, 2 * i + 51)).toDF("id_a", "id_b"))
-    intercept[IllegalStateException] {
-      Graph.componentsDelta(asg,
-        (0L until 11L).map(i => (2 * i + 50, 2 * i + 52)).toDF("id_a", "id_b"),
-        maxIter = 1, strict = true).count()
-    }
+    val delta = Graph.componentsDelta(asg,
+        (0L until 11L).map(i => (2 * i + 50, 2 * i + 52)).toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect()
+    assert(delta.toMap === (52L to 73L).map(_ -> 50L).toMap)
+    assert(delta.length === 22)
   }
 
-  test("componentsDelta strict rejects a non-canonical assignment loudly") {
+  test("componentsDelta labels a 31-document chain of new ids with its min id") {
+    // None of the 31 ids is in the assignment; the slice chains them
+    // from the top down, the worst order for a min-root union-find.
+    val asg = Graph.connectedComponents(Seq((1L, 2L)).toDF("id_a", "id_b"))
+    val slice = (29L to 0L by -1L).map(i => (1001L + i, 1000L + i)).toDF("id_a", "id_b")
+    assert(Graph.componentsDelta(asg, slice).as[(Long, Long)].collect().toMap ===
+      (1000L to 1030L).map(_ -> 1000L).toMap)
+  }
+
+  test("componentsDelta runs the same few jobs at any merge-chain length") {
+    // 31 two-node components; a slice chaining d + 1 of them has
+    // rep-space diameter d. A merge by label-propagation rounds runs
+    // more jobs the longer the chain.
+    val asg = Graph.connectedComponents(
+      (0L until 31L).map(i => (2 * i + 50, 2 * i + 51)).toDF("id_a", "id_b"))
+    val counts = for (d <- Seq(1, 8, 30)) yield {
+      val slice = (0L until d.toLong).map(i => (2 * i + 50, 2 * i + 52)).toDF("id_a", "id_b")
+      jobs(assert(Graph.componentsDelta(asg, slice).count() === 2L * d))
+    }
+    assert(counts.distinct.length === 1 && counts.head <= 8,
+      s"componentsDelta jobs at diameters 1, 8, 30: $counts")
+  }
+
+  test("componentsDelta leaves no persisted RDD behind") {
+    val asg = Graph.connectedComponents(Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b"))
+    val before = ss.sparkContext.getPersistentRDDs.keySet
+    assert(Graph.componentsDelta(asg,
+      Seq((2L, 5L), (9L, 5L)).toDF("id_a", "id_b")).count() === 3L)
+    assert(ss.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("componentsDelta rejects a non-canonical assignment loudly") {
     // The merge's precondition is the min-id label convention; a
-    // perturbed assignment must FAIL under strict, never merge wrong.
+    // perturbed assignment must FAIL, never merge wrong.
     // (a) comp > id on a touched row:
     val badOrder = Seq((1L, 2L), (2L, 2L)).toDF("id", "comp")
     val e1 = intercept[IllegalArgumentException] {
       Graph.componentsDelta(badOrder,
-        Seq((1L, 9L)).toDF("id_a", "id_b"), strict = true).count()
+        Seq((1L, 9L)).toDF("id_a", "id_b")).count()
     }
     assert(e1.getMessage.contains("min-id"))
     // (b) a touched label that is absent from the assignment (3's
@@ -473,19 +505,19 @@ class GraphSpec extends GraftSuite {
     val missingRep = Seq((3L, 0L)).toDF("id", "comp")
     val e2 = intercept[IllegalArgumentException] {
       Graph.componentsDelta(missingRep,
-        Seq((3L, 9L)).toDF("id_a", "id_b"), strict = true).count()
+        Seq((3L, 9L)).toDF("id_a", "id_b")).count()
     }
     assert(e2.getMessage.contains("label itself"))
     // (c) a touched label that exists but does not label itself:
     val e3 = intercept[IllegalArgumentException] {
       Graph.componentsDelta(Seq((2L, 1L), (1L, 0L)).toDF("id", "comp"),
-        Seq((2L, 9L)).toDF("id_a", "id_b"), strict = true).count()
+        Seq((2L, 9L)).toDF("id_a", "id_b")).count()
     }
     assert(e3.getMessage.contains("label itself"))
     // The canonical form of the same inputs still merges fine.
     val ok = Graph.connectedComponents(Seq((1L, 2L)).toDF("id_a", "id_b"))
     assert(Graph.componentsDelta(ok,
-      Seq((1L, 9L)).toDF("id_a", "id_b"), strict = true).count() === 1L)
+      Seq((1L, 9L)).toDF("id_a", "id_b")).count() === 1L)
   }
 
   test("componentsDelta: empty slice yields empty delta; untouched components stay put") {

@@ -156,24 +156,26 @@ class PlanSpec extends GraftSuite {
 
   test("d16: componentsDelta's delta plan never shuffles the assignment") {
     // The serving contract: the corpus-sized (id, comp) assignment is
-    // SCANNED (broadcast-probe joins), never shuffled. The slice-
-    // bounded frames (endpoint set, touched labels, rep remap) are
-    // checkpointed, so every join against the assignment must resolve
-    // as a BroadcastHashJoin — a SortMergeJoin anywhere in the delta
-    // plan means the assignment went through an exchange.
+    // SCANNED (broadcast-probe joins), never shuffled. The delta
+    // probes the assignment with the local rep remap, so that join
+    // must resolve as a BroadcastHashJoin — a SortMergeJoin anywhere
+    // in the delta plan means the assignment went through an exchange.
+    // The slice bridges two old components (5's and 30's), so the
+    // remap is not empty: a slice that relabels no old component
+    // leaves the delta a local frame with no join to pin.
     val ss = SparkTestBase.spark
     import ss.implicits._
-    val chain = (1L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val chain = ((1L until 20L) ++ (30L until 40L)).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val asg = graft.operators.Graph.connectedComponents(chain)
     val delta = graft.operators.Graph.componentsDelta(asg,
-      Seq((1000L, 5L), (1001L, 1000L)).toDF("id_a", "id_b"))
-    // STATIC pin (r18): the delta emission's own plan — broadcast-
-    // hinted slice frames over stats-less checkpoint scans — must
+      Seq((1000L, 5L), (1001L, 1000L), (1001L, 30L)).toDF("id_a", "id_b"))
+    // STATIC pin (r18): the delta emission's own plan — a local remap
+    // (exact statistics) against the stats-less assignment scan — must
     // already be all-broadcast BEFORE execution. The post-AQE
-    // assertion below passed on tiny test frames even without the
-    // hints (AQE converted at runtime AFTER shuffling the assignment
-    // map-side), so only this pre-execution pin proves the static
-    // shape the r18 executed-plan dumps measured.
+    // assertion below passes on tiny test frames even when the static
+    // plan sort-merges (AQE converts at runtime AFTER shuffling the
+    // assignment map-side), so only this pre-execution pin proves the
+    // static shape.
     val staticP = delta.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert(!staticP.contains("SortMergeJoin"),
