@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 /** Lineage cuts for iterative and multi-consumer intermediates.
   *
   * Every iterative operator in this package (connected components,
-  * the cycle peel, LSH bucket sets, pair generators) materializes
+  * LSH bucket sets, pair generators) materializes
   * intermediates so the Catalyst plan does not grow with iteration
   * count and shared subplans execute once. One resolver picks the
   * mechanism per cut, because Spark's two checkpoint flavors fail
@@ -32,11 +32,11 @@ import org.apache.spark.storage.StorageLevel
   * switch every graft operator to reliable cuts; it is read per cut, so
   * a session can flip it between jobs.
   *
-  * `round = true` marks a per-ROUND cut of an iterative loop (label
-  * propagation, the cycle peel) and persists its local blocks DISK_ONLY instead
-  * of localCheckpoint's MEMORY_AND_DISK. Each round supersedes the
-  * last, and round blocks held in the unified storage pool churn
-  * through eviction and re-serialization under co-tenant memory
+  * `cutEval(round = true)` marks a per-ROUND cut of an iterative loop
+  * (the connected-components rounds) and persists its local blocks
+  * DISK_ONLY instead of localCheckpoint's MEMORY_AND_DISK. Each round
+  * supersedes the last, and round blocks held in the unified storage
+  * pool churn through eviction and re-serialization under co-tenant memory
   * pressure, multiplying task CPU by the remaining round count;
   * DISK_ONLY blocks never enter that pool. On a quiet host the loops
   * are neutral to the level (each round is written once and read
@@ -68,8 +68,7 @@ private[graft] object Checkpoints {
   }
 
   /** EAGER cut: the frame is materialized before this returns. */
-  def cut(df: DataFrame, round: Boolean = false): DataFrame =
-    resolve(df, eager = true, round)
+  def cut(df: DataFrame): DataFrame = resolve(df, eager = true, round = false)
 
   /** LAZY cut: lineage is truncated now (the plan becomes an RDD scan),
     * but materialization waits for the first consumer's job — the form
@@ -87,8 +86,8 @@ private[graft] object Checkpoints {
 
   /** Cut + inspect in ONE job: an iterative loop's per-round tail is
     * "materialize the round's frame, then run a scalar driver action on
-    * it" (emptiness, count, label sum), which an eager cut runs as two
-    * sequential jobs. Here the cut is lazy and `action` is the
+    * it" (connectedComponents' row count and label sum), which an eager
+    * cut runs as two sequential jobs. Here the cut is lazy and `action` is the
     * materializing job: local-checkpoint marking persists each
     * partition as the action's tasks compute it. The action must touch
     * every partition (a count or full aggregate, NEVER `take`/`isEmpty`,
@@ -101,14 +100,6 @@ private[graft] object Checkpoints {
     val c = resolve(df, eager = false, round)
     (c, action(c))
   }
-
-  /** [[cutEval]] with the action specialized to a row count — the
-    * convergence form [[Graph.reachesCycle]]'s peel rounds consume.
-    * The count runs over `queryExecution.toRdd` (a single-stage RDD job
-    * with a driver-side sum), not `Dataset.count()` (an Aggregate plan
-    * with a one-row exchange — a second stage per round for nothing). */
-  def cutCount(df: DataFrame, round: Boolean = false): (DataFrame, Long) =
-    cutEval(df, round)(_.queryExecution.toRdd.count())
 
   /** Free the executor-storage blocks behind a SUPERSEDED cut — the
     * other half of the cut contract. An iterative operator that cuts a
@@ -150,10 +141,10 @@ private[graft] object Checkpoints {
     org.slf4j.LoggerFactory.getLogger(getClass)
       .warn(s"uncut skipped (blocks stay live): ${e.getMessage}")
 
-  /** `df.cut()` / `df.cut(round = true)` / `df.cutLazy()` / `df.uncut()`
-    * — the call-site forms the operators use. */
+  /** `df.cut()` / `df.cutLazy()` / `df.uncut()` — the call-site forms
+    * the operators use. */
   implicit class Cuttable(private val df: DataFrame) extends AnyVal {
-    def cut(round: Boolean = false): DataFrame = Checkpoints.cut(df, round)
+    def cut(): DataFrame = Checkpoints.cut(df)
     def cutLazy(): DataFrame = Checkpoints.cutLazy(df)
     def uncut(): Unit = Checkpoints.uncut(df)
   }

@@ -42,9 +42,8 @@ object Dedup {
     * next to the corpus; the anti-join shuffles on the id, or
     * broadcasts when the dup set is small enough for AQE to see it).
     */
-  def keepCanonical(docs: DataFrame, pairs: DataFrame, idCol: String,
-                    strict: Boolean = true): DataFrame = {
-    val losers = Graph.connectedComponents(pairs, strict = strict)
+  def keepCanonical(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
+    val losers = Graph.connectedComponents(pairs)
       .filter(col("id") =!= col("comp"))
       .select(col("id").as("__loser"))
     docs.join(losers, docs(idCol) === col("__loser"), "left_anti")

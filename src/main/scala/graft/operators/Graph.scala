@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.operators.Checkpoints.Cuttable
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,19 +21,19 @@ import org.apache.spark.sql.types._
   *
   * [[componentsDelta]] merges a slice into a component assignment the
   * same way: one collect of the slice's pairs, one union-find on the
-  * driver, no rounds and no cuts.
+  * driver, no rounds and no cuts. [[reachesCycle]] peels the edge set
+  * on the driver after one collect, under the same precondition.
   *
-  * [[connectedComponents]] and [[reachesCycle]] iterate over pair sets
-  * that may be corpus-sized. Each round is one shuffle on the join key; a
-  * [[Checkpoints]] cut truncates lineage so the plan doesn't grow with
-  * iteration count (and AQE re-plans each round from actual sizes).
-  * Cuts default to `localCheckpoint`; set `spark.graft.checkpointDir`
-  * for reliable checkpoints that survive executor loss — required on
-  * clusters with dynamic allocation.
+  * [[connectedComponents]] works on pair sets that may be corpus-sized,
+  * so it runs as Spark rounds to a fixpoint, each round a few shuffles
+  * keyed by id or label. A [[Checkpoints]] cut per round truncates
+  * lineage so the plan does not grow with the round count (and AQE
+  * re-plans each round from actual sizes). Cuts default to
+  * `localCheckpoint`; set `spark.graft.checkpointDir` for reliable
+  * checkpoints that survive executor loss — required on clusters with
+  * dynamic allocation.
   */
 object Graph {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** (src, dst) path composition: left's dst meets right's src. The
     * join shape both delta operators build their segment relations
@@ -83,6 +84,24 @@ object Graph {
           todo.enqueue(nbrs(j))
       }
       seen
+    }
+
+    /** On predecessor lists: the nodes left by Kahn's sink peel, which
+      * removes a node once all its successors are removed. They are
+      * exactly the nodes with an endless walk: on or leading to a cycle.
+      * The null id's out-edges count; edges into it must be left out. */
+    def unpeeled: Seq[Int] = {
+      val out = new Array[Int](ids.length + 1)
+      nbrs.foreach(out(_) += 1)
+      val todo = scala.collection.mutable.Queue((0 to ids.length).filter(out(_) == 0): _*)
+      while (todo.nonEmpty) {
+        val v = todo.dequeue()
+        for (j <- offsets(v) until offsets(v + 1)) {
+          out(nbrs(j)) -= 1
+          if (out(nbrs(j)) == 0) todo.enqueue(nbrs(j))
+        }
+      }
+      (0 to ids.length).filter(out(_) > 0)
     }
   }
 
@@ -197,40 +216,38 @@ object Graph {
     * keeper convention [[Dedup.exactGroups]] already uses. Ids must
     * be an integral type (the convergence check sums them).
     *
-    * Min-label propagation: every node starts as its own label; each
-    * round pulls the minimum label across edges (one shuffle join +
-    * one map-side-combinable min) and convergence is a single scalar
-    * aggregate — labels only ever decrease, so the label sum is
-    * strictly monotone until fixpoint; no per-row diff join. Round
-    * count = cluster diameter, which for near-dup clusters is small
-    * (dup groups are near-cliques); `maxIter` guards adversarial
-    * chains: stopping there unconverged logs a warning, or throws an
-    * `IllegalStateException` under `strict = true`.
+    * Label-class rounds, run to their fixpoint. The labels L start as
+    * the first round from the identity labelling, which the init job
+    * reads off the pairs: each node's smallest id among itself and its
+    * neighbours. One round sets L′(v) = K(L(v)), where
+    * K(r) = min(L(r), min{L(u) : (w, u) a pair, L(w) = r}): every
+    * label class takes the smallest label next to any of its members,
+    * or the label's own label if that is smaller. From the rule:
+    *  - labels only decrease, and each stays a member id of its own
+    *    component, so the label sum falls strictly until the fixpoint
+    *    and one sum per round detects it;
+    *  - the fixpoint is the min-id labelling: there no node has a
+    *    neighbour with a smaller label, so each component carries one
+    *    label, a member id no larger than its min id;
+    *  - L′ is at most the plain pull's update min(L(v), min over v's
+    *    neighbours u of L(u)) at every node, so the rounds never
+    *    outnumber plain min-label propagation's: at most the
+    *    diameter, on any graph. It terminates without a cap. The
+    *    label-class step contracts chains: a 3000-id path takes 14
+    *    rounds in path order and 13 in shuffled order, where plain
+    *    propagation takes up to 3000.
     *
-    * `shortcut = true` (r11) adds a POINTER-JUMPING pass after each
-    * pull — comp ← comp's own comp, the Shiloach–Vishkin hook+
-    * shortcut scheme (same goal as Kiveris et al.'s alternating
-    * large-star/small-star, SoCC'14: contract label chains
-    * geometrically) — so round count drops from the component
-    * diameter to ~log₂(diameter): a 300-node chain converges in 9
-    * rounds instead of 300. Labels still only decrease and stay
-    * component-member ids (the jump replaces a label by that label's
-    * label — same component), so the fixpoint and the min-id output
-    * contract are IDENTICAL (property-pinned against the plain form
-    * and a union-find). Cost per round is one extra comp-keyed
-    * self-join + cut — ~2× the plain round — so the trade pays on
-    * long-diameter graphs (hub-skewed continents, adversarial
-    * chains) and loses on dedup-shaped near-cliques (diameter 2–4,
-    * where plain converges in fewer total shuffles); hence opt-in,
-    * default off for the registered dedup queries. Shorter loops
-    * also shrink the under-pressure exposure window the r10 verdict
-    * flagged — fewer rounds holding fewer superseded cuts
-    * (Checkpoints.uncut already frees them eagerly either way).
+    * A round is the pull (the pair set joined with the labels on one
+    * endpoint), then node-sized steps: a groupBy on the id gives each
+    * node its own label and the smallest label in reach, and one
+    * window keyed by label gives each class its K, from its members'
+    * rows and the label's own row, and hands it to the members. The
+    * round's frame is one DISK_ONLY cut whose materializing job also
+    * computes the convergence sum; the superseded labels are freed,
+    * and no cut but the returned labels outlives the call.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 25,
-                          strict: Boolean = false,
-                          shortcut: Boolean = false): DataFrame = {
+                          idB: String = "id_b"): DataFrame = {
     // Materialize the pair set before mirroring it: the union consumes
     // e0 twice and the upstream pair generator (an LSH pipeline, a
     // Jaccard join) would otherwise execute twice.
@@ -249,21 +266,23 @@ object Graph {
     // pressure anomalies named (measured mode-neutral on a quiet host
     // — tools/cutab_*; see Checkpoints). The mirrored edge set stays a
     // memory cut: it is every round's probe side.
-    // (row count, label sum) in ONE full-frame aggregate — the
+    // (row count, label sum) in ONE pass over the frame's rows — the
     // action each round's counted cut folds into its materializing
-    // job (Checkpoints.cutEval; the eager cut + separate labelSum
-    // head() was two sequential jobs per round, and the 1-task
-    // stat job the r16 verdict named). Empty pair set → count 0 →
-    // done (sum() alone would be NULL there).
-    def labelStats(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(col("comp").cast("decimal(38,0)"))).head()
-      val s = r.getDecimal(1)
-      (r.getLong(0), if (s == null) java.math.BigDecimal.ZERO else s)
-    }
-    val init = Checkpoints.cutEval(
-      und.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")), round = true)(labelStats)
+    // job (Checkpoints.cutEval). An RDD fold over `toRdd` is a single
+    // job; a Dataset aggregate adds a one-row exchange stage per
+    // round. The sum is exact (BigInteger) and 0 on an empty frame.
+    def labelStats(df: DataFrame): (Long, java.math.BigInteger) =
+      df.select(col("comp").cast(LongType)).queryExecution.toRdd.mapPartitions { rows =>
+        var n = 0L
+        var sum = java.math.BigInteger.ZERO
+        rows.foreach { r => n += 1; sum = sum.add(java.math.BigInteger.valueOf(r.getLong(0))) }
+        Iterator((n, sum))
+      }.fold((0L, java.math.BigInteger.ZERO))((x, y) => (x._1 + y._1, x._2.add(y._2)))
+    // The first round from the identity labelling, read off the pairs:
+    // each node's smallest id among itself and its neighbours.
+    val (init, (n, initSum)) = Checkpoints.cutEval(
+      und.groupBy(col("a").as("id")).agg(min(col("b")).as("__m"))
+        .select(col("id"), least(col("id"), col("__m")).as("comp")), round = true)(labelStats)
     // The init job above materialized und (labels' parent) and e0
     // (und's parent); e0's only consumer is und — free its pair-set-
     // sized blocks now instead of carrying them through every
@@ -272,37 +291,29 @@ object Graph {
     // MUST follow the init action: und is a lazy cut that reads e0's
     // blocks when it materializes (the cutLazy ordering contract).
     e0.uncut()
-    var labels = init._1
-    var prevSum = init._2._2
-    var iter = 0
-    var done = init._2._1 == 0L
-    while (!done && iter < maxIter) {
+    val labelType = init.schema("comp").dataType
+    var labels = init
+    var prevSum = initSum
+    var done = n == 0L
+    while (!done) {
       val pulled = und.join(labels, und("b") === labels("id"))
-        .select(und("a").as("id"), col("comp"))
-      val hookedPlan = labels.union(pulled)
-        .groupBy("id").agg(min(col("comp")).as("comp"))
-      val (next, nextSum) =
-        if (!shortcut) {
-          val (h, (_, s)) = Checkpoints.cutEval(hookedPlan, round = true)(labelStats)
-          (h, s)
-        } else {
-          // Pointer jump: comp ← labels(comp). The hooked frame is
-          // cut EAGERLY here — its two appearances in the jump's
-          // self-join must be two scans of stored blocks, not a
-          // doubled execution racing to materialize a lazy cut; LEFT
-          // + coalesce keeps ids whose label has no row (cannot
-          // happen for und-derived labels, but the jump must never
-          // invent nulls). Chains contract geometrically: label
-          // depth halves per round.
-          val hooked = hookedPlan.cut(round = true)
-          val jump = hooked
-            .join(hooked.select(col("id").as("__jid"), col("comp").as("__jc")),
-                  col("comp") === col("__jid"), "left")
-            .select(col("id"), coalesce(col("__jc"), col("comp")).as("comp"))
-          val (jumped, (_, s)) = Checkpoints.cutEval(jump, round = true)(labelStats)
-          hooked.uncut()
-          (jumped, s)
-        }
+        .select(und("a").as("id"), lit(null).cast(labelType).as("own"), col("comp"))
+      // Per node: its own label and the smallest label in reach.
+      val reach = labels.select(col("id"), col("comp").as("own"), col("comp"))
+        .union(pulled)
+        .groupBy("id").agg(max(col("own")).as("own"), min(col("comp")).as("comp"))
+      // K(r) over a window keyed by label r: the class minimum (each
+      // member's row) and r's own label (r's row, with no member id);
+      // each member then takes its class's K, so labels ⋈ K costs one
+      // shuffle. Both rows come from one pass over `reach`: a union of
+      // two projections would compute it twice.
+      val keyed = reach.select(inline(array(
+        struct(col("own").as("__r"), col("comp"), col("id")),
+        struct(col("id").as("__r"), col("own").as("comp"), lit(null).cast(labelType).as("id")))))
+      val (next, (_, nextSum)) = Checkpoints.cutEval(
+        keyed.select(col("id"), min(col("comp")).over(Window.partitionBy("__r")).as("comp"))
+          .filter(col("id").isNotNull),
+        round = true)(labelStats)
       // The old round's labels are fully consumed into `next` (the
       // counted cut's action just materialized it): free them, or
       // live storage grows as rounds × |nodes| — the round-10 graded
@@ -311,24 +322,20 @@ object Graph {
       // remaining round count).
       labels.uncut()
       labels = next
-      if (nextSum.compareTo(prevSum) == 0) done = true
-      else { prevSum = nextSum; iter += 1 }
-    }
-    if (!done) {
-      val msg = s"connectedComponents stopped at maxIter = $maxIter before " +
-        "convergence — labels are incomplete (a component with diameter > " +
-        "maxIter); raise maxIter"
-      if (strict) {
-        // Strict path returns nothing: free the live cuts too.
-        und.uncut(); labels.uncut()
-        throw new IllegalStateException(msg)
-      } else log.warn(msg)
+      done = nextSum.compareTo(prevSum) == 0
+      prevSum = nextSum
     }
     // The result references only the final labels cut — the mirrored
     // edge set is done.
     und.uncut()
     labels
   }
+
+  /** [[connectedComponents]] for callers that still pass the removed
+    * `strict` flag, which is ignored: every call runs to the fixpoint. */
+  @deprecated("connectedComponents always converges; drop `strict`", "0.1.0")
+  def connectedComponents(pairs: DataFrame, strict: Boolean): DataFrame =
+    connectedComponents(pairs)
 
   /** INCREMENTAL connected components — merge a slice's new pairs
     * into an EXISTING (id, comp) assignment without touching the old
@@ -347,11 +354,10 @@ object Graph {
     * REPRESENTATIVE space:
     *
     *   1. one action collects the slice's distinct non-self pairs;
-    *   2. one scan of the assignment collects the rows of their
-    *      endpoints, probed against the endpoint set as a local frame
-    *      (a broadcast build with exact statistics — the assignment is
-    *      scanned, never shuffled); an absent endpoint is its own
-    *      representative;
+    *   2. one scan of the assignment, filtered to the endpoint set (an
+    *      `isin` list — the assignment is scanned, never shuffled),
+    *      collects the rows of their endpoints; an absent endpoint is
+    *      its own representative;
     *   3. a union-find over the lifted pairs, keeping the min id as
     *      each set's root: since every old label is its component's
     *      min id, the root IS the merged component's global min id.
@@ -364,11 +370,11 @@ object Graph {
     * and the caller upserts (anti-join + union, a31's apply shape):
     * upsert(assignment, delta) ≡ full recompute over old ∪ new pairs
     * (pinned in GraphSpec against randomized graphs). Work per cycle
-    * is at most three broadcast-probe scans of the assignment (two
-    * here, one when the delta is read, skipped when the slice merges
-    * no old components) — nothing proportional to the OLD pair
-    * set, which is exactly what a 100 TB corpus cannot afford to
-    * replay per ingest cycle. There are no rounds, so a merge chain
+    * is at most three scans of the assignment (two filtered scans
+    * here, and one broadcast probe when the delta is read, skipped
+    * when the slice merges no old components) — nothing proportional
+    * to the OLD pair set, which is exactly what a 100 TB corpus cannot
+    * afford to replay per ingest cycle. There are no rounds, so a merge chain
     * of any length costs the same jobs, and no cut outlives the call.
     *
     * The min-id precondition is validated on every call, because the
@@ -376,8 +382,8 @@ object Graph {
     * [[graft.sinks.ModelStore]] load) and a non-canonical one merges
     * WRONG silently — a new id can collide with a non-min label and
     * relabel an untouched component. Every touched row must carry a
-    * non-null comp ≤ id, and a second scan of the assignment (the
-    * touched labels as the local probe) checks that every touched
+    * non-null comp ≤ id, and a second scan of the assignment (filtered
+    * to the touched labels) checks that every touched
     * label labels itself; a violation throws
     * `IllegalArgumentException`. Ids must be integral (byte, short,
     * int or long), or `IllegalArgumentException` is thrown; the output
@@ -397,7 +403,7 @@ object Graph {
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val longAsg = asLongs(asg, "componentsDelta")
     def rowsOf(ids: Iterable[Long]): Array[Row] =
-      longAsg.join(ids.toSeq.toDF("id"), Seq("id"), "left_semi").collect()
+      longAsg.filter(col("id").isin(ids.toSeq: _*)).collect()
     val touched = rowsOf(nodes)
     require(touched.forall(r => !r.isNullAt(1) && r.getLong(1) <= r.getLong(0)),
       "componentsDelta: the assignment violates the min-id label convention " +
@@ -583,52 +589,29 @@ object Graph {
     * before trusting its DFS walks; this is the audit that finds the
     * offending region at scale).
     *
-    * Iterative SINK PEELING (Kahn's order, run to fixpoint): each
-    * round keeps only edges whose dst still has an outgoing edge —
-    * a node whose every path terminates loses its edges within
-    * longest-acyclic-tail rounds, while an edge on or leading to a
-    * cycle always has a continuation and survives. The fixpoint is
-    * the maximal subgraph with min-out-degree ≥ 1, whose sources are
-    * exactly the nodes with an unbounded (hence cycle-hitting) walk.
-    * Work per round is one semi-join of the remaining edges against
-    * their own src set — ∝ surviving edges, never closure-sized;
-    * convergence is one scalar count per round (a declared driver
-    * action, the [[connectedComponents]] labelSum class); superseded
-    * per-round cuts are freed eagerly ([[Checkpoints.uncut]]).
-    * Returns one `id` column (distinct), empty on a DAG. `maxIter`
-    * bounds rounds = the longest acyclic tail feeding a cycle, with
-    * the family's warn/strict contract.
+    * One job collects the edges as longs; Kahn's sink peel then runs on
+    * the driver over predecessor lists, removing every node whose
+    * successors are all removed. What survives is the maximal subgraph
+    * with min-out-degree ≥ 1, whose nodes are exactly those with an
+    * endless (hence cycle-hitting) walk. Work is linear in the edges;
+    * no rounds, no cuts. Returns one `id` column of distinct ids, with
+    * `src`'s type, as a local frame; empty on a DAG. Ids must be
+    * integral (byte, short, int or long), or an
+    * `IllegalArgumentException` is thrown. A null endpoint matches
+    * nothing: an edge into null ends there, and a null source that
+    * reaches a cycle is reported as a null id.
+    *
+    * PRECONDITION: the edge set fits in the driver (the closure
+    * family's contract; b7 audits the b1–b6 taxonomy).
     */
-  def reachesCycle(edges: DataFrame, maxIter: Int = 50,
-                   strict: Boolean = false): DataFrame = {
-    // Per-round peel frames: DISK_ONLY counted cuts (see
-    // connectedComponents for the level; the convergence count rides
-    // the cut's materializing job, Checkpoints.cutEval).
-    var (e, prevCount) = Checkpoints.cutCount(
-      edges.select(col("src"), col("dst")).distinct(), round = true)
-    var iter = 0
-    var done = prevCount == 0L
-    while (!done && iter < maxIter) {
-      val alive = e.select(col("src").as("dst")).distinct()
-      val (next, n) = Checkpoints.cutCount(
-        e.join(alive, Seq("dst"), "left_semi"), round = true)
-      // Counted cut already materialized `next` — the superseded
-      // round's blocks are dead now, not before.
-      e.uncut()
-      e = next
-      if (n == prevCount) done = true
-      else { prevCount = n; iter += 1 }
-    }
-    if (!done) {
-      val msg = s"reachesCycle stopped at maxIter = $maxIter before the peel " +
-        "converged — the result may still contain purely-terminating nodes " +
-        "(an acyclic tail longer than maxIter); raise maxIter"
-      if (strict) {
-        e.uncut() // nothing returned: the surviving-edge cut dies too
-        throw new IllegalStateException(msg)
-      } else log.warn(msg)
-    }
-    e.select(col("src").as("id")).distinct()
+  def reachesCycle(edges: DataFrame): DataFrame = {
+    val raw = edges.select(col("src"), col("dst"))
+    val rows = asLongs(raw, "reachesCycle").filter(col("dst").isNotNull).collect()
+    val adj = adjacency(rows, 1)
+    val alive = adj.unpeeled.map(v => Row(adj.id(v)))
+    raw.sparkSession
+      .createDataFrame(java.util.Arrays.asList(alive: _*), StructType(Seq(StructField("id", LongType))))
+      .select(col("id").cast(raw.schema("src").dataType))
   }
 
   /** INCREMENTAL revalidation — the members-side consumer of

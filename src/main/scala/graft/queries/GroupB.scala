@@ -338,15 +338,14 @@ object GroupB {
 
     // b7: the DAG/cycle audit (research/subtype/subtypes.ipynb runs
     // networkx is_directed_acyclic_graph + find_cycle on the subclass
-    // graph before trusting DFS walks — the hazard every closure
-    // maxIter guard here cites). Graph.reachesCycle peels sinks to
-    // fixpoint — work ∝ surviving edges per round, NO closure — on
-    // the hierarchy with planted 2- and 3-cycles; the oracle derives
-    // the same node set from the recursive closure's self-reaching
-    // rows (cheap at oracle scale, exactly what the engine must never
-    // build at 100 TB).
+    // graph before trusting DFS walks). Graph.reachesCycle collects
+    // the edges once and peels sinks on the driver — work linear in
+    // the edges, NO closure — on the hierarchy with planted 2- and
+    // 3-cycles; the oracle derives the same node set from the
+    // recursive closure's self-reaching rows (cheap at oracle scale,
+    // exactly what the engine must never build at 100 TB).
     "b7_cycle_reach" -> ((s, d) =>
-      Graph.reachesCycle(cyclicEdges(s, d), strict = true)),
+      Graph.reachesCycle(cyclicEdges(s, d))),
 
     // b8: degree histogram of the same graph (subtypes.ipynb's
     // instance_of_lengths Counter — the capacity-planning shape for

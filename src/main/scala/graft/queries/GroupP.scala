@@ -322,8 +322,7 @@ object GroupP {
           .cut(),
         graft.Timed.region("fit")(
           Graph.connectedComponents(
-            Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5),
-            strict = true)))
+            Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5))))
       // d11 confirm on the maybe sliver only — the clear-bit docs are
       // PROVEN novel, so dropping them cannot lose a pair (the oracle
       // replays the confirm unrestricted; equality proves it). The
@@ -448,8 +447,7 @@ object GroupP {
         s"$root/bloom_bits")
       ModelStore.save(
         Graph.connectedComponents(
-          Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5),
-          strict = true),
+          Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5)),
         s"$root/assignment")
       exSh.uncut()
       val (cent, cb) = Similarity.ivfPqFit(

@@ -343,9 +343,8 @@ object ScaleProbe {
     // fixed dims). Per-copy flip structure is identical because
     // l_partkey/required/valid don't shift.
     // b7's input: the planted-cycle hierarchy, fixed vs K shifted
-    // copies (each copy carries its own cycles — cycle count scales,
-    // acyclic-tail DEPTH does not, so rounds stay ~depth while
-    // per-round work scales on edges: the operator's scale claim).
+    // copies (each copy carries its own cycles, so the edge and cycle
+    // counts scale K×).
     lazy val cyc = graft.queries.GroupB.cyclicEdges(spark, sfDir)
       .localCheckpoint()
     lazy val cycK = scaled(cyc, Seq("src", "dst"))
@@ -510,15 +509,6 @@ object ScaleProbe {
       ("d7 components",
         () => noop(Graph.connectedComponents(pairs)),
         () => noop(Graph.connectedComponents(pairsK))),
-      // The r11 pointer-jumping flag on the same dedup-shaped pairs:
-      // near-clique components converge in 3-4 hook rounds, so the
-      // per-round extra comp-keyed self-join + cut is pure overhead
-      // here — this point documents the trade that keeps the flag
-      // OPT-IN (its win is long-diameter graphs: chain:300 via
-      // StoragePeak runs ~9 rounds vs ~300, 10 s vs 56 s).
-      ("d7 components-star",
-        () => noop(Graph.connectedComponents(pairs, shortcut = true)),
-        () => noop(Graph.connectedComponents(pairsK, shortcut = true))),
       ("d8 canonical-cut",
         () => noop(Dedup.keepCanonical(docs, pairs, "doc_id")),
         () => noop(Dedup.keepCanonical(docsK, pairsK, "doc_id"))),
@@ -789,14 +779,13 @@ object ScaleProbe {
         () => noop(graft.queries.GroupB.revalidateChain(
           targetsB5, coneB5, newEb5, oldVb5K))),
       // b7: K disjoint copies of the planted-cycle hierarchy — K×
-      // edges and K× cycles at the SAME acyclic-tail depth, so the
-      // peel's round count stays ~depth while each round's semi-join
-      // scales on surviving edges. Expected ≈ K or below (per-round
-      // fixed job latency flattens it); super-linear would expose a
-      // round count growing with graph SIZE rather than depth.
+      // edges and K× cycles. One collect job, then a driver peel
+      // linear in the edges: expected ≈ K or below (the job's fixed
+      // latency flattens it); super-linear would expose a peel whose
+      // work outgrows the edge count.
       ("b7 cycle-peel",
-        () => noop(Graph.reachesCycle(cyc, strict = true)),
-        () => noop(Graph.reachesCycle(cycK, strict = true))),
+        () => noop(Graph.reachesCycle(cyc)),
+        () => noop(Graph.reachesCycle(cycK))),
       // a37: K coll-shifted copies of the collapsed member frame —
       // K× collections, identical per-collection rank work. Both
       // row_number windows and the final agg ride ONE exchange on

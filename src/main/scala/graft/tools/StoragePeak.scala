@@ -17,13 +17,10 @@ import org.apache.spark.sql.SparkSession
   * Usage (from sbt):
   *   runMain graft.tools.StoragePeak d16_components_incremental
   * The argument is a registered query name, or `chain:<n>` — a
-  * synthetic n-node path graph through connectedComponents, whose
-  * diameter forces ≈ n/2 propagation rounds: the worst case the
-  * maxIter guard tolerates, where a superseded-block leak would
-  * accumulate rounds × |labels| and show most clearly (registered
-  * dedup queries converge in 3-4 rounds at sf0.1, so their absolute
-  * accumulation is modest on a quiet host — the round-10 anomaly
-  * needed co-tenant pressure on top).
+  * synthetic n-node path graph through connectedComponents, its
+  * longest-diameter input (ids in path order; the label-class rounds
+  * contract it, 11 rounds at n = 300 and 14 at n = 3000), where a
+  * superseded-block leak would accumulate rounds × |labels|.
   * Prints one JSON line: {"query":…,"peak_rdds":…,
   * "peak_mem_bytes":…,"peak_disk_bytes":…,"end_rdds":…,
   * "end_mem_bytes":…,"wall_sec":…}.
@@ -41,20 +38,14 @@ object StoragePeak {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // chain:<n> = plain min-label propagation on an n-node path
-    // (≈ n rounds); chainstar:<n> = the same graph through the
-    // pointer-jumping shortcut flag (≈ log₂ n rounds) — the r11
-    // diameter-contraction comparison point.
     val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      if (name.startsWith("chain:") || name.startsWith("chainstar:")) {
-        val n = name.dropWhile(_ != ':').tail.toInt
-        val star = name.startsWith("chainstar:")
+      if (name.startsWith("chain:")) {
+        val n = name.stripPrefix("chain:").toInt
         (s, _) => {
           import org.apache.spark.sql.functions._
           val pairs = s.range(1, n.toLong)
             .select(col("id").as("id_a"), (col("id") - 1).as("id_b"))
-          graft.operators.Graph.connectedComponents(pairs, maxIter = n,
-            shortcut = star)
+          graft.operators.Graph.connectedComponents(pairs)
         }
       } else graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

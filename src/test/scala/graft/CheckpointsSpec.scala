@@ -55,7 +55,7 @@ class CheckpointsSpec extends GraftSuite {
       "uncut went through RDD.unpersist, which logs the recompute warning")
   }
 
-  test("cutCount materializes the cut and returns the count in one job") {
+  test("cutEval materializes the cut and returns the count in one job") {
     // Count jobs via a listener: the lazy cut + rdd count must submit
     // exactly ONE job (the r16 verdict ask #2 contract — the eager
     // cut + isEmpty pattern it replaces submits two per round).
@@ -70,20 +70,20 @@ class CheckpointsSpec extends GraftSuite {
       // Shuffle-free frame: with AQE every exchange materializes as
       // its own job regardless of cut mode, so the one-job contract
       // is asserted on the cut+count TAIL itself (a plan with N AQE
-      // stage jobs runs N+1 with cutCount vs N+2 with the eager
+      // stage jobs runs N+1 with cutEval vs N+2 with the eager
       // cut + isEmpty pattern it replaces).
       val src = ss.range(1000)
         .select(col("id"), (col("id") % 7).as("k"))
         .filter(col("k") =!= 99)
-      val (c, n) = Checkpoints.cutCount(src)
+      val (c, n) = Checkpoints.cutEval(src)(_.queryExecution.toRdd.count())
       // Settle the async listener bus so the job counter is final.
       SparkInternals.drainListenerBus(ss.sparkContext)
       assert(n === 1000L)
       assert(jobs.get() === 1,
-        s"cutCount must run exactly one job, ran ${jobs.get()}")
+        s"cutEval must run exactly one job, ran ${jobs.get()}")
       // The frame is genuinely cut: plan is an RDD scan (no lineage
       // back to the range) and re-reading it is block-backed.
-      assert(cutRdds(c).nonEmpty, "cutCount result must be a checkpointed LogicalRDD")
+      assert(cutRdds(c).nonEmpty, "cutEval result must be a checkpointed LogicalRDD")
       assert(c.count() === 1000L)
       c.uncut()
     } finally ss.sparkContext.removeSparkListener(l)
@@ -107,12 +107,9 @@ class CheckpointsSpec extends GraftSuite {
     val plain: Seq[(String, DataFrame)] = Seq(
       "cut" -> src.cut(),
       "cutLazy" -> src.cutLazy(),
-      "cutEval" -> Checkpoints.cutEval(src)(_.count())._1,
-      "cutCount" -> Checkpoints.cutCount(src)._1)
+      "cutEval" -> Checkpoints.cutEval(src)(_.count())._1)
     val round: Seq[(String, DataFrame)] = Seq(
-      "cut" -> src.cut(round = true),
-      "cutEval" -> Checkpoints.cutEval(src, round = true)(_.count())._1,
-      "cutCount" -> Checkpoints.cutCount(src, round = true)._1)
+      "cutEval" -> Checkpoints.cutEval(src, round = true)(_.count())._1)
     for ((form, c) <- plain) {
       assert(c.count() === 50L)
       assert(levels(c) === sparkDefault, s"$form must keep Spark's level")
@@ -131,8 +128,7 @@ class CheckpointsSpec extends GraftSuite {
     val forms: Seq[(String, DataFrame => DataFrame)] = Seq(
       "cut" -> (df => Checkpoints.cut(df)),
       "cutLazy" -> (df => Checkpoints.cutLazy(df)),
-      "cutEval" -> (df => Checkpoints.cutEval(df)(_.count())._1),
-      "cutCount" -> (df => Checkpoints.cutCount(df)._1))
+      "cutEval" -> (df => Checkpoints.cutEval(df)(_.count())._1))
     def rows(df: DataFrame) = df.orderBy("id").as[(Long, Long)].collect().toSeq
     val local = forms.map { case (form, f) =>
       val c = f(src)

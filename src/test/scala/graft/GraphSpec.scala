@@ -291,54 +291,65 @@ class GraphSpec extends GraftSuite {
     } finally spark.conf.unset(graft.operators.Checkpoints.confKey)
   }
 
-  test("connectedComponents strict throws when maxIter is too small") {
-    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Graph.connectedComponents(chain, maxIter = 2, strict = true).count()
+  /** Union-find oracle: every endpoint of `edges` mapped to the min id
+    * of its component. */
+  private def minIdComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(v => v -> find(v)).toMap
   }
 
   test("property: connectedComponents matches an in-memory union-find") {
     val rnd = new scala.util.Random(17)
-    for (trial <- 1 to 4) {
-      val n = 30
-      val edges = (1 to 40).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      // Union-find oracle.
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val present = edges.flatMap { case (a, b) => Seq(a, b) }.toSet
-      val want = present.map(v => v -> {
-        // canonical = min node of the component among PRESENT nodes
-        val r = find(v.toInt)
-        present.filter(u => find(u.toInt) == r).min
-      }).toMap
+    val random = (1 to 4).map(_ => (1 to 40).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+      .filter { case (a, b) => a != b })
+    // A chain in shuffled id order: labels must travel both ways.
+    val order = rnd.shuffle((0L until 60L).toList)
+    val chain = order.zip(order.tail)
+    // Hub-skewed: three hubs own most spokes, a few spoke-spoke edges
+    // and one hub-hub bridge join two of the stars.
+    val hubs = (1 to 45).map(i => (Seq(100L, 200L, 300L)(i % 3), 1000L + i)) ++
+      (1 to 8).map(_ => (1000L + 1 + rnd.nextInt(45), 1000L + 1 + rnd.nextInt(45))) :+ (300L, 200L)
+    val graphs = random.zipWithIndex.map { case (e, i) => s"random $i" -> e } ++
+      Seq("shuffled chain" -> chain, "hub-skewed" -> hubs.filter(e => e._1 != e._2))
+    for ((name, edges) <- graphs) {
       val got = Graph.connectedComponents(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
-      assert(got === want, s"trial $trial")
-      // The pointer-jumping variant must land on the IDENTICAL
-      // fixpoint — same min-id labels, just fewer rounds.
-      val gotShortcut = Graph.connectedComponents(
-          edges.toDF("id_a", "id_b"), shortcut = true)
-        .as[(Long, Long)].collect().toMap
-      assert(gotShortcut === want, s"trial $trial (shortcut)")
+      assert(got === minIdComponents(edges), name)
     }
+  }
+
+  test("connectedComponents labels 1000-id chains with the min id in few rounds") {
+    def chain(order: Seq[Long]) = order.zip(order.tail).toDF("id_a", "id_b")
+    def run(order: Seq[Long]): Int = jobs {
+      val got = Graph.connectedComponents(chain(order)).as[(Long, Long)].collect()
+      assert(got.length === order.length && got.forall(_._2 == order.min),
+        s"${got.count(_._2 != order.min)} of ${order.length} ids keep a wrong label")
+    }
+    val small = run(1L to 20L)
+    val inOrder = run(1L to 1000L)
+    val shuffled = run(new scala.util.Random(5).shuffle((1L to 1000L).toList))
+    assert(inOrder <= 2 * small && shuffled <= 2 * small,
+      s"jobs: 20-id chain $small, 1000 ids in order $inOrder, shuffled $shuffled")
   }
 
   test("reachesCycle: empty on DAGs, finds exactly the cycle-reaching set") {
     // A DAG (diamond) peels to nothing.
     val dag = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
-    assert(Graph.reachesCycle(dag, strict = true).count() === 0)
+    assert(Graph.reachesCycle(dag).count() === 0)
     // Tail → cycle → exit: 1 → 2 → 3 → 4 → 2 (cycle {2,3,4}), plus
     // 4 → 5 (an exit edge: 5 is REACHED FROM the cycle but reaches
     // nothing — must not be reported), plus a disconnected DAG edge.
     val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 2L), (4L, 5L), (8L, 9L))
       .toDF("src", "dst")
-    val got = Graph.reachesCycle(g, strict = true).as[Long].collect().toSet
+    val got = Graph.reachesCycle(g).as[Long].collect().toSet
     assert(got === Set(1L, 2L, 3L, 4L))
   }
 
@@ -363,24 +374,30 @@ class GraphSpec extends GraftSuite {
       val onCycle = edges.map(_._1).distinct.filter(v => reach(v).contains(v)).toSet
       val want = edges.map(_._1).distinct
         .filter(v => onCycle.contains(v) || reach(v).exists(onCycle.contains)).toSet
-      val got = Graph.reachesCycle(edges.toDF("src", "dst"), strict = true)
+      val got = Graph.reachesCycle(edges.toDF("src", "dst"))
         .as[Long].collect().toSet
       assert(got === want, s"trial $trial")
     }
+    // Null endpoints match nothing: an edge into null ends there (3 and
+    // the null-only edge go), a null source that reaches the 1 ⇄ 2
+    // cycle is reported once, as a null id.
+    val withNulls = Seq[(Option[Long], Option[Long])]((None, Some(1L)), (Some(1L), Some(2L)),
+      (Some(2L), Some(1L)), (Some(3L), None), (None, Some(5L)), (Some(5L), Some(6L)),
+      (Some(4L), None), (Some(4L), Some(1L)), (None, None)).toDF("src", "dst")
+    assert(Graph.reachesCycle(withNulls).as[Option[Long]].collect().sortBy(_.getOrElse(-1L)).toSeq ===
+      Seq(None, Some(1L), Some(2L), Some(4L)))
   }
 
-  test("shortcut converges in log rounds where plain propagation needs the diameter") {
-    // A 200-link chain: plain min-label propagation moves the min one
-    // hop per round, so maxIter = 12 is nowhere near enough (strict
-    // throws); pointer jumping contracts label depth geometrically
-    // and lands the same answer within those 12 rounds.
-    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Graph.connectedComponents(chain, maxIter = 12, strict = true).count()
+  test("reachesCycle peels a 120-node tail off a 3-cycle in the same jobs as a 10-node one") {
+    // 0 → 1 → 2 → 3 → 1 leads into the cycle; 3 → 100 → … is a tail
+    // that reaches nothing and must be peeled whole.
+    def graph(depth: Int) = (Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 100L)) ++
+      (100L until 100L + depth - 1).map(i => (i, i + 1))).toDF("src", "dst")
+    val counts = for (depth <- Seq(10, 120)) yield jobs {
+      assert(Graph.reachesCycle(graph(depth)).as[Long].collect().toSet === Set(0L, 1L, 2L, 3L),
+        s"tail depth $depth")
     }
-    val got = Graph.connectedComponents(chain, maxIter = 12, strict = true,
-      shortcut = true).as[(Long, Long)].collect()
-    assert(got.length == 200 && got.forall(_._2 == 1L))
+    assert(counts.distinct.length === 1, s"jobs at tail depths 10, 120: $counts")
   }
 
   test("property: componentsDelta upsert ≡ full recompute on random edge splits") {
@@ -478,7 +495,7 @@ class GraphSpec extends GraftSuite {
       val slice = (0L until d.toLong).map(i => (2 * i + 50, 2 * i + 52)).toDF("id_a", "id_b")
       jobs(assert(Graph.componentsDelta(asg, slice).count() === 2L * d))
     }
-    assert(counts.distinct.length === 1 && counts.head <= 8,
+    assert(counts.distinct.length === 1 && counts.head <= 5,
       s"componentsDelta jobs at diameters 1, 8, 30: $counts")
   }
 
