@@ -342,23 +342,43 @@ object Dedup {
   def ngramJaccardAgainst(existing: DataFrame, incoming: DataFrame,
                           idCol: String, textCol: String,
                           n: Int, tau: Double,
-                          dfCap: Long = 0L): DataFrame =
-    ngramJaccardAgainstIndex(shingles(existing, idCol, textCol, n, 0L).cut(),
-      incoming, idCol, textCol, n, tau, dfCap)
+                          dfCap: Long = 0L): DataFrame = {
+    val ex = shingles(existing, idCol, textCol, n, 0L).cut()
+    val inc = shingles(incoming, idCol, textCol, n, 0L)
+    if (dfCap <= 0L) ngramJaccardAgainstIndexes(ex, inc.cut(), tau)
+    else {
+      // Same broadcast-anti-join shape as [[shingles]]'s cut (the
+      // shared [[overCapShingles]], which checkpoints the set — no
+      // second cut here), with one drop set applied to BOTH sides;
+      // the existing sizes re-derive from the capped index.
+      val drop = overCapShingles(ex, dfCap)
+      ngramJaccardAgainstIndexes(ex.join(drop, Seq("shingle"), "left_anti"),
+        inc.join(drop, Seq("shingle"), "left_anti").cut(), tau)
+    }
+  }
 
-  /** [[ngramJaccardAgainst]] with the existing side supplied as an
-    * ALREADY-BUILT (id, shingle) inverted index — the serving form: a
-    * daily pipeline shingles its corpus once, persists the index via
+  /** [[ngramJaccardAgainst]] with BOTH sides supplied as already-built
+    * (id, shingle) frames — the serving form: a daily pipeline
+    * shingles its corpus once, persists the index via
     * [[graft.sinks.ModelStore]], and every later slice confirms
-    * against the RELOADED frame instead of re-shingling the corpus
-    * per cycle (a corpus-linear text pass this variant deletes from
-    * the serving path; p5 runs it). Same body, same output, so full
-    * and serving paths cannot drift — [[ngramJaccardAgainst]] IS this
-    * function applied to a freshly-shingled (and checkpointed)
-    * existing side. The index is consumed as-is: a ModelStore scan is
-    * stats-backed and needs no checkpoint, and cutting the
+    * against the RELOADED frame instead of re-shingling the corpus per
+    * cycle (a corpus-linear text pass this form deletes from the
+    * serving path). The incoming side is shingled once and shared with
+    * its other consumers (the new×new pair stage, the bloom probe):
+    * d16/d19 and p4/p5 feed the same cut slice frame everywhere (guide
+    * §1.2 — the r16 forms re-tokenized the slice once per consumer).
+    * `incShingles` must arrive CUT (it is scanned from several
+    * subplans of one job). The index is consumed as-is: a ModelStore
+    * scan is stats-backed and needs no checkpoint, and cutting the
     * corpus-sized dim here would materialize it into executor storage
-    * per call (the componentsDelta serving-state doctrine).
+    * per call (the componentsDelta serving-state doctrine). No `dfCap`
+    * form — capped calls go through [[ngramJaccardAgainst]], which
+    * owns the two-sided cut.
+    *
+    * The body streams `ex` against the slice-bounded `inc` on the
+    * shingle key, joins the intersection counts to both size frames
+    * and filters on Jaccard; [[ngramJaccardAgainst]] runs it on
+    * freshly shingled sides, so the two paths cannot drift.
     *
     * `exSizes` (optional, (id, n_old)): the existing side's per-doc
     * shingle counts, PRE-AGGREGATED and persisted next to the index.
@@ -367,61 +387,14 @@ object Dedup {
     * serving path (the scan-vs-shuffle line the dim doctrine draws);
     * a serving deployment persists both frames in one fit pass and
     * the per-cycle plan touches the sizes dim only through the
-    * matched-pair join. Only valid with `dfCap = 0` — a cap cut
-    * changes the denominators, so capped calls must re-derive sizes
-    * from the capped index. */
-  def ngramJaccardAgainstIndex(exShingles: DataFrame,
-                               incoming: DataFrame,
-                               idCol: String, textCol: String,
-                               n: Int, tau: Double,
-                               dfCap: Long = 0L,
-                               exSizes: Option[DataFrame] = None): DataFrame = {
-    require(dfCap <= 0L || exSizes.isEmpty,
-      "ngramJaccardAgainstIndex: supplied exSizes are only valid with " +
-        "dfCap = 0 — a cap cut changes every denominator, so capped calls " +
-        "must re-derive sizes from the capped index")
-    val ex0 = exShingles.select(col("id"), col("shingle"))
-    val inc0 = shingles(incoming, idCol, textCol, n, 0L)
-      .select(col("id").as("new_id"), col("shingle"))
-    val (ex, inc) =
-      if (dfCap <= 0L) (ex0, inc0.cut())
-      else {
-        // Same broadcast-anti-join shape as [[shingles]]'s cut (the
-        // shared [[overCapShingles]], which checkpoints the set —
-        // no second cut here), with one drop set applied to BOTH
-        // sides.
-        val drop = overCapShingles(ex0, dfCap)
-        (ex0.join(drop, Seq("shingle"), "left_anti"),
-          inc0.join(drop, Seq("shingle"), "left_anti").cut())
-      }
-    jaccardAgainstCore(ex, inc, tau, exSizes)
-  }
-
-  /** [[ngramJaccardAgainstIndex]] with BOTH sides pre-shingled — the
-    * form composed DAGs use when the incoming side's (id, shingle)
-    * frame is shared with other consumers (the new×new pair stage, the
-    * bloom probe): d16/d19 and p4/p5 shingle the slice ONCE and feed
-    * the same cut frame everywhere (guide §1.2 — the r16 forms
-    * re-tokenized the slice once per consumer). `incShingles` must
-    * arrive CUT (it is scanned from several subplans of one job) with
-    * columns (id, shingle); no `dfCap` form — capped calls go through
-    * [[ngramJaccardAgainstIndex]], which owns the two-sided cut. */
+    * matched-pair join. The sizes must count the index as passed: a
+    * capped index re-derives them (`None`). */
   def ngramJaccardAgainstIndexes(exShingles: DataFrame,
                                  incShingles: DataFrame,
                                  tau: Double,
-                                 exSizes: Option[DataFrame] = None): DataFrame =
-    jaccardAgainstCore(
-      exShingles.select(col("id"), col("shingle")),
-      incShingles.select(col("id").as("new_id"), col("shingle")),
-      tau, exSizes)
-
-  /** The shared bipartite-confirm tail: `ex` (id, shingle) streamed
-    * against the slice-bounded `inc` (new_id, shingle) on the shingle
-    * key, intersection counts joined to both size frames, Jaccard
-    * filter. One definition under every against-variant so the
-    * serving and self-contained paths cannot drift. */
-  private def jaccardAgainstCore(ex: DataFrame, inc: DataFrame, tau: Double,
-                                 exSizes: Option[DataFrame]): DataFrame = {
+                                 exSizes: Option[DataFrame] = None): DataFrame = {
+    val ex = exShingles.select(col("id"), col("shingle"))
+    val inc = incShingles.select(col("id").as("new_id"), col("shingle"))
     val szOld = exSizes
       .map(_.select(col("id"), col("n_old")))
       .getOrElse(ex.groupBy("id").agg(count(lit(1)).as("n_old")))

@@ -204,12 +204,13 @@ object GroupB {
     graft.sinks.ServingStore.isCurrent(key, inputs, version)
   }
 
-  /** b6's registered body, dims injected (the servingChain pattern —
-    * ScaleProbe drives THIS, so the probed plan is the served plan):
-    * fold the slice of new edges into the existing closure and emit
-    * closure ∪ delta. The closure appears only as the streamed side
-    * of broadcast-slice joins inside the delta plus the final union —
-    * the per-cycle serving cost. */
+  /** b6's and b4's registered body, dims injected (the servingChain
+    * pattern — ScaleProbe drives THIS, so the probed plan is the
+    * served plan; b6 injects the reloaded closure, b4 the one it fits
+    * in memory): fold the slice of new edges into the existing
+    * closure and emit closure ∪ delta. The closure appears only as
+    * the streamed side of broadcast-slice joins inside the delta plus
+    * the final union — the per-cycle serving cost. */
   def closureServingOf(closure: DataFrame, newE: DataFrame): DataFrame =
     closure.unionByName(
       Graph.transitiveClosureDelta(closure, newE))
@@ -263,9 +264,7 @@ object GroupB {
       // walks themselves run in the fold's scans.
       val c = graft.Timed.region("fit")(
         Graph.transitiveClosure(all.filter(col("src") % 10 =!= 0)))
-      val delta = Graph.transitiveClosureDelta(c,
-        all.filter(col("src") % 10 === 0))
-      c.unionByName(delta)
+      closureServingOf(c, all.filter(col("src") % 10 === 0))
     }),
 
     // b6: b4's SERVING form — the taxonomy family's p5/d19/e12: the

@@ -16,14 +16,15 @@ import org.apache.spark.sql.functions._
 object GroupD {
   type Q = (SparkSession, String) => DataFrame
 
-  /** d19's registered body, dims injected (the servingChain pattern —
-    * ScaleProbe drives THIS, so the probed plan is the served plan):
-    * slice-confirm against the persisted shingle index (+ its sizes
-    * dim), new×new pairs, the one-pass component merge into the
-    * persisted assignment, then the full upsert emission — the
-    * assignment is only ever scanned (componentsDelta's broadcast
-    * probes + the upsert's anti-join), never shuffled, and the
-    * upsert's output is intrinsically assignment-sized (the
+  /** d19's and d16's registered body, dims injected (the servingChain
+    * pattern — ScaleProbe drives THIS, so the probed plan is the
+    * served plan; d19 injects the persisted dims, d16 the ones
+    * [[GroupP.textDims]] fits in memory): slice-confirm against the
+    * shingle index (+ its sizes dim), new×new pairs, the one-pass
+    * component merge into the assignment, then the full upsert
+    * emission — the assignment is only ever scanned (componentsDelta's
+    * broadcast probes + the upsert's anti-join), never shuffled, and
+    * the upsert's output is intrinsically assignment-sized (the
     * registered contract: emit the whole updated assignment). */
   def componentsServingOf(incoming: DataFrame, exSh: DataFrame,
                           exSizes: DataFrame, asg: DataFrame): DataFrame = {
@@ -209,44 +210,17 @@ object GroupD {
     // by the same SQL that proves d7.
     "d16_components_incremental" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val existing = docs.filter(col("doc_id") % 10 =!= 0)
-      val incoming = docs.filter(col("doc_id") % 10 === 0)
-      // ONE shingle pass per side (r17, guide §1.2): the fit's pair
-      // generation, the slice confirm, and the new×new pair stage all
-      // consume the two cut (id, shingle) frames — the r16 form
-      // tokenized `existing` twice and `incoming` twice because each
-      // Dedup entry point shingled its own input. The corpus index is
-      // part of the amortizable fit (it IS the ex_shingles dim the
-      // serving store persists), hence inside the fit region.
-      // (Overlapping these two side cuts via Par.both was TRIED this
-      // round and measured no better — wall trended worse with cpu
-      // overlapping, the concurrent-tokenize allocation-thrash
-      // mechanism the W3 revert documented — so they stay sequential;
-      // p4's textLeg keeps its overlap because there the gate ∥ CC-fit
-      // pairing wins disjointly.)
-      val exSh = graft.Timed.region("fit")(
-        Dedup.shingles(existing, "doc_id", "text", n = 3).cut())
-      val incSh = Dedup.shingles(incoming, "doc_id", "text", n = 3).cut()
-      // Timed.region("fit"): the self-containment cost — deriving
-      // yesterday's assignment — is EAGER (connectedComponents cuts
-      // per round), so the bench artifact's fit_s column splits this
+      // Timed.region("fit"): the self-containment cost — the corpus
+      // shingle index and yesterday's assignment (connectedComponents
+      // is EAGER) — so the bench artifact's fit_s column splits this
       // query's wall into amortizable fit + per-cycle delta (r14
       // verdict ask #5; a serving deployment pays only the delta —
-      // d19 measures that regime directly).
-      val oldAssign = graft.Timed.region("fit")(
-        Graph.connectedComponents(
-          Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5)))
-      val newPairs = Dedup.ngramJaccardAgainstIndexes(exSh, incSh, tau = 0.5)
-        .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
-        .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
-          .select("id_a", "id_b"))
-      val delta = Graph.componentsDelta(oldAssign, newPairs)
-      // Hinted broadcast on the slice-bounded delta — the d19 upsert's
-      // rationale (the delta's stats-less assignment scan statically
-      // sort-merged the corpus-sized assignment).
-      oldAssign.join(delta.hint("broadcast"), Seq("id"), "left_anti")
-        .unionByName(delta)
-        .select(col("id").as("doc_id"), col("comp").as("component"))
+      // d19 measures that regime directly, on the same body). The
+      // bitmap dim stays lazy and unused here.
+      val (exSh, exSizes, _, asg) = graft.Timed.region("fit")(
+        GroupP.textDims(docs.filter(col("doc_id") % 10 =!= 0)))
+      componentsServingOf(docs.filter(col("doc_id") % 10 === 0),
+        exSh, exSizes, asg)
     }),
 
     // d19: d16's SERVING form — the cluster family's p5: the

@@ -124,14 +124,31 @@ object GroupP {
     // of novelty) → d11's exact confirm on ONLY the maybe-sliver →
     // d16's component merge in representative space → e11's ANN
     // index delta on the paired embeddings. One verdict row per
-    // incoming doc. The oracle replays the confirm UNRESTRICTED (all
-    // incoming docs) — its equality with the sliver-gated Spark plan
-    // IS the bloom no-false-negative guarantee, proven through the
-    // hash gate; components replay as d7's full recursive CTE
-    // restricted to the slice (the d16 equivalence), and cid/codes
-    // replay e11's fit+assign chain.
-    "p4_ingest_pipeline" -> ((s, d) =>
-      ingestPipeline(Tables(s, d, "documents"), Tables(s, d, "embeddings"))),
+    // incoming doc. The body IS p5's servingChain, on dims fitted in
+    // memory instead of reloaded (a registered query must be
+    // self-contained), so the two twins cannot drift. The text dims
+    // and the IVF/PQ fit share no frames (documents vs embeddings)
+    // and both run eager jobs, so they overlap from two driver
+    // threads (guide §2.6); the overlap is p4's fit region, and
+    // fit_s splits its wall into amortizable fit + the per-cycle
+    // chain p5 pays alone. The oracle replays the confirm
+    // UNRESTRICTED (all incoming docs) — its equality with the
+    // sliver-gated Spark plan IS the bloom no-false-negative
+    // guarantee, proven through the hash gate; components replay as
+    // d7's full recursive CTE restricted to the slice (the d16
+    // equivalence), and cid/codes replay e11's fit+assign chain.
+    "p4_ingest_pipeline" -> ((s, d) => {
+      val docs = Tables(s, d, "documents")
+      val emb = Tables(s, d, "embeddings")
+      val ((exSh, exSizes, bits, asg), (cent, cb)) = graft.Timed.region("fit")(
+        graft.operators.Par.both(
+          textDims(docs.filter(col("doc_id") % 10 =!= 0)),
+          Similarity.ivfPqFit(emb.filter(col("vec_id") % 10 =!= 0),
+            "vec_id", "embedding", dim = 64)))
+      servingChain(docs.filter(col("doc_id") % 10 === 0),
+        emb.filter(col("vec_id") % 10 === 0),
+        bits, exSh, exSizes, asg, cent, cb)
+    }),
 
     // p5: p4's SERVING twin — the same DAG on ModelStore-RELOADED
     // dims (fitted once per corpus fingerprint by
@@ -274,117 +291,22 @@ object GroupP {
         expr(s"(n_tokens - 1) DIV ${GroupF2.ChunkStride} + 1").as("n_chunks"))
   }
 
-  /** p4's plan — one definition shared with any probe. Stage order is
-    * the scale contract: the bitmap gate is two corpus-linear passes
-    * and shrinks the confirm join to the maybe sliver; the confirm
-    * join is bipartite (slice × corpus index, never a self-join); the
-    * component merge is one driver pass in representative space
-    * ([[Graph.componentsDelta]]); the vector-side assignment touches
-    * two broadcast dims and the slice. Nothing re-pairs or re-labels
-    * the existing corpus. (The old-corpus assignment and the IVF/PQ
-    * structures are fit here because a registered query must be
-    * self-contained — a serving deployment reloads both via
-    * [[graft.sinks.ModelStore]] instead, the ModelStoreSpec-pinned
-    * path.) */
-  def ingestPipeline(docs: DataFrame, embeddings: DataFrame): DataFrame = {
-    val existing = docs.filter(col("doc_id") % 10 =!= 0)
-    val incoming = docs.filter(col("doc_id") % 10 === 0)
-    // TEXT LEG (r17 restructure, guide §1.2 + §2.6): one shingle pass
-    // per document side, shared by the bloom gate, the sliver
-    // confirm, the fit's pair generation and the new×new pairs — the
-    // r16 form tokenized `existing` three times (bloom bits, confirm
-    // index, fit pairs) and `incoming` three times (bloom probe,
-    // sliver shingles, new-new pairs) because each Dedup entry point
-    // shingled its own input. The corpus index is fit-class work (it
-    // IS the ex_shingles dim p5's store persists), hence in the fit
-    // region. The gate is CUT: it feeds the sliver filter AND the
-    // final verdict join — uncut, the whole bloom pipeline executed
-    // once per consumer (servingChain already cut it; the
-    // self-contained twin now matches).
-    def textLeg(): (DataFrame, DataFrame, DataFrame) = {
-      // The two side cuts share no frames (disjoint doc slices) —
-      // overlap their materialization jobs (guide §2.6, the leg
-      // primitive this DAG already uses for text ∥ vector).
-      val (exSh, incSh) = graft.operators.Par.both(
-        graft.Timed.region("fit")(
-          Dedup.shingles(existing, "doc_id", "text", n = 3).cut()),
-        Dedup.shingles(incoming, "doc_id", "text", n = 3).cut())
-      val bits = Dedup.bloomBits(exSh.select("shingle"), "shingle")
-      // The gate cut and the assignment fit are both EAGER and both
-      // read only already-CUT frames (exSh/incSh stored blocks —
-      // thread-safe per Par's contract), so the gate's single job
-      // back-fills the CC fit's per-round idle cores. The fit is the
-      // longer leg; the gate's consumers (sliver filter, final
-      // verdict join) all sit below both.
-      val (gate, oldAssign) = graft.operators.Par.both(
-        GroupD.bloomGateAgainstShingled(bits, incoming, incSh)
-          .select(col("doc_id"), col("maybe_overlap"))
-          .cut(),
-        graft.Timed.region("fit")(
-          Graph.connectedComponents(
-            Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5))))
-      // d11 confirm on the maybe sliver only — the clear-bit docs are
-      // PROVEN novel, so dropping them cannot lose a pair (the oracle
-      // replays the confirm unrestricted; equality proves it). The
-      // sliver's shingles are the cut slice index semi-probed by the
-      // gate's positive ids — shingles(sliver docs) without a second
-      // tokenize pass.
-      val sliverSh = incSh.join(
-        gate.filter(col("maybe_overlap")).select(col("doc_id").as("id")),
-        Seq("id"), "left_semi")
-      val confirmed = Dedup.ngramJaccardAgainstIndexes(exSh, sliverSh,
-        tau = 0.5)
-      val dupStats = confirmed.groupBy(col("new_id").as("doc_id"))
-        .agg(count(lit(1)).as("n_dup_old"),
-          max(col("jaccard")).as("best_jaccard"))
-      // d16 merge: slice pairs = confirmed cross pairs + new-new pairs.
-      // (oldAssign — the fit-region CC assignment — is derived above,
-      // overlapped with the gate cut; fit_s decomposes p4's wall into
-      // amortizable fit + per-cycle DAG, the d16 pattern.)
-      val newPairs = confirmed
-        .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
-        .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
-          .select("id_a", "id_b"))
-      // Incoming ids are absent from the old assignment by construction,
-      // so their labels live entirely in the delta.
-      val comp = Graph.componentsDelta(oldAssign, newPairs)
-        .filter(col("id") % 10 === 0)
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-      (gate, dupStats, comp)
-    }
-    // VECTOR LEG — e11 index delta: serving structures fit on the
-    // existing vectors, slice assigned with no refit (vec_id aligns
-    // with doc_id). Also fit: the IVF+PQ structures (eager —
-    // normalized corpus cut + unrolled Lloyd/codebook cuts), reloaded
-    // from the store in p5.
-    def vecLeg(): DataFrame = {
-      val (cent, cb) = graft.Timed.region("fit")(
-        Similarity.ivfPqFit(
-          embeddings.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
-          dim = 64))
-      Similarity.ivfPqIndexDelta(
-          embeddings.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
-          cent, cb, m = 8, dim = 64)
-        .select(col("id").as("doc_id"), col("cid"),
-          concat_ws(",", col("codes")).as("codes"))
-    }
-    // The legs share NO frames (documents vs embeddings) and both run
-    // eager fit jobs at construction — overlap them from two driver
-    // threads (guide §2.6; Par's independence contract). fit_s note:
-    // the two fit regions now overlap, so their SUM can exceed the
-    // shot's fit window — read fit_s as total fit-class work, not a
-    // wall segment.
-    val ((gate, dupStats, comp), idx) = graft.operators.Par.both(
-      textLeg(), vecLeg())
-    incoming.select("doc_id")
-      .join(gate, Seq("doc_id"), "left")
-      .join(dupStats, Seq("doc_id"), "left")
-      .join(comp, Seq("doc_id"), "left")
-      .join(idx, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("maybe_overlap"), lit(false)).as("maybe_overlap"),
-        coalesce(col("n_dup_old"), lit(0L)).as("n_dup_old"),
-        col("best_jaccard"), col("component"), col("cid"), col("codes"))
+  /** The ingest DAG's text dims, fitted on the existing corpus: the
+    * cut (id, shingle) index `exSh`, its per-doc sizes (id, n_old),
+    * the bloom bitmap of its shingles and the component assignment
+    * (id, comp). One corpus shingle pass feeds all four (r17, guide
+    * §1.2 — the lazy frame re-ran tokenize→explode→distinct once per
+    * consumer); the sizes and the bitmap stay lazy, the assignment is
+    * eager. One definition for every consumer: p4 and d16 serve on
+    * them in memory, [[fitAndSave]] persists them for p5/d19. The
+    * caller owns `exSh`'s cut. */
+  def textDims(existing: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val exSh = Dedup.shingles(existing, "doc_id", "text", n = 3).cut()
+    (exSh,
+      exSh.groupBy("id").agg(count(lit(1)).as("n_old")),
+      Dedup.bloomBits(exSh.select("shingle"), "shingle"),
+      Graph.connectedComponents(
+        Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5)))
   }
 
   // ---- p5: the ModelStore-backed SERVING form of the ingest DAG ----
@@ -428,43 +350,29 @@ object GroupP {
   }
 
   private def fitAndSave(s: SparkSession, dir: String, root: String): Unit = {
-      val docs = Tables(s, dir, "documents")
-      val existing = docs.filter(col("doc_id") % 10 =!= 0)
-      // One corpus shingle pass feeds all four text dims (r17, guide
-      // §1.2): each ModelStore.save is its own job and the lazy frame
-      // re-ran the tokenize→explode→distinct pipeline per consumer
-      // (index, sizes, bloom bits, assignment pairs). Cut once, free
-      // after the last text save.
-      val exSh = Dedup.shingles(existing, "doc_id", "text", n = 3).cut()
-      ModelStore.save(exSh, s"$root/ex_shingles")
-      // Sizes persisted NEXT TO the index: re-aggregating them per
-      // cycle would be a corpus-sized shuffle in the serving path.
-      ModelStore.save(
-        exSh.groupBy("id").agg(count(lit(1)).as("n_old")),
-        s"$root/ex_sizes")
-      ModelStore.save(
-        Dedup.bloomBits(exSh.select("shingle"), "shingle"),
-        s"$root/bloom_bits")
-      ModelStore.save(
-        Graph.connectedComponents(
-          Dedup.ngramJaccardPairsFromIndex(exSh, tau = 0.5)),
-        s"$root/assignment")
-      exSh.uncut()
-      val (cent, cb) = Similarity.ivfPqFit(
-        Tables(s, dir, "embeddings").filter(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", dim = 64)
-      ModelStore.save(cent, s"$root/centroids")
-      ModelStore.save(cb, s"$root/codebook") // (m, ds) stamp verified by save
-      // The span family's dim (d20/d21 reload it).
-      ModelStore.save(Corpus.gramCounts(existing, "text", n = 3),
-        s"$root/gram_counts")
+    val docs = Tables(s, dir, "documents")
+    val existing = docs.filter(col("doc_id") % 10 =!= 0)
+    val (exSh, exSizes, bits, asg) = textDims(existing)
+    ModelStore.save(exSh, s"$root/ex_shingles")
+    // Sizes persisted NEXT TO the index: re-aggregating them per
+    // cycle would be a corpus-sized shuffle in the serving path.
+    ModelStore.save(exSizes, s"$root/ex_sizes")
+    ModelStore.save(bits, s"$root/bloom_bits")
+    ModelStore.save(asg, s"$root/assignment")
+    exSh.uncut()
+    val (cent, cb) = Similarity.ivfPqFit(
+      Tables(s, dir, "embeddings").filter(col("vec_id") % 10 =!= 0),
+      "vec_id", "embedding", dim = 64)
+    ModelStore.save(cent, s"$root/centroids")
+    ModelStore.save(cb, s"$root/codebook") // (m, ds) stamp verified by save
+    // The span family's dim (d20/d21 reload it).
+    ModelStore.save(Corpus.gramCounts(existing, "text", n = 3),
+      s"$root/gram_counts")
   }
 
-  /** p5's plan: [[ingestPipeline]]'s serving twin — the SAME
-    * gate → sliver-confirm → rep-merge → index-delta chain, run
-    * against the RELOADED dims instead of refitting them, composed
-    * from the same shared stage bodies (bloomGateAgainst /
-    * ngramJaccardAgainstIndex / componentsDelta / ivfPqIndexDelta) so
+  /** p5's plan: p4's serving twin — the SAME [[servingChain]]
+    * (gate → sliver-confirm → rep-merge → index-delta), run against
+    * the RELOADED dims where p4 runs it on dims fitted in memory, so
     * the two paths cannot drift. Its cost IS the per-cycle serving
     * cost: slice shingling + probes against scanned dims — nothing
     * corpus-sized recomputes ([[ensureServingModels]] holds the fits,
@@ -487,24 +395,37 @@ object GroupP {
   }
 
   /** The serving chain itself, dims injected — one definition shared
-    * by the registered p5 (ModelStore-loaded dims) and ScaleProbe
-    * (fixed slice vs K×-scaled dims), so the probed plan cannot
-    * drift from the verified one. Every stage body is the shared one
-    * its full-path sibling runs. */
+    * by p5 (ModelStore-loaded dims), p4 (dims fitted in memory by
+    * [[textDims]] and `ivfPqFit`) and ScaleProbe (fixed slice vs
+    * K×-scaled dims), so the probed plan cannot drift from the
+    * verified one. Stage order is the scale contract: the bitmap gate
+    * shrinks the confirm join to the maybe sliver; the confirm join
+    * is bipartite (slice × corpus index, never a self-join,
+    * [[Dedup.ngramJaccardAgainstIndexes]]); the component merge is one
+    * driver pass in representative space ([[Graph.componentsDelta]]);
+    * the vector-side assignment touches two broadcast dims and the
+    * slice. Nothing re-pairs or re-labels the existing corpus. */
   def servingChain(incoming: DataFrame, sliceEmb: DataFrame,
                    bits: DataFrame, exSh: DataFrame, exSizes: DataFrame,
                    asg: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame = {
-    // TEXT LEG (r17 restructure — the ingestPipeline notes apply):
-    // one slice shingle pass shared by gate probe, sliver confirm and
-    // new×new pairs; the gate cut stays EAGER (r17 A/B: it feeds the
-    // sliver filter AND the final verdict join — two scans that can
-    // land in one job, where a lazy cut double-computes the probe
-    // under the get-or-compute race, see Dedup's matching note).
+    // TEXT LEG (r17 restructure, guide §1.2): one slice shingle pass
+    // shared by gate probe, sliver confirm and new×new pairs (the r16
+    // form tokenized the slice once per consumer, because each Dedup
+    // entry point shingled its own input); the gate cut stays EAGER
+    // (r17 A/B: it feeds the sliver filter AND the final verdict join
+    // — two scans that can land in one job, where a lazy cut
+    // double-computes the probe under the get-or-compute race, see
+    // Dedup's matching note).
     def textLeg(): (DataFrame, DataFrame, DataFrame) = {
       val incSh = Dedup.shingles(incoming, "doc_id", "text", n = 3).cut()
       val gate = GroupD.bloomGateAgainstShingled(bits, incoming, incSh)
         .select(col("doc_id"), col("maybe_overlap"))
         .cut()
+      // d11 confirm on the maybe sliver only — the clear-bit docs are
+      // PROVEN novel, so dropping them cannot lose a pair (the oracle
+      // replays the confirm unrestricted; equality proves it). The
+      // sliver's shingles are the cut slice index semi-probed by the
+      // gate's positive ids — no second tokenize pass.
       val sliverSh = incSh.join(
         gate.filter(col("maybe_overlap")).select(col("doc_id").as("id")),
         Seq("id"), "left_semi")
@@ -517,12 +438,14 @@ object GroupP {
         .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
         .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
           .select("id_a", "id_b"))
+      // Incoming ids are absent from the old assignment by construction,
+      // so their labels live entirely in the delta.
       val comp = Graph.componentsDelta(asg, newPairs)
         .filter(col("id") % 10 === 0)
         .select(col("id").as("doc_id"), col("comp").as("component"))
       (gate, dupStats, comp)
     }
-    // VECTOR LEG: slice assignment against the reloaded dims — eager
+    // VECTOR LEG: slice assignment against the injected dims — eager
     // only in its normalize cut, but its stages still back-fill the
     // text leg's sequential driver round-trips (guide §2.6).
     def vecLeg(): DataFrame =

@@ -224,12 +224,13 @@ class ModelStoreSpec extends GraftSuite {
     sameRows(ModelStore.load(spark, p + ".__prev__"), m1)
   }
 
-  test("p5 (serving, reloaded dims) is value-identical to p4 (self-contained fit)") {
-    // The whole point of the serving registration: the ModelStore
-    // round-trip of ALL five dims must change nothing — the driver
-    // proves it via p4's oracle, this pins the same equality in CI.
-    // ensureServingModels is exercised implicitly (first call fits
-    // and persists, the repeat is a fingerprint no-op).
+  test("serving twins p5, d19, b6 are value-identical to p4, d16, b4") {
+    // The whole point of the serving registrations: the ModelStore
+    // round-trip of every dim must change nothing — the driver proves
+    // it via the shared oracles, this pins the same equality in CI.
+    // ensureServingModels / ensureTaxonomyModels are exercised
+    // implicitly (first call fits and persists, the repeat is a
+    // fingerprint no-op).
     //
     // Compared on MATERIALIZED rows, not a combined exceptAll plan:
     // the two live DAGs are near-identical self-join-style subtrees,
@@ -245,14 +246,21 @@ class ModelStoreSpec extends GraftSuite {
     // values themselves are identical and only the combined reused
     // plan is wrong; the driver always runs queries in isolation, so
     // this cannot touch the gate.
-    def rowsOf(name: String): Seq[Seq[Any]] =
-      graft.queries.GroupP.queries(name)(spark, sfDir)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val p4 = rowsOf("p4_ingest_pipeline")
-    assert(p4.nonEmpty)
-    assert(rowsOf("p5_serving_ingest") == p4)
-    // Idempotence: a second invocation reuses the persisted store
-    // (same fingerprint) and still matches.
-    assert(rowsOf("p5_serving_ingest") == p4)
+    def rowsOf(name: String): Seq[Seq[Any]] = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.orderBy(df.columns.map(col).toSeq: _*)
+        .collect().map(_.toSeq).toSeq
+    }
+    for ((inline, serving) <- Seq(
+        "p4_ingest_pipeline" -> "p5_serving_ingest",
+        "d16_components_incremental" -> "d19_components_serving",
+        "b4_closure_incremental" -> "b6_closure_serving")) {
+      val expected = rowsOf(inline)
+      assert(expected.nonEmpty, inline)
+      assert(rowsOf(serving) == expected, s"$serving differs from $inline")
+      // Idempotence: a second invocation reuses the persisted store
+      // (same fingerprint) and still matches.
+      assert(rowsOf(serving) == expected, s"$serving (store reused) differs from $inline")
+    }
   }
 }

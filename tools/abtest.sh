@@ -1,12 +1,15 @@
 #!/usr/bin/env bash
-# tools/abtest.sh — one-command interleaved-worktree A/B (r13 verdict
-# ask #4: the closure-family adjudication method, packaged).
+# tools/abtest.sh — one-command interleaved A/B against an older
+# commit (r13 verdict ask #4: the closure-family adjudication method,
+# packaged).
 #
 # Usage:
 #   tools/abtest.sh <git-ref> <query-list> [rounds] [sfdir] [reps]
 #     <git-ref>     the OLD code to compare against (built in a
-#                   throwaway worktree; needs a Bench that understands
-#                   SPARK_GRAFT_ONLY/_BENCH_OUT — any ref >= round 5)
+#                   throwaway `git clone --local` under /tmp, so nothing
+#                   is written under this repo's .git; needs a Bench
+#                   that understands SPARK_GRAFT_ONLY/_BENCH_OUT — any
+#                   ref >= round 5)
 #     <query-list>  comma-separated SparkEntry query names (must exist
 #                   on BOTH sides)
 #     [rounds]      interleave depth per side (default 2)
@@ -15,11 +18,13 @@
 #                   (default 1: one shot per query, so neither side's
 #                   own default shot policy decides what is compared)
 #
-# Runs the restricted bench current,ref,current,ref,… — a fresh JVM
+# Runs the restricted bench cur,ref,ref,cur,cur,ref,… — a fresh JVM
 # per run (sbt -batch exits after each), same-day interleaving so host
-# contention phases hit both sides — and merges every run's
-# bench_out.json into tools/abtest_<ref>_<ts>.json with a per-query
-# per-side band summary.
+# contention phases hit both sides, and the side that runs first
+# alternates every round so neither side always runs on the warmer
+# (or colder) host — and merges every run's bench_out.json, in run
+# order, into tools/abtest_<ref>_<ts>.json with a per-query per-side
+# band summary.
 #
 # Reading rule (SURVEY §8 r13, measured): identical code swings ~2×
 # session-to-session on this host with identical peakmem/zero spill.
@@ -46,9 +51,10 @@ TS="$(date +%Y%m%d_%H%M%S)"
 OUT="$REPO/tools/abtest_${SAFE_REF}_${TS}.json"
 TMP="$(mktemp -d /tmp/graft_abtest_runs.XXXXXX)"
 
-cd "$REPO"
-git worktree remove --force "$WT" 2>/dev/null || true
-git worktree add --detach "$WT" "$REF" >/dev/null
+SHA="$(git -C "$REPO" rev-parse --verify "${REF}^{commit}")"
+rm -rf "$WT"
+git clone -q --local --no-checkout "$REPO" "$WT"
+git -C "$WT" checkout -q --detach "$SHA"
 
 echo "[abtest] building both trees (untimed)…"
 (cd "$REPO" && sbt -batch compile >/dev/null 2>&1)
@@ -58,6 +64,7 @@ run_side() { # $1=side $2=dir $3=round-index
   local side="$1" dir="$2" idx="$3"
   local out="$TMP/${side}_${idx}.json"
   echo "[abtest] run ${idx} side ${side}"
+  echo "${side}_${idx}" >> "$TMP/order"
   date +%s > "$TMP/${side}_${idx}.start"
   (cd "$dir" &&
     SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_SF_DIR="$SFDIR" \
@@ -69,47 +76,51 @@ run_side() { # $1=side $2=dir $3=round-index
 }
 
 for i in $(seq 1 "$ROUNDS"); do
-  run_side cur "$REPO" "$i"
-  run_side ref "$WT" "$i"
+  if [ $((i % 2)) -eq 1 ]; then
+    run_side cur "$REPO" "$i"
+    run_side ref "$WT" "$i"
+  else
+    run_side ref "$WT" "$i"
+    run_side cur "$REPO" "$i"
+  fi
 done
 
-python3 - "$OUT" "$REF" "$QUERIES" "$SFDIR" "$TMP" "$ROUNDS" "$REPS" <<'PY'
+python3 - "$OUT" "$REF" "$SHA" "$QUERIES" "$SFDIR" "$TMP" "$ROUNDS" "$REPS" <<'PY'
 import json, os, sys
-out, ref, queries, sfdir, tmp, rounds, reps = sys.argv[1:8]
+out, ref, ref_sha, queries, sfdir, tmp, rounds, reps = sys.argv[1:9]
 qs = [q for q in queries.split(",") if q]
-runs, order = [], []
-for i in range(1, int(rounds) + 1):
-    for side in ("cur", "ref"):
-        tag = f"{side}_{i}"
-        order.append(tag)
-        p = os.path.join(tmp, f"{tag}.json")
-        row = {"side": side, "round": i}
-        try:
-            row["started_epoch"] = int(
-                open(os.path.join(tmp, f"{tag}.start")).read().strip())
-        except OSError:
-            pass
-        try:
-            d = json.load(open(p))
-            row.update(
-                wall={q: d["queries"].get(q) for q in qs},
-                cpu={q: d["cpu"].get(q) for q in qs},
-                run={q: d["run"].get(q) for q in qs},
-                spill_disk={q: d["spill_disk"].get(q) for q in qs},
-                canary={q: d["canary"].get(q) for q in qs},
-                canary_base=d.get("canary_base"),
-                canary_min=d.get("canary_min"),
-                # parallel-kernel bracket (absent from pre-r14 refs):
-                # quiet band 0.031-0.045 s — a run whose serial canary
-                # is quiet but whose canary_par_min dilates was measured
-                # under wide-lane bandwidth contention (stall-inflated
-                # cpu), and its cpu band must not adjudicate alone.
-                canary_par_min=d.get("canary_par_min"),
-                canary_par_max=d.get("canary_par_max"),
-                errors=d.get("errors", []))
-        except (OSError, json.JSONDecodeError, KeyError) as e:
-            row["error"] = f"run artifact unreadable: {e}"
-        runs.append(row)
+runs = []
+order = open(os.path.join(tmp, "order")).read().split()
+for tag in order:
+    side, i = tag.rsplit("_", 1)
+    p = os.path.join(tmp, f"{tag}.json")
+    row = {"side": side, "round": int(i)}
+    try:
+        row["started_epoch"] = int(
+            open(os.path.join(tmp, f"{tag}.start")).read().strip())
+    except OSError:
+        pass
+    try:
+        d = json.load(open(p))
+        row.update(
+            wall={q: d["queries"].get(q) for q in qs},
+            cpu={q: d["cpu"].get(q) for q in qs},
+            run={q: d["run"].get(q) for q in qs},
+            spill_disk={q: d["spill_disk"].get(q) for q in qs},
+            canary={q: d["canary"].get(q) for q in qs},
+            canary_base=d.get("canary_base"),
+            canary_min=d.get("canary_min"),
+            # parallel-kernel bracket (absent from pre-r14 refs):
+            # quiet band 0.031-0.045 s — a run whose serial canary
+            # is quiet but whose canary_par_min dilates was measured
+            # under wide-lane bandwidth contention (stall-inflated
+            # cpu), and its cpu band must not adjudicate alone.
+            canary_par_min=d.get("canary_par_min"),
+            canary_par_max=d.get("canary_par_max"),
+            errors=d.get("errors", []))
+    except (OSError, json.JSONDecodeError, KeyError) as e:
+        row["error"] = f"run artifact unreadable: {e}"
+    runs.append(row)
 
 def band(side, metric, q):
     vals = [r[metric][q] for r in runs
@@ -137,11 +148,14 @@ verdicts = {q: {
 
 json.dump({
     "tool": "abtest.sh",
-    "ref": ref, "queries": qs, "sf": sfdir, "rounds": int(rounds),
+    "ref": ref, "ref_sha": ref_sha, "queries": qs, "sf": sfdir,
+    "rounds": int(rounds),
     "reps": reps,
     "interleave_order": order,
     "method": ("fresh JVM per run (one sbt -batch runMain each), "
-               "same-day interleaving cur,ref,cur,ref…; per-side "
+               "same-day interleaving cur,ref,ref,cur,… (the first "
+               "side alternates per round; interleave_order is the "
+               "order the runs started in); per-side "
                "GRAFT_MODEL_DIR so neither side can rewrite the "
                "other's serving stores; reading rule: identical code "
                "swings ~2x on this host — only DISJOINT wall AND cpu "
@@ -153,5 +167,5 @@ for q in qs:
     print(f"[abtest] {q}: {verdicts[q]['reading']}")
 PY
 
-git worktree remove --force "$WT" 2>/dev/null || true
+rm -rf "$WT"
 echo "[abtest] done"
