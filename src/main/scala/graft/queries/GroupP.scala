@@ -1,12 +1,15 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
 import graft.functions.Text
 import graft.operators.{Collections, Corpus, Dedup, Graph, Sampling, Similarity}
 import graft.operators.Checkpoints.Cuttable
 import graft.sinks.ModelStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Group P — the composed pipeline as ONE oracled query: relation
   * merge → type validation through the subclass cone → per-collection
@@ -145,9 +148,11 @@ object GroupP {
           textDims(docs.filter(col("doc_id") % 10 =!= 0)),
           Similarity.ivfPqFit(emb.filter(col("vec_id") % 10 =!= 0),
             "vec_id", "embedding", dim = 64)))
-      servingChain(docs.filter(col("doc_id") % 10 === 0),
+      val verdict = servingChain(docs.filter(col("doc_id") % 10 === 0),
         emb.filter(col("vec_id") % 10 === 0),
         bits, exSh, exSizes, asg, cent, cb)
+      exSh.uncut() // the verdict is local: nothing reads the index again
+      verdict
     }),
 
     // p5: p4's SERVING twin — the same DAG on ModelStore-RELOADED
@@ -404,66 +409,91 @@ object GroupP {
     * [[Dedup.ngramJaccardAgainstIndexes]]); the component merge is one
     * driver pass in representative space ([[Graph.componentsDelta]]);
     * the vector-side assignment touches two broadcast dims and the
-    * slice. Nothing re-pairs or re-labels the existing corpus. */
+    * slice. Nothing re-pairs or re-labels the existing corpus.
+    *
+    * Every slice-sized result is collected once: the gate rows, the
+    * confirmed (new_id, old_id, jaccard) rows, the new×new pairs, the
+    * slice's component rows and its (cid, codes) rows. The dims are
+    * only ever scanned by those jobs, never collected. The duplicate
+    * counts are a driver fold over the confirmed rows, the component
+    * merge takes the confirmed ∪ new×new pairs as a local frame, and
+    * the verdict — one row per incoming document: doc_id,
+    * maybe_overlap, n_dup_old, best_jaccard, component, cid, codes —
+    * is a local relation. Ids must be integral, as for
+    * [[Graph.componentsDelta]].
+    *
+    * PRECONDITION: the slice's verdict, pairs and index rows fit in the
+    * driver — the class of [[Graph.componentsDelta]]'s precondition.
+    */
   def servingChain(incoming: DataFrame, sliceEmb: DataFrame,
                    bits: DataFrame, exSh: DataFrame, exSizes: DataFrame,
                    asg: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame = {
-    // TEXT LEG (r17 restructure, guide §1.2): one slice shingle pass
-    // shared by gate probe, sliver confirm and new×new pairs (the r16
-    // form tokenized the slice once per consumer, because each Dedup
-    // entry point shingled its own input); the gate cut stays EAGER
-    // (r17 A/B: it feeds the sliver filter AND the final verdict join
-    // — two scans that can land in one job, where a lazy cut
-    // double-computes the probe under the get-or-compute race, see
-    // Dedup's matching note).
-    def textLeg(): (DataFrame, DataFrame, DataFrame) = {
+    val spark = incoming.sparkSession
+    def key(r: Row, i: Int): Long = r.getAs[Number](i).longValue
+    // TEXT LEG: one slice shingle pass shared by the gate probe, the
+    // sliver confirm and the new×new pairs; its cut is freed once the
+    // last of them is collected.
+    def textLeg() = {
       val incSh = Dedup.shingles(incoming, "doc_id", "text", n = 3).cut()
-      val gate = GroupD.bloomGateAgainstShingled(bits, incoming, incSh)
-        .select(col("doc_id"), col("maybe_overlap"))
-        .cut()
-      // d11 confirm on the maybe sliver only — the clear-bit docs are
-      // PROVEN novel, so dropping them cannot lose a pair (the oracle
-      // replays the confirm unrestricted; equality proves it). The
-      // sliver's shingles are the cut slice index semi-probed by the
-      // gate's positive ids — no second tokenize pass.
-      val sliverSh = incSh.join(
-        gate.filter(col("maybe_overlap")).select(col("doc_id").as("id")),
-        Seq("id"), "left_semi")
-      val confirmed = Dedup.ngramJaccardAgainstIndexes(exSh, sliverSh,
-        tau = 0.5, exSizes = Some(exSizes))
-      val dupStats = confirmed.groupBy(col("new_id").as("doc_id"))
-        .agg(count(lit(1)).as("n_dup_old"),
-          max(col("jaccard")).as("best_jaccard"))
-      val newPairs = confirmed
-        .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
-        .unionByName(Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
-          .select("id_a", "id_b"))
-      // Incoming ids are absent from the old assignment by construction,
-      // so their labels live entirely in the delta.
-      val comp = Graph.componentsDelta(asg, newPairs)
-        .filter(col("id") % 10 === 0)
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-      (gate, dupStats, comp)
+      try {
+        val gate = GroupD.bloomGateAgainstShingled(bits, incoming, incSh)
+          .select(col("doc_id"), col("maybe_overlap")).collect()
+        // d11 confirm on the maybe sliver only — the clear-bit docs are
+        // PROVEN novel, so dropping them cannot lose a pair (the oracle
+        // replays the confirm unrestricted; equality proves it).
+        val maybeIds = gate.filter(_.getBoolean(1)).map(_.get(0)).toSeq
+        val confirmedDf = Dedup.ngramJaccardAgainstIndexes(exSh,
+          incSh.filter(col("id").isin(maybeIds: _*)), tau = 0.5, exSizes = Some(exSizes))
+        val newNewDf = Dedup.ngramJaccardPairsFromIndex(incSh, tau = 0.5)
+          .select("id_a", "id_b")
+        val confirmed = confirmedDf.collect()
+        val newNew = newNewDf.collect()
+        val dupStats = confirmed.groupMapReduce(key(_, 0))(r => (1L, r.getDouble(2))) {
+          case ((n1, j1), (n2, j2)) => (n1 + n2, math.max(j1, j2))
+        }
+        // The pairs as one local frame typed as their union, so the
+        // component column has the type the union of pairs gives it.
+        val pairTypes = confirmedDf.select(col("new_id").as("id_a"), col("old_id").as("id_b"))
+          .unionByName(newNewDf).schema
+        val pairs = spark.createDataFrame(
+            (confirmed.toSeq ++ newNew).map(r => Row(key(r, 0), key(r, 1))).asJava,
+            StructType(pairTypes.map(_.copy(dataType = LongType))))
+          .select(pairTypes.map(f => col(f.name).cast(f.dataType)): _*)
+        // Incoming ids are absent from the old assignment by
+        // construction, so their labels live entirely in the delta;
+        // only the slice's own ids are read back.
+        val compDf = Graph.componentsDelta(asg, pairs)
+        val comp = compDf.filter(col("id").isin(gate.map(_.get(0)).toSeq: _*))
+          .collect().map(r => key(r, 0) -> r.get(1)).toMap
+        (gate, dupStats, comp, compDf.schema("comp").dataType)
+      } finally incSh.uncut()
     }
-    // VECTOR LEG: slice assignment against the injected dims — eager
-    // only in its normalize cut, but its stages still back-fill the
-    // text leg's sequential driver round-trips (guide §2.6).
-    def vecLeg(): DataFrame =
-      Similarity.ivfPqIndexDelta(sliceEmb,
+    // VECTOR LEG: slice assignment against the injected dims; its
+    // stages back-fill the text leg's sequential driver round-trips
+    // (guide §2.6).
+    def vecLeg() = {
+      val idxDf = Similarity.ivfPqIndexDelta(sliceEmb,
           "vec_id", "embedding", cent, cb, m = 8, dim = 64)
-        .select(col("id").as("doc_id"), col("cid"),
-          concat_ws(",", col("codes")).as("codes"))
-    val ((gate, dupStats, comp), idx) = graft.operators.Par.both(
-      textLeg(), vecLeg())
-    incoming.select("doc_id")
-      .join(gate, Seq("doc_id"), "left")
-      .join(dupStats, Seq("doc_id"), "left")
-      .join(comp, Seq("doc_id"), "left")
-      .join(idx, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("maybe_overlap"), lit(false)).as("maybe_overlap"),
-        coalesce(col("n_dup_old"), lit(0L)).as("n_dup_old"),
-        col("best_jaccard"), col("component"), col("cid"), col("codes"))
+        .select(col("id"), col("cid"), concat_ws(",", col("codes")).as("codes"))
+      (idxDf.collect().map(r => key(r, 0) -> r).toMap, idxDf.schema("cid").dataType)
+    }
+    val ((gate, dupStats, comp, compType), (idx, cidType)) =
+      graft.operators.Par.both(textLeg(), vecLeg())
+    val verdict = gate.toSeq.map { g =>
+      val id = key(g, 0)
+      val dup = dupStats.get(id)
+      val ix = idx.get(id)
+      Row(g.get(0), g.getBoolean(1), dup.fold(0L)(_._1), dup.map[Any](_._2).orNull,
+        comp.get(id).orNull, ix.map(_.get(1)).orNull, ix.map(_.get(2)).orNull)
+    }
+    spark.createDataFrame(verdict.asJava, StructType(Seq(
+      incoming.schema("doc_id"),
+      StructField("maybe_overlap", BooleanType, nullable = false),
+      StructField("n_dup_old", LongType, nullable = false),
+      StructField("best_jaccard", DoubleType),
+      StructField("component", compType),
+      StructField("cid", cidType),
+      StructField("codes", StringType))))
   }
 
   // p4 composes the PROVEN replays: d7's recursive component CTE

@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * BEFORE execution (AdaptiveSparkPlan isFinalPlan=false) — the static
   * shape: Exchange count, join strategy, PushedFilters/ReadSchema.
   * Queries whose construction runs eager jobs (dfCap cuts, iterative
-  * fits) execute those jobs as a side effect of building the frame;
-  * the dumped plan is the final consumer plan those queries register.
+  * fits, collects to the driver) execute those jobs as a side effect of
+  * building the frame. The dump starts with the final consumer plan the
+  * query registers, then appends every plan construction executed, in
+  * the order they finished ([[ExecutedPlans]]): `== Executed k/n: <action> ==`
+  * sections, each the post-execution formatted plan.
   *
   * SPARK_GRAFT_PLAN_EXEC=1 (r18, closing the r17 verdict's ask #5):
   * EXECUTE each selected query first — the registered frame's own
@@ -63,7 +66,9 @@ object PlanDump {
     val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      val (df, built) = ExecutedPlans.capture(spark) {
+        graft.SparkEntry.queries(n)(spark, sfDir)
+      }
       val qe = df.queryExecution
       if (exec) {
         // Execute THIS QueryExecution (not a separate count/write
@@ -75,8 +80,11 @@ object PlanDump {
         qe.toRdd.count()
         spark.sparkContext.setJobDescription(null)
       }
-      val plan = qe.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      def formatted(q: org.apache.spark.sql.execution.QueryExecution) =
+        q.explainString(org.apache.spark.sql.execution.FormattedMode)
+      val plan = (formatted(qe) +: built.zipWithIndex.map { case ((action, q), i) =>
+        s"== Executed ${i + 1}/${built.size}: $action ==\n${formatted(q)}"
+      }).mkString("\n")
       val p = java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt")
       java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       println(s"[plandump] wrote $p (${plan.length} chars)")

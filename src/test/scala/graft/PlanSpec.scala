@@ -3,9 +3,10 @@ package graft
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 
 /** Physical-plan assertions for representative queries — the scale
@@ -189,50 +190,67 @@ class PlanSpec extends GraftSuite {
     assertBroadcastOnly(qe.executedPlan, "componentsDelta must never shuffle the assignment")
   }
 
+  /** Every node that ran in the queries `body` executed, each captured
+    * plan walked as [[executedNodes]] walks one. */
+  private def nodesRunBy(body: => Any): Seq[SparkPlan] =
+    graft.tools.ExecutedPlans.capture(spark)(body)._2
+      .flatMap { case (_, qe) => executedNodes(qe.executedPlan) }
+
+  /** The serving chain's shape, over the queries it runs: its verdict is
+    * a local relation, so the joins live in the slice-sized collects
+    * that build it. The IVF centroid dim rides e11's broadcast nested
+    * loop, the dims are probed by hash joins, and nothing degenerates
+    * to a cartesian product. */
+  private def assertServingShape(nodes: Seq[SparkPlan]): Unit = {
+    val shown = nodes.map(_.nodeName).distinct.sorted.mkString(", ")
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), shown)
+    assert(nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      s"centroid assignment must broadcast the centroid dim\n$shown")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), shown)
+  }
+
   test("p4: ingest composition broadcasts its dims, never a cartesian product") {
-    // The composed daily plan inherits every part's shape: the IVF
-    // centroid dim rides e11's broadcast nested loop, the per-doc
-    // verdict joins are hash joins, and nothing degenerates to a
-    // cartesian product.
-    val q = SparkEntry.queries("p4_ingest_pipeline")(spark, sfDir)
-    val qe = q.queryExecution
-    // Execute and assert on the FINAL adaptive plan (the d16/b4
-    // discipline) — the unexecuted initial plan can differ from what
-    // AQE actually runs.
-    qe.executedPlan.execute().count()
-    val p = qe.executedPlan
-    assert(!ran[CartesianProductExec](p), p)
-    // The walk reaches the BNLJ (the p5 test's rationale): at the tiny
-    // test SF, AQE's stage layout can print the centroid subtree behind
-    // a reused query-stage reference, dropping the literal from the
-    // final-plan section while the join still executes.
-    assert(ran[BroadcastNestedLoopJoinExec](p),
-      s"centroid assignment must broadcast the centroid dim\n$p")
-    assert(ran[BroadcastHashJoinExec](p), p)
+    // p4's dims, fitted in memory as p4 fits them; only the queries
+    // the chain runs on them are captured (the fits have their own
+    // broadcast nested loops, which would satisfy the pin vacuously).
+    import org.apache.spark.sql.functions.col
+    val docs = Tables(spark, sfDir, "documents")
+    val emb = Tables(spark, sfDir, "embeddings")
+    val (exSh, exSizes, bits, asg) =
+      graft.queries.GroupP.textDims(docs.filter(col("doc_id") % 10 =!= 0))
+    val (cent, cb) = graft.operators.Similarity.ivfPqFit(
+      emb.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding", dim = 64)
+    try assertServingShape(nodesRunBy(graft.queries.GroupP.servingChain(
+      docs.filter(col("doc_id") % 10 === 0), emb.filter(col("vec_id") % 10 === 0),
+      bits, exSh, exSizes, asg, cent, cb)))
+    finally graft.operators.Checkpoints.uncut(exSh)
   }
 
   test("p5: the serving plan broadcasts its dims, no cartesian, confirm never shuffles the index by id") {
-    // The serving DAG inherits every part's shape on RELOADED dims:
-    // centroid assignment rides e11's broadcast nested loop, the
-    // verdict joins are hash joins, nothing degenerates to a
-    // cartesian — and the persisted-sizes path means no corpus-sized
-    // aggregation re-derives n_old per cycle (the sizes dim joins on
-    // matched old ids only).
-    val q = SparkEntry.queries("p5_serving_ingest")(spark, sfDir)
-    val qe = q.queryExecution
-    qe.executedPlan.execute().count()
-    val p = qe.executedPlan
-    assert(!ran[CartesianProductExec](p), p)
-    // The BNLJ is probed by walking the executed tree, not the final-
-    // plan SECTION of the string: after the r18 broadcast hints, AQE's
-    // stage layout at the tiny test SF prints the vector leg's centroid
-    // subtree behind a reused query-stage reference, dropping the
-    // literal from that section while the join itself still executes
-    // (it stays visible in the sf0.1 executed dumps,
-    // plans/r18/p5_*_executed_after.txt).
-    assert(ran[BroadcastNestedLoopJoinExec](p),
-      s"centroid assignment must broadcast the centroid dim\n$p")
-    assert(ran[BroadcastHashJoinExec](p), p)
+    // The serving DAG inherits every part's shape on RELOADED dims —
+    // and the persisted-sizes path means no corpus-sized aggregation
+    // re-derives n_old per cycle: the index is read only by the
+    // confirm join on the shingle, so no exchange hash-partitions on
+    // the index's id with the ex_shingles scan below it. The store is
+    // fitted first, outside the capture.
+    graft.queries.GroupP.ensureServingModels(spark, sfDir)
+    val nodes = nodesRunBy(SparkEntry.queries("p5_serving_ingest")(spark, sfDir))
+    assertServingShape(nodes)
+    def indexScan(n: SparkPlan): Boolean = n match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("ex_shingles"))
+      case _ => false
+    }
+    assert(nodes.exists(indexScan), "the confirm must scan the ex_shingles index")
+    val byId = nodes.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name)).toSet
+              .subsetOf(Set("id", "old_id"))
+          case _ => false
+        }) && executedNodes(e).exists(indexScan) => e
+    }
+    assert(byId.isEmpty, s"the index went through an exchange on its id\n${byId.mkString("\n")}")
   }
 
   test("d17: the gram dim is streamed under broadcast joins, never shuffled") {
